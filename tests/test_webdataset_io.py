@@ -18,8 +18,10 @@ from pyspark.sql import functions as F
 from video_data_pipeline_spark.sinks.webdataset import write_webdataset
 from video_data_pipeline_spark.sources.shardlists import expand_urls
 from video_data_pipeline_spark.sources.webdataset import (
+    SAMPLE_SCHEMA,
     decode_columns,
     iter_tar_samples,
+    map_shards,
     read_webdataset,
 )
 
@@ -97,6 +99,62 @@ def test_rename_files(spark, tmp_path):
     back = read_webdataset(spark, out, rename_files="label=cls")
     keys = back.select(F.explode(F.map_keys("sample")).alias("k")).distinct().collect()
     assert "label" in {r.k for r in keys} and "cls" not in {r.k for r in keys}
+
+
+def test_scan_contract_one_partition_per_shard(spark, tmp_path):
+    """The batch scan is one partition per shard, ``__member_idx__`` runs
+    0..n-1 in tar order within each shard, and no shards give an empty
+    frame with the sample schema."""
+    out = str(tmp_path / "contract")
+    write_webdataset(
+        _sample_df(spark).repartition(1).sortWithinPartitions("__key__"),
+        out,
+        sample_col=None,
+        maxcount=4,
+    ).collect()
+    tars = sorted(glob.glob(out + "/*.tar"))
+    assert len(tars) == 3
+
+    df = read_webdataset(spark, out)
+    assert df.rdd.getNumPartitions() == 3
+    rows = df.select(
+        F.spark_partition_id().alias("pid"), "__url__", "__key__", "__member_idx__"
+    ).collect()
+    assert len({(r.pid, r["__url__"]) for r in rows}) == len({r.pid for r in rows}) == 3
+    for path in tars:
+        with tarfile.open(path) as tar:
+            in_tar = list(dict.fromkeys(n.split(".")[0] for n in tar.getnames()))
+        mine = sorted((r for r in rows if r["__url__"] == path), key=lambda r: r["__member_idx__"])
+        assert [r["__key__"] for r in mine] == in_tar
+        assert [r["__member_idx__"] for r in mine] == list(range(len(in_tar)))
+
+    empty = read_webdataset(spark, [])
+    assert empty.schema == SAMPLE_SCHEMA
+    assert empty.count() == 0
+
+
+def test_map_shards_runs_per_shard_function(spark, tmp_path):
+    """A plan's own per-shard function runs inside the scan worker, with
+    the scan pushdowns applied first."""
+    out = str(tmp_path / "per_shard")
+    write_webdataset(
+        _sample_df(spark).repartition(1).sortWithinPartitions("__key__"),
+        out,
+        sample_col=None,
+        maxcount=4,
+    ).collect()
+
+    def summary(samples):
+        rows = list(samples)
+        yield rows[0][1], len(rows), ",".join(sorted({s for r in rows for s in r[3]}))
+
+    got = map_shards(
+        spark, out, summary, "url string, n bigint, members string", select_files="*.txt"
+    ).collect()
+    tars = sorted(glob.glob(out + "/*.tar"))
+    assert sorted((r.url, r.n, r.members) for r in got) == [
+        (tars[0], 4, "txt"), (tars[1], 4, "txt"), (tars[2], 2, "txt")
+    ]
 
 
 def test_group_adjacent_and_meta_skip():

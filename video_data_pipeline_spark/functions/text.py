@@ -93,6 +93,11 @@ def merge_packed(records: list[tuple[list[int], list[int]]]) -> tuple[list[int],
     return ids, mask
 
 
+def tokenize_text(text: str | None) -> tuple[list[int], list[int]]:
+    """One sample's text as the gpt turn after an empty human turn."""
+    return tokenize_conversation([("human", ""), ("gpt", text or "")])
+
+
 def tokenize_batch(
     it: Iterator[pd.DataFrame], text_col: str = "text"
 ) -> Iterator[pd.DataFrame]:
@@ -100,7 +105,7 @@ def tokenize_batch(
     for pdf in it:
         ids_col, mask_col = [], []
         for text in pdf[text_col]:
-            ids, mask = tokenize_conversation([("human", ""), ("gpt", text or "")])
+            ids, mask = tokenize_text(text)
             ids_col.append(ids)
             mask_col.append(mask)
         out = pdf.copy()

@@ -7,17 +7,48 @@ budget are skipped (main.py:186-193); the trailing partial bin is dropped
 (main.py:212-215).
 
 This is order-dependent sequential state — the one operator family Catalyst
-can't express relationally (SURVEY.md §7 "What's hard" (2)). Spark-native
-form: ``applyInPandas`` per group, with an explicit intra-group order column
-carried from the scan. Each group's loop is O(rows) Python over an Arrow
-batch; groups pack in parallel across executors. At 100 TB the group is
-"one input shard" (~500 samples), so state stays tiny and skew-free.
+can't express relationally (SURVEY.md §7 "What's hard" (2)). The loop is
+one pure function, :func:`greedy_bins`, with two Spark-native callers: the
+tokenize plan streams it over each shard inside the scan worker
+(``plans/tokenize.py``, no shuffle), and :func:`greedy_bin_pack` applies it
+per group with ``applyInPandas`` and an explicit intra-group order column,
+for frames whose groups are not shards.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterable, Iterator
+from typing import TypeVar
+
 import pandas as pd
 from pyspark.sql import DataFrame
+
+T = TypeVar("T")
+
+
+def greedy_bins(
+    items: Iterable[T], size: Callable[[T], int], budget: int
+) -> Iterator[tuple[int, T]]:
+    """Yield ``(bin_id, item)`` in input order by the reference's greedy
+    loop; bin ids run 0, 1, ... and a bin is closed once an item with a
+    higher id appears.
+
+    An item at or over budget is skipped, never yielded: the reference
+    keeps strictly ``len < budget`` (tokenize/main.py:193 ``< 8000``),
+    matching check_sample's ``len >= 8000`` violation rule. The flush is
+    strict too: a bin reaching exactly ``budget`` would trip the same rule
+    downstream, so the item that would fill it opens the next bin.
+    """
+    acc, bin_id = 0, 0
+    for item in items:
+        n = size(item)
+        if n >= budget:
+            continue
+        if acc + n >= budget:
+            bin_id += 1
+            acc = 0
+        acc += n
+        yield bin_id, item
 
 
 def greedy_bin_pack(
@@ -28,7 +59,7 @@ def greedy_bin_pack(
     bin_col: str = "bin_id",
     drop_partial: bool = True,
 ):
-    """Assign ``bin_col`` per group by the reference's greedy first-fit loop.
+    """Assign ``bin_col`` per group by :func:`greedy_bins`.
 
     Rows at-or-over budget are dropped (reference keeps strictly
     ``len < budget``, main.py:193); with
@@ -38,22 +69,10 @@ def greedy_bin_pack(
 
     def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(order_col, kind="mergesort").reset_index(drop=True)
-        bins, acc, bin_id = [], 0, 0
-        for size in pdf[size_col]:
-            if size >= budget:
-                # strict boundary: the reference keeps only len < budget
-                # (tokenize/main.py:193 `< 8000`), matching check_sample's
-                # `len >= 8000` violation rule — a sample of exactly budget
-                # is skipped, never packed-then-flagged
-                bins.append(-1)
-                continue
-            if acc + size >= budget:
-                # flush is strict too: a merged bin of exactly budget would
-                # trip the same `len >= 8000` check_sample rule downstream
-                bin_id += 1
-                acc = 0
-            acc += size
-            bins.append(bin_id)
+        sizes = pdf[size_col].tolist()
+        bins = [-1] * len(pdf)
+        for bin_id, i in greedy_bins(range(len(pdf)), sizes.__getitem__, budget):
+            bins[i] = bin_id
         pdf[bin_col] = pd.array(bins, dtype="int64")
         out = pdf[pdf[bin_col] >= 0]
         if drop_partial and len(out):

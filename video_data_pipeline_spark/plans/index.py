@@ -4,65 +4,69 @@ Reference shape (index/check_pair.py:28-68): re-scan every tokenized tar,
 assert per-sample invariants, dump a 1% golden sample for human review,
 pickle ``[{url, nsamples}]`` and print the grand total.
 
-Spark shape: scan → invariant filters (declarative, with a violation
-column instead of asserts — the row-level error-policy pattern, SURVEY.md
-§7 (3)) → deterministic 1% golden sample → ``groupBy(url).count()``
-manifest written as Parquet.
+Spark shape: scan → ``from_json`` with a corrupt-record column → the
+invariants as one SQL ``CASE`` (declarative, with a violation column
+instead of asserts — the row-level error-policy pattern, SURVEY.md §7 (3))
+→ deterministic 1% golden sample → ``groupBy(url).count()`` manifest
+written as Parquet. No Python runs besides the scan.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from video_data_pipeline_spark.functions.text import check_sample
+from video_data_pipeline_spark.functions.text import IM_END, IM_PATCH, IM_START, N_PATCHES
 from video_data_pipeline_spark.operators.sampling import rsample
 from video_data_pipeline_spark.sources.webdataset import read_webdataset
 
-
-def _check_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import json
-
-    for pdf in it:
-        violations, n_tokens, n_images = [], [], []
-        for payload in pdf["json_raw"]:
-            try:
-                rec = json.loads(payload)
-                ids = rec.get("input_ids", [])
-                imgs = rec.get("image", [])
-                violations.append(
-                    check_sample(ids, rec.get("loss_mask", []), len(imgs))
-                )
-                n_tokens.append(len(ids))
-                n_images.append(len(imgs))
-            except Exception as e:  # noqa: BLE001 — row-level tolerance
-                violations.append(f"decode error: {e}")
-                n_tokens.append(0)
-                n_images.append(0)
-        out = pdf.copy()
-        out["violation"] = violations
-        out["n_tokens"] = pd.array(n_tokens, dtype="int64")
-        out["n_images"] = pd.array(n_images, dtype="int64")
-        yield out
-
-
-_CHECKED_SCHEMA = (
-    "`__key__` string, `__url__` string, json_raw string, violation string, "
-    "n_tokens bigint, n_images bigint"
+#: the parsed json member; ``_corrupt`` holds the raw text of a record
+#: that does not parse
+_JSON_SCHEMA = (
+    "input_ids array<bigint>, loss_mask array<bigint>, image array<string>, "
+    "_corrupt string"
 )
+_IDS = "coalesce(rec.input_ids, array())"
+_MASK = "coalesce(rec.loss_mask, array())"
+_IMAGES = "coalesce(rec.image, array())"
+
+
+def _count(token: int) -> str:
+    return f"size(filter({_IDS}, t -> t = {token}))"
+
+
+#: ``functions.text.check_sample`` as ONE SQL expression, rule for rule and
+#: message for message; a missing or unparsable json member is a
+#: ``decode error``, and an absent array field counts as empty
+_VIOLATION = f"""CASE
+  WHEN rec IS NULL OR rec._corrupt IS NOT NULL THEN 'decode error'
+  WHEN size({_IDS}) != size({_MASK}) THEN 'len(input_ids) != len(loss_mask)'
+  WHEN size({_IDS}) >= 8000 THEN 'len(input_ids) >= 8000'
+  WHEN {_count(IM_START)} != {_count(IM_END)} THEN 'unbalanced <im_start>/<im_end>'
+  WHEN {_count(IM_PATCH)} != {N_PATCHES} * size({_IMAGES})
+    THEN 'count(<im_patch>) != 256 * n_images'
+END"""
 
 
 def _checked_samples(spark: SparkSession, paths: str | list[str]) -> DataFrame:
-    """Scan → decode json → per-sample invariant check + size metadata.
-    Shared front half of :func:`index_shards` and :func:`sample_index`."""
+    """Scan → parse json → per-sample invariant check + size metadata, all
+    on the JVM. Shared front half of :func:`index_shards` and
+    :func:`sample_index`."""
     raw = read_webdataset(spark, paths)
     decoded = raw.select(
         "__key__", "__url__", F.col("sample")["json"].cast("string").alias("json_raw")
+    ).withColumn(
+        "rec",
+        F.from_json("json_raw", _JSON_SCHEMA, {"columnNameOfCorruptRecord": "_corrupt"}),
     )
-    return decoded.mapInPandas(_check_batch, schema=_CHECKED_SCHEMA)
+    return decoded.selectExpr(
+        "__key__",
+        "__url__",
+        "json_raw",
+        f"{_VIOLATION} AS violation",
+        f"CAST(size({_IDS}) AS BIGINT) AS n_tokens",
+        f"CAST(size({_IMAGES}) AS BIGINT) AS n_images",
+    )
 
 
 def index_shards(

@@ -1,22 +1,30 @@
-"""WebDataset tar shard reader — a Spark 4 Python DataSource.
+"""WebDataset tar shard reader.
 
 The reference scans tar shards with generator chains
 (``tariterators.py:97-246``: ``tar_file_iterator`` → ``tar_file_expander``
-→ ``group_by_keys``). Here the same semantics are a first-class Spark
-datasource: ``spark.read.format("webdataset").load(paths)`` yields one row
-per *sample* with schema
+→ ``group_by_keys``). Here :func:`read_webdataset` yields one row per
+*sample* with schema
 
     __key__ string, __url__ string, __member_idx__ bigint,
     sample map<string, binary>
 
 Design for scale:
-- One input partition per shard file → Spark schedules shards across
+- Batch reads are a JVM-planned shard frame, one row and one partition per
+  shard file (``spark.range(n, numPartitions=n)``), with ONE
+  ``mapInPandas`` that streams each shard. Spark schedules shards across
   executors exactly like the reference's shard striping
   (``split_by_node``/``split_by_worker``, shardlists.py:115-142), but
-  elastically and with retry.
+  elastically and with retry, and planning costs no Python round trips.
+- :func:`map_shards` exposes that per-shard kernel: a plan runs its own
+  per-shard function inside the scan worker, so a shard-local stage
+  (tokenize → pack → merge) is one Python pass with no shuffle.
+  :func:`read_webdataset` is the kernel with an identity function.
+- Streaming reads (:func:`read_webdataset_stream`) are a Spark 4 Python
+  ``DataSourceStreamReader`` (``readStream.format("webdataset")``); both
+  paths share :func:`_read_shard`.
 - Streaming tar read (mode ``r|``) — memory is bounded by one member, not
   one shard, matching the reference's ``stream.members = []`` release
-  (tariterators.py:135).
+  (tariterators.py:135); output leaves the worker in bounded Arrow batches.
 - Member-level pushdown: ``select_files``/``rename_files`` predicates run
   *before* member bytes are materialized (tariterators.py:101-131) — the
   tar-format analog of parquet column pruning.
@@ -31,12 +39,13 @@ from __future__ import annotations
 import fnmatch
 import re
 import tarfile
+from collections.abc import Callable, Iterable, Iterator
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.datasource import (
     DataSource,
-    DataSourceReader,
     DataSourceStreamReader,
     InputPartition,
 )
@@ -139,7 +148,8 @@ def _filters_from_options(select: str | None, rename: str | None):
 
 
 def _read_shard(path: str, select: str | None, rename: str | None, gopen_kw: dict):
-    """One shard → sample tuples; shared by the batch and stream readers.
+    """One shard → sample tuples; shared by :func:`map_shards` and the
+    stream reader.
 
     scheme-dispatch open (gopen.py:316-344 semantics): each executor
     streams its shard straight from file/pipe/http/s3 — the driver never
@@ -161,24 +171,6 @@ def _gopen_kw(options: dict) -> dict:
         for k in ("endpoint_url", "access_key_id", "secret_access_key")
         if options.get(k)
     }
-
-
-class _WebDatasetReader(DataSourceReader):
-    def __init__(self, options: dict):
-        self.paths = expand_paths(options.get("path", ""))
-        self.select = options.get("select_files")
-        self.rename = options.get("rename_files")
-        self.gopen_kw = _gopen_kw(options)
-
-    def partitions(self):
-        return [_ShardPartition(p) for p in self.paths]
-
-    def read(self, partition: _ShardPartition | None):
-        if partition is None:
-            # Spark substitutes a single None partition when partitions()
-            # returns [] (empty shard list) — a legal empty dataset.
-            return
-        yield from _read_shard(partition.path, self.select, self.rename, self.gopen_kw)
 
 
 class _WebDatasetStreamReader(DataSourceStreamReader):
@@ -232,9 +224,10 @@ class _WebDatasetStreamReader(DataSourceStreamReader):
 
 
 class WebDatasetDataSource(DataSource):
-    """``spark.read.format("webdataset")`` — one row per tar sample.
+    """``spark.readStream.format("webdataset")`` — one row per tar sample.
 
-    Options: ``select_files`` (``;``-separated globs kept, scan pushdown),
+    Streaming only: batch reads go through :func:`map_shards`. Options:
+    ``select_files`` (``;``-separated globs kept, scan pushdown),
     ``rename_files`` (``new=old`` suffix rewrites, e.g. ``txt=cls``).
     """
 
@@ -244,9 +237,6 @@ class WebDatasetDataSource(DataSource):
 
     def schema(self) -> StructType:
         return SAMPLE_SCHEMA
-
-    def reader(self, schema: StructType) -> DataSourceReader:
-        return _WebDatasetReader(self.options)
 
     def streamReader(self, schema: StructType) -> "_WebDatasetStreamReader":
         return _WebDatasetStreamReader(self.options)
@@ -293,6 +283,80 @@ def register(spark: SparkSession) -> None:
         _REGISTERED.add(key)
 
 
+#: bounds on one Arrow batch leaving a shard worker: a batch holds a slice
+#: of a shard, never a whole shard
+_BATCH_ROWS = 256
+_BATCH_BYTES = 8 << 20
+
+
+def _payload_bytes(row: tuple) -> int:
+    """Approximate bytes one output row carries: the length of each
+    bytes/str/array value, and the member bytes of a ``sample`` map."""
+    n = 0
+    for v in row:
+        if isinstance(v, dict):
+            n += sum(map(len, v.values()))
+        elif isinstance(v, (bytes, str, list)):
+            n += len(v)
+    return n
+
+
+def _pandas_batches(rows: Iterable[tuple], columns: list[str]) -> Iterator[pd.DataFrame]:
+    buf: list[tuple] = []
+    nbytes = 0
+    for row in rows:
+        buf.append(row)
+        nbytes += _payload_bytes(row)
+        if len(buf) >= _BATCH_ROWS or nbytes >= _BATCH_BYTES:
+            yield pd.DataFrame.from_records(buf, columns=columns)
+            buf, nbytes = [], 0
+    if buf:
+        yield pd.DataFrame.from_records(buf, columns=columns)
+
+
+def map_shards(
+    spark: SparkSession,
+    paths: str | list[str],
+    fn: Callable[[Iterator[tuple]], Iterable[tuple]],
+    schema: StructType | str,
+    select_files: str | None = None,
+    rename_files: str | None = None,
+    **gopen_kw: str | None,
+) -> DataFrame:
+    """Run ``fn`` over every tar shard inside the scan worker.
+
+    The shard frame is planned on the JVM: one row and one partition per
+    expanded path. One ``mapInPandas`` streams each shard's samples, as
+    ``(key, url, member_idx, sample)`` tuples in tar order, through
+    ``fn``, which yields rows of ``schema`` as tuples in field order. Rows
+    leave in bounded Arrow batches (:data:`_BATCH_ROWS` rows or about
+    :data:`_BATCH_BYTES` payload bytes). A per-shard stage (tokenize →
+    pack → merge) thereby runs in one Python pass with no shuffle.
+
+    ``select_files``/``rename_files`` are the scan pushdowns; ``gopen_kw``
+    (``endpoint_url``, ``access_key_id``, ``secret_access_key``) reach
+    :func:`gopen` on the executors."""
+    from video_data_pipeline_spark.session import ensure_shipped
+
+    ensure_shipped(spark)
+    if isinstance(paths, list):
+        paths = ",".join(paths)
+    shards = expand_paths(paths) if paths else []
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    columns = schema.fieldNames()
+    kw = _gopen_kw(gopen_kw)
+
+    def _scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            for i in pdf["id"]:
+                samples = _read_shard(shards[i], select_files, rename_files, kw)
+                yield from _pandas_batches(fn(samples), columns)
+
+    frame = spark.range(0, len(shards), 1, numPartitions=max(len(shards), 1))
+    return frame.mapInPandas(_scan, schema=schema)
+
+
 def read_webdataset(
     spark: SparkSession,
     paths: str | list[str],
@@ -302,27 +366,25 @@ def read_webdataset(
     access_key_id: str | None = None,
     secret_access_key: str | None = None,
 ) -> DataFrame:
-    """Scan tar shards into a sample DataFrame (see module docstring).
+    """Scan tar shards into a sample DataFrame (see module docstring):
+    :func:`map_shards` with an identity per-shard function, so one
+    partition per shard and ``__member_idx__`` 0..n-1 in tar order.
 
     ``paths`` may mix schemes (``file``/``pipe:``/``http(s)``/``s3``);
     ``endpoint_url`` (+ optional explicit keys) targets S3-compatible
     stores (MinIO etc.) — in production omit them and executors use the
     standard boto3 credential chain."""
-    register(spark)
-    if isinstance(paths, list):
-        paths = ",".join(paths)
-    reader = spark.read.format("webdataset").option("path", paths)
-    opts = {
-        "select_files": select_files,
-        "rename_files": rename_files,
-        "endpoint_url": endpoint_url,
-        "access_key_id": access_key_id,
-        "secret_access_key": secret_access_key,
-    }
-    for k, v in opts.items():
-        if v:
-            reader = reader.option(k, v)
-    return reader.load()
+    return map_shards(
+        spark,
+        paths,
+        lambda samples: samples,
+        SAMPLE_SCHEMA,
+        select_files,
+        rename_files,
+        endpoint_url=endpoint_url,
+        access_key_id=access_key_id,
+        secret_access_key=secret_access_key,
+    )
 
 
 def read_webdataset_stream(
