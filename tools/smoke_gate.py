@@ -8,7 +8,12 @@ at *analysis* time — cheap to detect, expensive to miss. This gate:
    (``limit(1).collect()``) — catches physical-schema drift at the scan;
 2. builds EVERY registry query plan and forces full analysis by touching
    ``df.schema`` — catches resolution/type errors without executing;
-3. runs ``__spark_entry__.entry()`` end-to-end with a bounded collect.
+3. runs ``__spark_entry__.entry()`` end-to-end with a bounded collect;
+4. checks that the committed gate artifacts describe this registry;
+5. on Python < 3.13, checks that a reused Python worker's task re-reads
+   no zip directory (``session.gate_zip_invalidation``) — catches a PySpark
+   upgrade that moves the per-task ``invalidate_caches`` call, or workers
+   that stop importing the package.
 
 Analysis is driver-side only, so the whole gate runs in ~1 minute. Run it
 before any end-of-round commit:
@@ -26,6 +31,47 @@ import os
 import sys
 import time
 import traceback
+
+
+def zip_rereads_per_task(spark, tasks: int = 8) -> list[int]:
+    """Zip-directory reads during each task's own ``importlib.invalidate_caches()``,
+    for ``tasks`` tasks on Python workers that one warm-up job of ``2 * tasks``
+    tasks has already used. Each task imports the package, as every task
+    that unpickles a package function does."""
+    from video_data_pipeline_spark.session import ensure_shipped
+
+    ensure_shipped(spark)
+
+    def count_reads(batches):
+        import importlib
+        import zipimport
+
+        import pandas as pd
+
+        import video_data_pipeline_spark  # noqa: F401
+
+        reads = []
+        stock = zipimport._read_directory
+
+        def counted(path):
+            reads.append(path)
+            return stock(path)
+
+        zipimport._read_directory = counted
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = stock
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"reads": [len(reads)]})
+
+    def run(n: int) -> list[int]:
+        df = spark.range(n, numPartitions=n).mapInPandas(count_reads, "reads long")
+        return [r.reads for r in df.collect()]
+
+    run(2 * tasks)
+    return run(tasks)
 
 
 def main() -> int:
@@ -90,6 +136,21 @@ def main() -> int:
     if not stale:
         print("gates OK  (plan audit + full sweep match the registry)")
 
+    # 5. reused Python workers must not re-read zip directories per task
+    if sys.version_info >= (3, 13):
+        print("workers not needed (Python >= 3.13 invalidates zip caches lazily)")
+    else:
+        try:
+            reads = zip_rereads_per_task(spark)
+            ok, detail = not any(reads), f"zip-directory reads per task: {reads}"
+        except Exception:
+            ok, detail = False, traceback.format_exc()
+        if ok:
+            print(f"workers OK  ({len(reads)} reused-worker tasks, no zip re-read)")
+        else:
+            failures.append("zip directories re-read on reused Python workers")
+            print(f"workers FAIL {detail}")
+
     dt = time.time() - t_start
     if failures:
         print(f"\nSMOKE GATE FAILED in {dt:.0f}s — {len(failures)} failure(s):")
@@ -97,7 +158,7 @@ def main() -> int:
             print(f"  - {f}")
         return 1
     print(f"\nSMOKE GATE PASSED in {dt:.0f}s "
-          f"({len(selfcheck.TABLES)} tables, {len(registry)} plans, entry)")
+          f"({len(selfcheck.TABLES)} tables, {len(registry)} plans, entry, workers)")
     return 0
 
 

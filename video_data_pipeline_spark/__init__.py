@@ -25,4 +25,8 @@ Subpackages
 
 __version__ = "0.1.0"
 
-from video_data_pipeline_spark.session import get_spark  # noqa: F401
+from video_data_pipeline_spark.session import gate_zip_invalidation, get_spark  # noqa: F401
+
+# Once per process, in the application and in its Python workers: every
+# worker that unpickles a package function imports this module.
+gate_zip_invalidation()

@@ -11,6 +11,7 @@ instead of Spark's legacy 200.
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import SparkSession
 
@@ -24,8 +25,17 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
 
-    Env overrides: ``SPARK_GRAFT_CPUS`` sets local core count and the default
-    shuffle partition count.
+    Env overrides:
+
+    - ``SPARK_GRAFT_CPUS``: local core count and the default shuffle
+      partition count (default: ``os.cpu_count()``).
+    - ``SPARK_GRAFT_AQE_MIN_PARTITION``: AQE's coalescing floor,
+      ``spark.sql.adaptive.coalescePartitions.minPartitionSize``
+      (default ``256k``).
+    - ``SPARK_DRIVER_MEMORY``: ``spark.driver.memory`` (default ``16g``).
+    - ``SPARK_GRAFT_WAREHOUSE``: ``spark.sql.warehouse.dir`` (default
+      ``/tmp/vdps-warehouse``).
+    - ``SPARK_GRAFT_QUERY_WARNINGS``: the default of ``query_warnings``.
 
     ``query_warnings=True`` (or ``SPARK_GRAFT_QUERY_WARNINGS=1``) attaches
     the session-level warning listener
@@ -108,6 +118,53 @@ def get_spark(
 
         install_query_warnings(spark)
     return spark
+
+
+def gate_zip_invalidation() -> None:
+    """Make ``importlib.invalidate_caches()`` skip zip archives that did not
+    change since this process last read them.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` at the start of
+    every task (``pyspark/worker_util.py::setup_spark_files``). Before
+    CPython 3.13 that makes every ``zipimporter`` re-read its archive's
+    whole central directory: 16-17 of them in a worker (one per subpackage
+    path of ``pyspark.zip``, the py4j zip, the Spark jar and the shipped
+    package zip), 0.15-0.3 s of every task on a reused worker. The gated
+    method re-reads an archive only when its ``(mtime_ns, size, inode)``
+    differs from the last read recorded here, or ``stat`` fails: the
+    freshness rule ``FileFinder`` applies to directories, so a rewritten
+    archive is still picked up. On a skip the instance takes the listing of
+    that last read, so a sibling instance of the same archive never keeps
+    an older one. Idempotent; 3.13 made the stock call lazy, so there it is
+    left alone.
+    """
+    if sys.version_info >= (3, 13):
+        return
+    import zipimport
+
+    stock = zipimport.zipimporter.invalidate_caches
+    if getattr(stock, "_stat_gated", False):
+        return
+    # archive -> (stat key taken before the read, listing it read); one
+    # pair per assignment, so concurrent callers never mix two reads
+    last_read: dict[str, tuple[tuple[int, int, int], dict]] = {}
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+        except OSError:
+            return stock(self)
+        key = (st.st_mtime_ns, st.st_size, st.st_ino)
+        seen = last_read.get(self.archive)
+        if seen is not None and seen[0] == key:
+            self._files = seen[1]
+            return
+        stock(self)
+        last_read[self.archive] = (key, self._files)
+
+    invalidate_caches._stat_gated = True
+    invalidate_caches.__wrapped__ = stock
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
 _SHIPPED: set[int] = set()
