@@ -10,7 +10,8 @@ measured boundary in the error — never a silent 49%-recall answer.
 
 These tests drive a crafted LOW-ENTROPY fixture (perturbed clones of one
 base sentence — every doc lands in the same chunk buckets) through the
-wired pre-flight and pin all three decisions plus the measurement
+shared pre-flight (``calibrate.preflight`` over the simhash chunks and
+combos fronts) and pin all three decisions plus the measurement
 arithmetic fixes (NULL-safe aggregates on degenerate corpora, integer
 pair counts).
 """
@@ -23,17 +24,32 @@ import pytest
 
 from video_data_pipeline_spark.calibrate import (
     CapBoundError,
-    calibrate_simhash,
-    calibrated_simhash_near_pairs,
     measure_front,
+    preflight,
 )
 from video_data_pipeline_spark.queries.dedup import (
     DEFAULT_SIMHASH_MAX_BUCKET_SIZE,
+    chunk_keys,
+    combo_keys,
+    exact_dup_representatives,
+    pigeonhole_front,
     q_simhash_near_pairs,
     simhash_near_pairs_capped,
+    simhash_signatures,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def _simhash_preflight(docs, cap, default=DEFAULT_SIMHASH_MAX_BUCKET_SIZE, **kw):
+    """The registered simhash pre-flight over an in-memory corpus:
+    (plan, the rep-level signature frame the join then consumes)."""
+    sig = simhash_signatures(exact_dup_representatives(docs))
+    fronts = {
+        "chunks": lambda: pigeonhole_front(chunk_keys(sig)),
+        "combos": lambda: pigeonhole_front(combo_keys(sig)),
+    }
+    return preflight("simhash", fronts, cap, default, **kw), sig
 
 @pytest.fixture(scope="module")
 def low_entropy_docs(spark):
@@ -57,7 +73,7 @@ def _rows(df):
 def test_no_bind_keeps_registered_default(spark, low_entropy_docs):
     # with the production cap (2048 >> 40 docs) nothing binds: the plan is
     # the registered default and only the chunks front was measured
-    plan = calibrate_simhash(low_entropy_docs)
+    plan, _ = _simhash_preflight(low_entropy_docs, DEFAULT_SIMHASH_MAX_BUCKET_SIZE)
     assert plan.decision == "default"
     assert plan.geometry == "chunks"
     assert plan.max_bucket_size == DEFAULT_SIMHASH_MAX_BUCKET_SIZE
@@ -69,7 +85,7 @@ def test_bind_within_budget_auto_selects_exact_plan(spark, low_entropy_docs, cap
     # force the bind with a small cap: the pre-flight must announce it and
     # pick an UNCAPPED complete geometry whose workload fits the budget
     with caplog.at_level(logging.WARNING, "video_data_pipeline_spark.calibrate"):
-        plan = calibrate_simhash(low_entropy_docs, default_cap=8, pair_budget=10**6)
+        plan, _ = _simhash_preflight(low_entropy_docs, 8, 8, pair_budget=10**6)
     assert plan.decision == "exact_uncapped"
     assert plan.max_bucket_size is None
     assert plan.stats["chunks"].binds
@@ -87,9 +103,11 @@ def test_calibrated_output_is_oracle_exact_when_cap_would_bind(
     capped = _rows(simhash_near_pairs_capped(low_entropy_docs, max_bucket_size=8))
     exact = _rows(simhash_near_pairs_capped(low_entropy_docs, max_bucket_size=None))
     assert len(capped) < len(exact), "fixture must actually bind the cap"
+    plan, sig = _simhash_preflight(low_entropy_docs, 8, 8, pair_budget=10**6)
     calibrated = _rows(
-        calibrated_simhash_near_pairs(
-            low_entropy_docs, default_cap=8, pair_budget=10**6
+        simhash_near_pairs_capped(
+            low_entropy_docs, max_bucket_size=plan.max_bucket_size,
+            geometry=plan.geometry, signatures=sig,
         )
     )
     assert calibrated == exact
@@ -97,15 +115,17 @@ def test_calibrated_output_is_oracle_exact_when_cap_would_bind(
 
 def test_bind_over_budget_refuses_by_name(spark, low_entropy_docs):
     with pytest.raises(CapBoundError) as ei:
-        calibrate_simhash(low_entropy_docs, default_cap=8, pair_budget=10)
+        _simhash_preflight(low_entropy_docs, 8, 8, pair_budget=10)
     msg = str(ei.value)
     assert "BINDS" in msg
     assert "pair_budget=10" in msg
     assert "max_bucket_size=None" in msg  # the documented escapes are named
     assert "partial recall" in msg
-    # the measurements ride along for artifacts/operators
+    # the measurements ride along for artifacts/operators — every
+    # measured front, not just the first
     assert ei.value.stats["chunks"].oversized > 0
     assert ei.value.stats["chunks"].uncapped_pairs > 10
+    assert ei.value.stats["combos"].uncapped_pairs > 10
 
 
 def test_registered_calibrate_knob_matches_default_on_standard_fixture(spark):
@@ -140,22 +160,28 @@ def test_measure_front_integer_pair_arithmetic(spark):
     assert isinstance(s.uncapped_pairs, int)
 
 
-def test_explicit_uncapped_request_skips_preflight(spark, low_entropy_docs):
+def test_explicit_uncapped_request_skips_preflight(
+    spark, low_entropy_docs, monkeypatch, tmp_path
+):
     # ADVICE r13: calibrate + an EXPLICIT max_bucket_size=None used to map
     # None back to the default cap, so the pre-flight could refuse with
     # advice to "pass max_bucket_size=None" — the thing already passed.
     # Explicit None now means the caller chose the uncapped exact join:
-    # no measurement, no possible refusal, even with a hostile budget.
-    plan = calibrate_simhash(low_entropy_docs, default_cap=None, pair_budget=1)
-    assert plan.decision == "explicit_uncapped"
-    assert plan.max_bucket_size is None
-    assert plan.stats == {}  # nothing was measured
-    exact = _rows(simhash_near_pairs_capped(low_entropy_docs, max_bucket_size=None))
+    # no pre-flight, no measurement, no possible refusal, even with a
+    # hostile budget.
+    from video_data_pipeline_spark import calibrate
+
+    calls = []
+    monkeypatch.setattr(calibrate, "preflight", lambda *a, **kw: calls.append(a))
+    low_entropy_docs.write.parquet(str(tmp_path / "documents.parquet"))
     got = _rows(
-        calibrated_simhash_near_pairs(
-            low_entropy_docs, default_cap=None, pair_budget=1
+        q_simhash_near_pairs(
+            spark, str(tmp_path), max_bucket_size=None, calibrate=True,
+            pair_budget=1,
         )
     )
+    assert calls == []  # nothing was measured
+    exact = _rows(simhash_near_pairs_capped(low_entropy_docs, max_bucket_size=None))
     assert got == exact
 
 

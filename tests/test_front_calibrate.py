@@ -2,12 +2,12 @@
 VERDICT r13 #5): minhash-LSH bands, prefix-filter buckets, containment
 postings.
 
-The simhash family got calibrate= in r13; these fronts have one geometry
-each, so their ladder is calibrate_capped_front: measure (one linear
-groupBy, no pair expansion) → proceed default (cap proven not to bind,
-exact) / proceed uncapped (measured workload fits the budget, exact) /
-refuse by name. A crafted near-clone corpus (rotations: distinct content,
-near-identical shingle sets, hence identical signatures) drives the bind.
+These fronts have one geometry each, so the shared ladder
+(``calibrate.preflight``) measures one front (one linear groupBy, no pair
+expansion) → proceed default (cap proven not to bind, exact) / proceed
+uncapped (measured workload fits the budget, exact) / refuse by name.
+A crafted near-clone corpus (rotations: distinct content, near-identical
+shingle sets, hence identical signatures) drives the bind.
 """
 
 from __future__ import annotations
@@ -17,9 +17,10 @@ from pyspark.sql import functions as F
 
 from video_data_pipeline_spark.calibrate import (
     CapBoundError,
-    calibrate_capped_front,
+    preflight,
 )
 from video_data_pipeline_spark.queries.dedup import (
+    band_front,
     lsh_pairs_from_bands,
     minhash_bands,
     q_minhash_lsh_pairs,
@@ -51,12 +52,20 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _single(name, keys, cap, default=None, **kw):
+    """The one-front ladder over a ready ``key`` frame; ``default``
+    defaults to ``cap`` (the family-default ladder, not an explicit cap)."""
+    return preflight(
+        name, {name: lambda: keys}, cap, cap if default is None else default, **kw
+    )
+
+
 # ---------------------------------------------------------- unit ladder
 
 
 def test_front_plan_default_when_cap_has_headroom(spark):
     keys = spark.createDataFrame([("a",)] * 3 + [("b",)] * 2, "key string")
-    plan = calibrate_capped_front(keys, 64, "toy")
+    plan = _single("toy", keys, 64)
     assert plan.decision == "default"
     assert plan.max_bucket_size == 64
     assert not plan.stats["toy"].binds
@@ -64,7 +73,7 @@ def test_front_plan_default_when_cap_has_headroom(spark):
 
 def test_front_plan_uncapped_within_budget(spark):
     keys = spark.createDataFrame([("hot",)] * 10 + [("b",)] * 2, "key string")
-    plan = calibrate_capped_front(keys, 4, "toy", pair_budget=1000)
+    plan = _single("toy", keys, 4, pair_budget=1000)
     assert plan.decision == "exact_uncapped"
     assert plan.max_bucket_size is None
     assert plan.stats["toy"].binds
@@ -74,8 +83,8 @@ def test_front_plan_uncapped_within_budget(spark):
 def test_front_plan_refuses_over_budget_naming_escapes(spark):
     keys = spark.createDataFrame([("hot",)] * 10, "key string")
     with pytest.raises(CapBoundError) as ei:
-        calibrate_capped_front(
-            keys, 4, "containment_postings", pair_budget=10,
+        _single(
+            "containment_postings", keys, 4, pair_budget=10,
             escape_arg="max_posting_size",
         )
     msg = str(ei.value)
@@ -95,29 +104,15 @@ def test_minhash_calibrated_exact_when_cap_would_bind(spark, near_clone_docs):
     exact = _rows(lsh_pairs_from_bands(bands, max_bucket_size=None))
     assert len(capped) < len(exact), "fixture must actually bind the cap"
     # the pre-flight on the same front must pick the uncapped exact plan
-    from pyspark.sql import functions as F
-
-    plan = calibrate_capped_front(
-        bands.select(F.concat_ws("/", "band_idx", "band_key").alias("key")),
-        8,
-        "minhash_bands",
-        pair_budget=10**6,
-    )
+    plan = _single("minhash_bands", band_front(bands), 8, pair_budget=10**6)
     assert plan.decision == "exact_uncapped"
     assert _rows(lsh_pairs_from_bands(bands, plan.max_bucket_size)) == exact
 
 
 def test_minhash_refusal_on_clone_corpus_tiny_budget(spark, near_clone_docs):
-    from pyspark.sql import functions as F
-
     bands = minhash_bands(exact_dup_representatives(near_clone_docs))
     with pytest.raises(CapBoundError) as ei:
-        calibrate_capped_front(
-            bands.select(F.concat_ws("/", "band_idx", "band_key").alias("key")),
-            8,
-            "minhash_bands",
-            pair_budget=10,
-        )
+        _single("minhash_bands", band_front(bands), 8, pair_budget=10)
     assert "minhash_bands" in str(ei.value)
 
 
@@ -135,21 +130,24 @@ def test_byte_budget_proceeds_where_count_budget_refused(spark):
     # comfortably inside the 128 GiB byte budget
     keys = spark.range(12_650).select(F.lit("hot").alias("key"))
     with pytest.raises(CapBoundError):
-        calibrate_capped_front(keys, 64, "prefix_buckets", pair_budget=50_000_000)
-    plan = calibrate_capped_front(
-        keys, 64, "prefix_buckets", bytes_per_candidate=STAGED_CANDIDATE_BYTES
+        _single("prefix_buckets", keys, 64, pair_budget=50_000_000)
+    plan = _single(
+        "prefix_buckets", keys, 64, bytes_per_candidate=STAGED_CANDIDATE_BYTES
     )
     assert plan.decision == "exact_uncapped"
     assert plan.max_bucket_size is None
     assert "GiB" in plan.reason
 
 
-def test_byte_budget_refuses_over_byte_bound_naming_gib(spark):
+def test_byte_budget_refuses_over_byte_bound_naming_gib(spark, monkeypatch):
+    from video_data_pipeline_spark import calibrate
+
     keys = spark.range(12_650).select(F.lit("hot").alias("key"))
+    one_gib = calibrate.ResolvedByteBudget(1 << 30, 1 << 30, 1, None, "stub 1 GiB")
+    monkeypatch.setattr(calibrate, "resolve_byte_budget", lambda s: one_gib)
     with pytest.raises(CapBoundError) as ei:
-        calibrate_capped_front(
-            keys, 64, "containment_postings",
-            bytes_per_candidate=160, byte_budget=1 << 30,
+        _single(
+            "containment_postings", keys, 64, bytes_per_candidate=160,
             escape_arg="max_posting_size",
         )
     msg = str(ei.value)
@@ -157,18 +155,24 @@ def test_byte_budget_refuses_over_byte_bound_naming_gib(spark):
     assert "max_posting_size=None" in msg
 
 
-def test_cluster_scaled_byte_budget(spark):
+def test_cluster_scaled_byte_budget(spark, monkeypatch):
     # r15 (ROADMAP r16 #3 pulled forward): the 128 GiB byte bound is a
     # single-node constant; declaring N executors scales the refusal
     # boundary with the cluster (the staged filter's shuffle spreads
     # uniformly over executors)
+    from video_data_pipeline_spark import calibrate
     from video_data_pipeline_spark.calibrate import (
         DEFAULT_CANDIDATE_BYTE_BUDGET,
-        cluster_byte_budget,
+        resolve_byte_budget,
     )
 
+    # plenty of disk, so the probe-anchored constant is the per-node bound
+    monkeypatch.setattr(
+        calibrate, "measured_local_headroom_bytes",
+        lambda s=None: (1 << 40, "/tmp"),
+    )
     # local mode: no executor count declared -> the measured single-node bound
-    assert cluster_byte_budget(spark) == DEFAULT_CANDIDATE_BYTE_BUDGET
+    assert resolve_byte_budget(spark).total == DEFAULT_CANDIDATE_BYTE_BUDGET
 
     # executor.instances is a STARTUP conf (Spark refuses runtime set),
     # so the conf-read path is pinned via a stub session
@@ -179,44 +183,42 @@ def test_cluster_scaled_byte_budget(spark):
     class _FakeSpark:
         conf = _FakeConf()
 
-    assert cluster_byte_budget(_FakeSpark()) == 4 * DEFAULT_CANDIDATE_BYTE_BUDGET
+    rb = resolve_byte_budget(_FakeSpark())
+    assert rb.total == 4 * DEFAULT_CANDIDATE_BYTE_BUDGET
+    assert rb.n_executors == 4 and "x 4 executor(s)" in rb.provenance
 
     # and the ladder consults the scaled bound: a 60k-member hot bucket
     # (1.8B candidates x 160 B = 268 GiB) refuses on one node, proceeds
     # inside a 4-node budget (512 GiB)
     keys = spark.range(60_000).select(F.lit("hot").alias("key"))
     with pytest.raises(CapBoundError):
-        calibrate_capped_front(
-            keys, 64, "prefix_buckets", bytes_per_candidate=160
-        )
-    plan = calibrate_capped_front(
-        keys, 64, "prefix_buckets", bytes_per_candidate=160,
-        byte_budget=4 * DEFAULT_CANDIDATE_BYTE_BUDGET,
+        _single("prefix_buckets", keys, 64, bytes_per_candidate=160)
+    monkeypatch.setattr(
+        calibrate, "resolve_byte_budget",
+        lambda s: resolve_byte_budget(_FakeSpark()),
     )
+    plan = _single("prefix_buckets", keys, 64, bytes_per_candidate=160)
     assert plan.decision == "exact_uncapped"
 
 
 def test_registered_verified_families_use_byte_model_by_default(spark, monkeypatch):
     # the registered calibrate branch must run the bytes-weighted decision
-    # (front_plan_from_stats with bytes_per_candidate) when no explicit
-    # pair_budget is given, and the count-budget ladder when one is
+    # (STAGED_CANDIDATE_BYTES, no pair_budget) when no explicit
+    # pair_budget is given, and the count budget when one is
     from video_data_pipeline_spark import calibrate
-    from video_data_pipeline_spark.calibrate import clear_plan_cache
+    from video_data_pipeline_spark.calibrate import (
+        STAGED_CANDIDATE_BYTES,
+        clear_plan_cache,
+    )
 
-    byte_calls, count_calls = [], []
-    real_fps = calibrate.front_plan_from_stats
-    real_ccf = calibrate.calibrate_capped_front
+    calls = []
+    real = calibrate.preflight
 
-    def spy_fps(s, **kw):
-        byte_calls.append(kw)
-        return real_fps(s, **kw)
+    def spy(family, fronts, cap, default, **kw):
+        calls.append((family, kw))
+        return real(family, fronts, cap, default, **kw)
 
-    def spy_ccf(keys, cap, name, **kw):
-        count_calls.append(kw)
-        return real_ccf(keys, cap, name, **kw)
-
-    monkeypatch.setattr(calibrate, "front_plan_from_stats", spy_fps)
-    monkeypatch.setattr(calibrate, "calibrate_capped_front", spy_ccf)
+    monkeypatch.setattr(calibrate, "preflight", spy)
     clear_plan_cache()
     try:
         q_prefix_filter_join(spark, SF_DIR, calibrate=True).count()
@@ -224,15 +226,16 @@ def test_registered_verified_families_use_byte_model_by_default(spark, monkeypat
         q_prefix_filter_join(
             spark, SF_DIR, calibrate=True, pair_budget=10**9
         ).count()
-        # calibrate_capped_front itself delegates to front_plan_from_stats,
-        # so restrict to the byte-model invocations
-        byted = [kw for kw in byte_calls if kw.get("bytes_per_candidate")]
+        assert [f for f, _ in calls] == [
+            "prefix_buckets", "containment_postings", "prefix_buckets"
+        ]
+        byted = [kw for _, kw in calls if kw.get("pair_budget") is None]
         assert len(byted) == 2
-        # the resolved budget's provenance rides the decision (VERDICT r15 #4)
-        assert all("byte budget" in kw.get("budget_note", "") for kw in byted)
-        assert len(count_calls) == 1
-        assert count_calls[0].get("pair_budget") == 10**9
-        assert "bytes_per_candidate" not in count_calls[0]
+        assert all(
+            kw["bytes_per_candidate"] == STAGED_CANDIDATE_BYTES for kw in byted
+        )
+        # an explicit count budget takes over from the byte model
+        assert calls[2][1]["pair_budget"] == 10**9
     finally:
         clear_plan_cache()
 
@@ -353,8 +356,8 @@ def test_small_disk_refuses_where_constant_would_proceed(spark, monkeypatch):
         lambda s=None: (1 << 30, "/small"),  # 1 GiB free -> 8 GiB budget
     )
     with pytest.raises(CapBoundError) as ei:
-        calibrate.calibrate_capped_front(
-            keys, 64, "prefix_buckets",
+        _single(
+            "prefix_buckets", keys, 64,
             bytes_per_candidate=STAGED_CANDIDATE_BYTES,
         )
     msg = str(ei.value)
@@ -364,8 +367,8 @@ def test_small_disk_refuses_where_constant_would_proceed(spark, monkeypatch):
         calibrate, "measured_local_headroom_bytes",
         lambda s=None: (1 << 40, "/tmp"),
     )
-    plan = calibrate.calibrate_capped_front(
-        keys, 64, "prefix_buckets",
+    plan = _single(
+        "prefix_buckets", keys, 64,
         bytes_per_candidate=STAGED_CANDIDATE_BYTES,
     )
     assert plan.decision == "exact_uncapped"
@@ -414,11 +417,10 @@ def test_explicit_uncapped_skips_preflight_all_families(spark):
 # proceed, never refuse the caller back into the escape they already took
 
 
-def test_explicit_cap_plan_measures_and_never_refuses(spark):
-    from video_data_pipeline_spark.calibrate import explicit_cap_plan
-
+def test_explicit_cap_measures_and_never_refuses(spark):
     keys = spark.createDataFrame([("hot",)] * 10 + [("b",)] * 2, "key string")
-    plan = explicit_cap_plan(keys, 4, "toy")
+    # cap 4 under a family default of 64, and a budget that would refuse
+    plan = _single("toy", keys, 4, default=64, pair_budget=1)
     assert plan.decision == "explicit_capped"
     assert plan.max_bucket_size == 4
     s = plan.stats["toy"]
@@ -458,15 +460,11 @@ def test_explicit_cap_terminates_on_binding_corpus(spark, near_clone_docs):
     # the full loop the ADVICE described: refusal names the escape, the
     # caller follows it, the second run must SUCCEED (capped) — before
     # r15 it re-refused (and the decision cache made the loop infinite)
-    from pyspark.sql import functions as F
-
-    from video_data_pipeline_spark.calibrate import explicit_cap_plan
-
     bands = minhash_bands(exact_dup_representatives(near_clone_docs))
-    front = bands.select(F.concat_ws("/", "band_idx", "band_key").alias("key"))
+    front = band_front(bands)
     with pytest.raises(CapBoundError):
-        calibrate_capped_front(front, 8, "minhash_bands", pair_budget=10)
-    plan = explicit_cap_plan(front, 8, "minhash_bands")
+        _single("minhash_bands", front, 8, pair_budget=10)
+    plan = _single("minhash_bands", front, 8, default=64, pair_budget=10)
     assert plan.decision == "explicit_capped"
     capped = _rows(lsh_pairs_from_bands(bands, plan.max_bucket_size))
     assert capped == _rows(lsh_pairs_from_bands(bands, max_bucket_size=8))

@@ -1,10 +1,11 @@
-"""Pre-flight decision cache (r14, VERDICT r13 #8).
+"""Pre-flight measurement cache (r14, VERDICT r13 #8).
 
-A pre-flight's decision depends only on the corpus bytes and the knobs,
-so calibrated queries memoize it by stat-based corpus fingerprint:
-repeat runs on an unchanged table skip the measurement shuffle, a
-rewritten table changes the fingerprint (structural staleness, no TTL),
-and refusals re-raise from the cache without re-measuring.
+A front's measurement depends only on the corpus bytes and the cap, so
+calibrated queries memoize ``{geometry: FrontStats}`` by (family,
+stat-based corpus fingerprint, cap): repeat runs on an unchanged table
+skip the measurement shuffle, a rewritten table changes the fingerprint
+(structural staleness, no TTL), and the decision — refusals included —
+re-derives from the cached measurement without re-measuring.
 """
 
 from __future__ import annotations
@@ -19,6 +20,7 @@ from video_data_pipeline_spark.calibrate import (
     cached_plan,
     clear_plan_cache,
     corpus_fingerprint,
+    preflight,
 )
 from video_data_pipeline_spark.queries.dedup import (
     q_minhash_lsh_pairs,
@@ -39,6 +41,18 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _count_measurements(monkeypatch):
+    calls = {"n": 0}
+    real = calibrate.measure_front
+
+    def counting(keys, cap, name="front"):
+        calls["n"] += 1
+        return real(keys, cap, name)
+
+    monkeypatch.setattr(calibrate, "measure_front", counting)
+    return calls
+
+
 def test_cached_plan_memoizes_and_bypasses_on_none_key():
     calls = {"n": 0}
 
@@ -53,18 +67,35 @@ def test_cached_plan_memoizes_and_bypasses_on_none_key():
     assert calls["n"] == 2
 
 
-def test_cached_plan_reraises_stored_refusal():
-    calls = {"n": 0}
+def _toy_preflight(spark, corpus, fronts, pair_budget):
+    # cap 4 == the family default; a "hot" front (10 members of one key)
+    # binds it with 46 exact pairs, a "narrow" one (5 members) has 10
+    frames = {
+        "hot": spark.createDataFrame(
+            [("hot",)] * 10 + [("b",)] * 2, "key string"
+        ),
+        "narrow": spark.createDataFrame([("x",)] * 5, "key string"),
+    }
+    table = corpus / "documents.parquet"  # fingerprinted: write it once
+    if not table.exists():
+        table.write_bytes(b"corpus")
+    return preflight(
+        "toy", {g: (lambda f=frames[kind]: f) for g, kind in fronts.items()},
+        4, 4, pair_budget=pair_budget, sf_dir=str(corpus),
+    )
 
-    def refuse():
-        calls["n"] += 1
-        raise CapBoundError("no exact plan fits", {})
 
-    with pytest.raises(CapBoundError):
-        cached_plan(("r",), refuse)
-    with pytest.raises(CapBoundError, match="no exact plan"):
-        cached_plan(("r",), refuse)
+def test_cached_plan_reraises_stored_refusal(spark, tmp_path, monkeypatch):
+    # in process, a repeated refusal re-derives from the cached measurement
+    monkeypatch.delenv("SPARK_GRAFT_PLAN_CACHE", raising=False)
+    calls = _count_measurements(monkeypatch)
+    with pytest.raises(CapBoundError, match="pair_budget=10") as first:
+        _toy_preflight(spark, tmp_path, {"wide": "hot"}, 10)
+    with pytest.raises(CapBoundError, match="no exact plan") as again:
+        _toy_preflight(spark, tmp_path, {"wide": "hot"}, 10)
     assert calls["n"] == 1, "a cached refusal must not re-measure"
+    assert str(again.value) == str(first.value)
+    assert again.value.stats == first.value.stats
 
 
 def test_fingerprint_changes_when_table_rewritten(tmp_path):
@@ -102,14 +133,7 @@ def test_fingerprint_sees_nested_part_rewrite(tmp_path):
 
 def test_registered_calibrated_queries_hit_cache_on_repeat(spark, monkeypatch):
     # count actual front measurements through the real query surface
-    calls = {"n": 0}
-    real = calibrate.measure_front
-
-    def counting(keys, cap, name="front"):
-        calls["n"] += 1
-        return real(keys, cap, name)
-
-    monkeypatch.setattr(calibrate, "measure_front", counting)
+    calls = _count_measurements(monkeypatch)
     first = _rows(q_simhash_near_pairs(spark, SF_DIR, calibrate=True))
     n_first = calls["n"]
     assert n_first >= 1
@@ -124,10 +148,45 @@ def test_registered_calibrated_queries_hit_cache_on_repeat(spark, monkeypatch):
     assert calls["n"] == 1
 
 
+def test_registered_refusal_rederives_without_remeasuring(
+    spark, monkeypatch, tmp_path
+):
+    # a calibrated query on a corpus where the default cap binds and no
+    # exact plan fits the budget refuses by name; repeating it re-derives
+    # the refusal from the cached MEASUREMENT — zero measure_front calls —
+    # in this process and, through the sidecar, in a new one
+    from video_data_pipeline_spark.queries.simjoin import q_prefix_filter_join
+
+    monkeypatch.setenv("SPARK_GRAFT_PLAN_CACHE", str(tmp_path / "pc.json"))
+    # 80 rotations of one 100-word sentence: near-identical shingle sets,
+    # so the rarity-prefix buckets hold ~80 > 64 (the default cap) members
+    words = [f"word{i:03d}" for i in range(100)]
+    rows = [(i, " ".join(words[i:] + words[:i])) for i in range(80)]
+    spark.createDataFrame(rows, "doc_id bigint, text string").coalesce(
+        1
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+    corpus = str(tmp_path)
+    calls = _count_measurements(monkeypatch)
+
+    def refused():
+        with pytest.raises(CapBoundError, match="pair_budget=10") as ei:
+            q_prefix_filter_join(spark, corpus, calibrate=True, pair_budget=10)
+        assert ei.value.stats["prefix_buckets"].binds
+        return str(ei.value)
+
+    first = refused()
+    assert calls["n"] == 1
+    assert refused() == first
+    assert calls["n"] == 1, "an in-process repeat must not re-measure"
+    clear_plan_cache()  # a NEW process: memory gone, sidecar stays
+    assert refused() == first
+    assert calls["n"] == 1, "a new process must re-derive from the sidecar"
+
+
 # ----------------------------------- cross-process persistence (r15,
-# VERDICT r14 #2): with $SPARK_GRAFT_PLAN_CACHE set, decisions round-trip
-# a JSON sidecar so a NEW process on the unchanged corpus skips the
-# measurement shuffle; staleness stays structural (fingerprint keys)
+# VERDICT r14 #2): with $SPARK_GRAFT_PLAN_CACHE set, measurements
+# round-trip a JSON sidecar so a NEW process on the unchanged corpus skips
+# the measurement shuffle; staleness stays structural (fingerprint keys)
 
 
 def _toy_stats():
@@ -136,63 +195,75 @@ def _toy_stats():
     return {"toy": FrontStats("toy", 4, 2, 10, 10, 1, 46, 7)}
 
 
-def test_persisted_frontplan_roundtrip_across_processes(tmp_path, monkeypatch):
-    from video_data_pipeline_spark.calibrate import FrontPlan
-
+def test_persisted_frontplan_roundtrip_across_processes(
+    spark, tmp_path, monkeypatch
+):
+    # the plan a new process derives from the persisted measurement is
+    # the one the measuring process derived, including a non-first
+    # geometry choice
     monkeypatch.setenv("SPARK_GRAFT_PLAN_CACHE", str(tmp_path / "pc.json"))
-    clear_plan_cache()
-    key = ("prefix_buckets", ("/corpus", 123, 456), 64, 50_000_000)
-    plan = FrontPlan("exact_uncapped", None, "measured fits budget", _toy_stats())
-    assert cached_plan(key, lambda: plan) is plan
+    (tmp_path / "documents.parquet").write_bytes(b"corpus")  # fingerprinted
+    calls = _count_measurements(monkeypatch)
+    hot = spark.createDataFrame([("hot",)] * 10 + [("b",)] * 2, "key string")
+    narrow = spark.createDataFrame([("x",)] * 5, "key string")
+
+    def run():
+        return preflight(
+            "toy", {"wide": lambda: hot, "narrow": lambda: narrow}, 4, 4,
+            pair_budget=1000, sf_dir=str(tmp_path),
+        )
+
+    plan = run()
+    assert calls["n"] == 2
+    assert plan.decision == "exact_uncapped" and plan.max_bucket_size is None
+    assert plan.geometry == "narrow"  # 10 exact pairs beat the wide 46
     clear_plan_cache()  # simulate a NEW process: memory gone, sidecar stays
-    calls = {"n": 0}
-
-    def recompute():
-        calls["n"] += 1
-        return plan
-
-    got = cached_plan(key, recompute)
-    assert calls["n"] == 0, "persisted decision must skip the measurement"
-    assert got.decision == "exact_uncapped" and got.max_bucket_size is None
-    assert got.stats["toy"].uncapped_pairs == 46
+    got = run()
+    assert calls["n"] == 2, "persisted measurement must skip the measurement"
+    assert got == plan
+    assert got.stats["wide"].uncapped_pairs == 46
 
 
-def test_persisted_refusal_reraises_in_new_process(tmp_path, monkeypatch):
+def test_persisted_refusal_reraises_in_new_process(
+    spark, tmp_path, monkeypatch
+):
     monkeypatch.setenv("SPARK_GRAFT_PLAN_CACHE", str(tmp_path / "pc.json"))
+    calls = _count_measurements(monkeypatch)
+    with pytest.raises(CapBoundError) as first:
+        _toy_preflight(spark, tmp_path, {"wide": "hot"}, 10)
+    assert calls["n"] == 1
+    clear_plan_cache()  # a NEW process: memory gone, sidecar stays
+    with pytest.raises(CapBoundError, match="no exact plan") as again:
+        _toy_preflight(spark, tmp_path, {"wide": "hot"}, 10)
+    assert calls["n"] == 1, "a persisted refusal must re-raise without re-measuring"
+    assert str(again.value) == str(first.value)
+
+
+def test_simhash_plan_persists_decision_not_signatures(
+    spark, tmp_path, monkeypatch
+):
+    # chunks binds, combos fits: the second geometry survives a new process
+    # while the sidecar holds only the measurement, never a session-bound
+    # frame (the checkpointed signatures stay with the caller)
+    import json
+
+    side = tmp_path / "pc.json"
+    monkeypatch.setenv("SPARK_GRAFT_PLAN_CACHE", str(side))
+    fronts = {"chunks": "hot", "combos": "narrow"}
+    plan = _toy_preflight(spark, tmp_path, fronts, 1000)
+    assert plan.decision == "exact_uncapped" and plan.geometry == "combos"
+    assert plan.stats["chunks"].binds
+    entries = json.loads(side.read_text())["entries"]
+    assert [e["entry"]["kind"] for e in entries] == ["fronts"]
+    assert set(entries[0]["entry"]["stats"]) == {"chunks", "combos"}
     clear_plan_cache()
-    key = ("containment_postings", ("/corpus", 1, 2), 64, 10)
-
-    def refuse():
-        raise CapBoundError("no exact plan fits pair_budget=10", _toy_stats())
-
-    with pytest.raises(CapBoundError):
-        cached_plan(key, refuse)
-    clear_plan_cache()
-    calls = {"n": 0}
-
-    def recompute():
-        calls["n"] += 1
-        raise CapBoundError("fresh", {})
-
-    with pytest.raises(CapBoundError, match="no exact plan"):
-        cached_plan(key, recompute)
-    assert calls["n"] == 0, "a persisted refusal must re-raise without re-measuring"
-
-
-def test_simhash_plan_persists_decision_not_signatures(tmp_path, monkeypatch):
-    from video_data_pipeline_spark.calibrate import SimhashPlan
-
-    monkeypatch.setenv("SPARK_GRAFT_PLAN_CACHE", str(tmp_path / "pc.json"))
-    clear_plan_cache()
-    key = ("simhash", ("/corpus", 9, 9), 64, 200_000_000)
-    plan = SimhashPlan(
-        "exact_uncapped", "combos", None, "combos fits", _toy_stats(),
-        signatures=object(),  # stands in for the session-bound DataFrame
+    monkeypatch.setattr(
+        calibrate, "measure_front",
+        lambda *a, **k: pytest.fail("must hit sidecar"),
     )
-    cached_plan(key, lambda: plan)
-    clear_plan_cache()
-    got = cached_plan(key, lambda: pytest.fail("must hit sidecar"))
-    assert got.geometry == "combos" and got.signatures is None
+    got = _toy_preflight(spark, tmp_path, fronts, 1000)
+    assert got.geometry == "combos" and got.max_bucket_size is None
+    assert got == plan and not hasattr(got, "signatures")
 
 
 def test_corrupt_or_mismatched_sidecar_is_ignored(tmp_path, monkeypatch):
@@ -212,16 +283,21 @@ def test_corrupt_or_mismatched_sidecar_is_ignored(tmp_path, monkeypatch):
     side.write_text('{"format": 99, "entries": []}')
     clear_plan_cache()
     assert cached_plan(("k2",), compute) == "fresh"
+    # as is a format-1 sidecar of cached decisions: never misread as stats
+    side.write_text(
+        '{"format": 1, "entries": [{"key": ["k3"], "entry": {"kind": '
+        '"FrontPlan", "decision": "default", "max_bucket_size": 64, '
+        '"reason": "r", "stats": {}}}]}'
+    )
+    clear_plan_cache()
+    assert cached_plan(("k3",), compute) == "fresh"
 
 
 def test_sidecar_caps_entries_dropping_oldest(tmp_path, monkeypatch):
-    from video_data_pipeline_spark import calibrate
-    from video_data_pipeline_spark.calibrate import FrontPlan
-
     monkeypatch.setenv("SPARK_GRAFT_PLAN_CACHE", str(tmp_path / "pc.json"))
     monkeypatch.setattr(calibrate, "_CACHE_MAX_ENTRIES", 3)
     clear_plan_cache()
-    plan = FrontPlan("default", 64, "headroom", _toy_stats())
+    plan = _toy_stats()
     for i in range(5):
         cached_plan(("front", f"corpus{i}"), lambda: plan)
     clear_plan_cache()
@@ -238,14 +314,17 @@ def test_sidecar_caps_entries_dropping_oldest(tmp_path, monkeypatch):
 
 
 def test_front_stats_roundtrip_sidecar(tmp_path, monkeypatch):
-    # r16 (ADVICE r15 medium): the byte-model paths cache the raw
-    # MEASUREMENT — FrontStats must survive the sidecar like decisions do
+    # the cache holds the raw MEASUREMENT — {geometry: FrontStats} must
+    # survive the sidecar exactly
     from video_data_pipeline_spark.calibrate import FrontStats
 
     monkeypatch.setenv("SPARK_GRAFT_PLAN_CACHE", str(tmp_path / "pc.json"))
     clear_plan_cache()
-    key = ("prefix_front", ("/corpus", 1, 2), 64)
-    s = FrontStats("prefix_buckets", 64, 1000, 99, 80, 12, 123_456, 7_890)
+    key = ("simhash", ("/corpus", 1, 2), 64)
+    s = {
+        "chunks": FrontStats("chunks", 64, 1000, 99, 80, 12, 123_456, 7_890),
+        "combos": FrontStats("combos", 64, 5000, 70, 20, 3, 45_000, 2_000),
+    }
     cached_plan(key, lambda: s)
     clear_plan_cache()
     got = cached_plan(key, lambda: pytest.fail("must hit sidecar"))
@@ -270,7 +349,7 @@ from video_data_pipeline_spark.calibrate import FrontStats, cached_plan
 tag = sys.argv[1]
 for i in range(40):
     s = FrontStats(f"{tag}{i}", 4, 2, 10, 10, 1, 46, 7)
-    cached_plan((tag, f"corpus{i}"), lambda s=s: s)
+    cached_plan((tag, f"corpus{i}"), lambda s=s: {s.name: s})
 """
     env = dict(os.environ, SPARK_GRAFT_PLAN_CACHE=str(side))
     procs = [
@@ -297,12 +376,10 @@ def test_one_bad_sidecar_entry_does_not_discard_the_rest(tmp_path, monkeypatch):
     # newer version) must skip THAT record, not the whole sidecar
     import json
 
-    from video_data_pipeline_spark.calibrate import FrontPlan
-
     side = tmp_path / "pc.json"
     monkeypatch.setenv("SPARK_GRAFT_PLAN_CACHE", str(side))
     clear_plan_cache()
-    plan = FrontPlan("default", 64, "headroom", _toy_stats())
+    plan = _toy_stats()
     cached_plan(("front", "good-corpus"), lambda: plan)
     doc = json.loads(side.read_text())
     doc["entries"].insert(
@@ -314,7 +391,7 @@ def test_one_bad_sidecar_entry_does_not_discard_the_rest(tmp_path, monkeypatch):
     got = cached_plan(
         ("front", "good-corpus"), lambda: pytest.fail("must hit sidecar")
     )
-    assert got.decision == "default"
+    assert got == plan
     # and a later persist drops only what it can't re-serialize... the raw
     # merge keeps the unknown record for NEWER readers
     cached_plan(("front", "another"), lambda: plan)
@@ -330,12 +407,10 @@ def test_age_out_env_expires_old_entries(tmp_path, monkeypatch):
     import json
     import time
 
-    from video_data_pipeline_spark.calibrate import FrontPlan
-
     side = tmp_path / "pc.json"
     monkeypatch.setenv("SPARK_GRAFT_PLAN_CACHE", str(side))
     clear_plan_cache()
-    plan = FrontPlan("default", 64, "headroom", _toy_stats())
+    plan = _toy_stats()
     cached_plan(("front", "old-corpus"), lambda: plan)
     cached_plan(("front", "new-corpus"), lambda: plan)
     # backdate one entry 10 days
@@ -386,17 +461,13 @@ def test_unset_env_keeps_cache_process_local(tmp_path, monkeypatch):
 
 
 def test_cache_key_includes_knobs(spark, monkeypatch):
-    # a different cap or budget is a different decision problem
-    calls = {"n": 0}
-    real = calibrate.measure_front
-
-    def counting(keys, cap, name="front"):
-        calls["n"] += 1
-        return real(keys, cap, name)
-
-    monkeypatch.setattr(calibrate, "measure_front", counting)
+    # a different cap is a different measurement; a different budget is
+    # the same measurement under a re-derived decision
+    calls = _count_measurements(monkeypatch)
     q_minhash_lsh_pairs(spark, SF_DIR, calibrate=True).count()
     q_minhash_lsh_pairs(
         spark, SF_DIR, calibrate=True, max_bucket_size=128
     ).count()
+    assert calls["n"] == 2
+    q_minhash_lsh_pairs(spark, SF_DIR, calibrate=True, pair_budget=10).count()
     assert calls["n"] == 2

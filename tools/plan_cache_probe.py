@@ -1,12 +1,13 @@
-"""Cross-process decision-cache probe (r15, VERDICT r14 #2).
+"""Cross-process pre-flight cache probe (r15, VERDICT r14 #2).
 
 The r14 cache was process-local: a nightly job re-measured every launch.
 r15 adds a JSON sidecar (``$SPARK_GRAFT_PLAN_CACHE``); this probe proves
 the cross-process contract on a real corpus: for each calibrated twin it
 spawns TWO child processes sharing one sidecar — run 1 (cold) must
-measure its front at least once and persist the decision; run 2 (a brand
-new process) must serve the decision from the sidecar with ZERO
-measurement shuffles and return the identical row count.
+measure its front at least once and persist the measurement; run 2 (a
+brand new process) must serve the measurement from the sidecar with ZERO
+measurement shuffles, re-derive the decision, and return the identical
+row count.
 
     python tools/plan_cache_probe.py --sf-dir /tmp/sfp1 --json PROBE.json
 
@@ -27,10 +28,9 @@ import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-#: the first two cache DECISIONS (count-budget model, budget in the key);
-#: the last two cache the budget-invariant MEASUREMENT and re-derive the
-#: decision per process (r16, ADVICE r15 medium) — run 2 must still show
-#: zero measure_front calls (the FrontStats came from the sidecar) with
+#: every calibrated twin caches its budget-invariant measurement and
+#: re-derives the decision per process — run 2 must show zero
+#: measure_front calls (the FrontStats came from the sidecar) with
 #: identical rows
 QUERIES = [
     "q_simhash_near_pairs_calibrated",
@@ -114,10 +114,10 @@ def main() -> int:
     result = {
         "sf_dir": args.sf_dir,
         "note": (
-            "cross-process decision-cache probe (r15, VERDICT r14 #2): two "
+            "cross-process pre-flight cache probe (r15, VERDICT r14 #2): two "
             "SEPARATE processes per query share one $SPARK_GRAFT_PLAN_CACHE "
             "sidecar on an unchanged corpus; run 2 is a brand new process "
-            "and must serve the pre-flight decision from the sidecar with "
+            "and must serve the front measurement from the sidecar with "
             "zero measure_front calls and identical rows. Timing deltas "
             "include full JVM startup in both legs, so n_measurements is "
             "the signal; secs is context."

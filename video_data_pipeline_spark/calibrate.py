@@ -9,28 +9,44 @@ registered query returns a capped SUBSET, not the oracle answer
 (measured: the simhash default emits 3.28M of 6.64M oracle pairs on the
 10x-perturbed sfp1 corpus, CORRECTNESS_sfp1_r12.json).
 
-This module is the job-surface fix (VERDICT r12 #1): a pre-flight that
-measures the actual bucket-size distribution of each front — ONE linear
-groupBy per front, no pair expansion, so it is safe on corpora whose
-joins would not be — and then *decides*:
+All four capped fronts share the two pieces of this module:
 
-- the default cap does not bind → proceed with the registered default
-  (exact, bounded; the measurement cost was one cheap agg);
-- the cap binds but some complete pigeonhole geometry's EXACT (uncapped)
-  candidate workload fits ``pair_budget`` → proceed uncapped on the
-  cheapest such geometry (on low-entropy corpora that is typically the
-  Manku-style 20x30-bit combo keys: measured 58M vs 148M candidates at
-  sfp1 — both geometries are complete for hamming <= 3, so the output is
-  oracle-exact either way);
-- every exact plan exceeds the budget → raise :class:`CapBoundError`
-  naming the boundary and the measured workload, instead of silently
-  emitting a 49%-recall subset. The caller can re-run with an explicit
-  ``max_bucket_size`` (accepting documented partial recall) or
-  ``max_bucket_size=None`` (accepting the quadratic workload).
+- :func:`preflight`, the one decision ladder behind every
+  ``calibrate=True`` branch. It takes a family's ordered fronts (one for
+  minhash, prefix and containment; chunks then combos for simhash),
+  measures each with ONE linear groupBy (:func:`measure_front` — no pair
+  expansion, so it is safe on corpora whose joins would not be), and
+  decides:
+
+  - the default cap does not bind → proceed with the registered default
+    (exact, bounded; the measurement cost was one cheap agg);
+  - the cap binds but some measured geometry's EXACT (uncapped)
+    candidate workload fits the budget → proceed uncapped on the
+    cheapest such geometry (on low-entropy corpora that is typically the
+    Manku-style 20x30-bit simhash combo keys: measured 58M vs 148M
+    candidates at sfp1 — both geometries are complete for hamming <= 3,
+    so the output is oracle-exact either way);
+  - every exact plan exceeds the budget → raise :class:`CapBoundError`
+    naming the boundary and the measured workload, instead of silently
+    emitting a 49%-recall subset. The caller can re-run with an explicit
+    cap (accepting documented partial recall — the pre-flight then
+    measures and reports it, and never refuses) or a cap of ``None``
+    (accepting the quadratic workload; no pre-flight runs).
+
+  Only the measurement is memoized (``{geometry: FrontStats}`` keyed by
+  family, corpus fingerprint and cap, optionally persisted across
+  processes); the decision is driver arithmetic re-derived on every
+  call, so a refusal or a budget change never re-measures.
+
+- :func:`observe_cap`, the one cap telemetry the four capped cores
+  attach to their bucket frames: five metrics, auto-named, with the same
+  pair arithmetic as :func:`measure_front`, so the pre-flight and the
+  run-time observation count one workload one way.
 
 The same measurement core backs ``tools/cap_calibrate.py`` (the manual
-pre-flight CLI) and the ``calibrate=True`` knob on the registered
-simhash queries.
+pre-flight CLI) through :func:`standard_fronts`, which builds each front
+with the family's own key builder — the frame the registered pre-flight
+measures.
 
 At 100 TB the measurement is one shuffle over the corpus per front —
 ~the cost of a distinct-count — and the decision it buys is the
@@ -42,12 +58,11 @@ from __future__ import annotations
 import dataclasses
 import logging
 import os
-from dataclasses import dataclass, field
+from collections.abc import Callable
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from video_data_pipeline_spark.checkpoint import checkpoint_frame
 
 log = logging.getLogger("video_data_pipeline_spark.calibrate")
 
@@ -59,45 +74,25 @@ log = logging.getLogger("video_data_pipeline_spark.calibrate")
 #: regimes (sfp30 chunks: ~4.6B candidates) that exhaust spill disk.
 DEFAULT_PAIR_BUDGET = 200_000_000
 
-#: Default budget for the VERIFIED-join families (prefix-filter,
-#: containment): their candidates are not scalar pairs — each one carries
-#: two ~100-element BIGINT shingle arrays into an exact array_intersect
-#: verification, so per-candidate cost (bytes shuffled + CPU) runs ~two
-#: orders heavier than a simhash/minhash candidate. Measured at sfp10
-#: (PROBE_PREFIX_CAL_SFP10_r14.json): the capped default's 35.5M
-#: candidates verify in 78 s with ZERO spill, while a 200M-budget
-#: "proceed" on the same corpus (151.2M exact candidates) spilled 36 GB
-#: disk + 59 GB memory over 316 s for +2.2% more rows — the exact
-#: pathology the pre-flight exists to refuse. 50M keeps proceeds in the
-#: measured zero-spill regime; callers who want the spill anyway pass
-#: ``pair_budget`` explicitly (the refusal names the escape).
-#:
-#: r15 NOTE: the registered verified-family queries no longer use this
-#: count proxy by default — staged verification made their per-candidate
-#: shuffle bytes a constant, so their default proceed test is the
-#: bytes-weighted model below (VERDICT r14 #4). The constant remains the
-#: documented reference point for explicit count budgets.
-DEFAULT_VERIFIED_PAIR_BUDGET = 50_000_000
-
-#: r15 (VERDICT r14 #4+#5): the verified families now verify in STAGES —
-#: candidates attach a fixed-size packed-histogram summary (8 BIGINTs +
-#: n + sat per side) and a safe intersection upper bound prunes them
-#: before the full arrays join (``simjoin.py::summary_table``). That
-#: makes the per-candidate bytes through the heavy shuffle a measured
-#: CONSTANT (~160 B: two 72 B summaries + ids), independent of set
-#: length — so the workload model budgets candidates x bytes instead of
-#: the r14 count proxy (which refused affordable short-set corpora and
-#: accepted expensive long-set ones). Anchored to two live runs on
-#: local[32]/128 GiB: PROBE_PREFIX_STAGED_SFP10_r15 — 151.2M candidates
-#: (22.5 GiB logical) through the staged filter, 1.38 GB disk spill,
-#: 220 s; PROBE_CONTAINMENT_STAGED_SFP10_r15 — 601M candidates
-#: (89.5 GiB logical), 2.5 GB disk spill, 200 s (the packed summaries
-#: compress ~30x in the shuffle, so logical bytes overstate the I/O).
-#: 128 GiB sits just above the heavier measured run and well below the
-#: r14 pathology's regime; sfp30's fronts (193 GiB prefix / 768 GiB
-#: containment) still refuse. An initial 32 GiB guess would have
-#: re-created the count proxy's failure mode — refusing the measured
-#: 200 s / 2.5 GB-spill containment run.
+#: r15 (VERDICT r14 #4+#5): the verified families (prefix-filter,
+#: containment) verify in STAGES — candidates attach a fixed-size
+#: packed-histogram summary (8 BIGINTs + n + sat per side) and a safe
+#: intersection upper bound prunes them before the full arrays join
+#: (``simjoin.py::summary_table``). That makes the per-candidate bytes
+#: through the heavy shuffle a measured CONSTANT (~160 B: two 72 B
+#: summaries + ids), independent of set length — so the workload model
+#: budgets candidates x bytes instead of a count proxy (which refused
+#: affordable short-set corpora and accepted expensive long-set ones).
+#: Anchored to two live runs on local[32]/128 GiB:
+#: PROBE_PREFIX_STAGED_SFP10_r15 — 151.2M candidates (22.5 GiB logical)
+#: through the staged filter, 1.38 GB disk spill, 220 s;
+#: PROBE_CONTAINMENT_STAGED_SFP10_r15 — 601M candidates (89.5 GiB
+#: logical), 2.5 GB disk spill, 200 s (the packed summaries compress
+#: ~30x in the shuffle, so logical bytes overstate the I/O). 128 GiB sits
+#: just above the heavier measured run and well below the r14 count
+#: proxy's pathology (PROBE_PREFIX_CAL_SFP10_r14: a 151.2M-candidate
+#: unstaged proceed spilled 36 GB disk); sfp30's fronts (193 GiB prefix /
+#: 768 GiB containment) still refuse.
 STAGED_CANDIDATE_BYTES = 160
 DEFAULT_CANDIDATE_BYTE_BUDGET = 128 << 30
 
@@ -117,26 +112,6 @@ def declared_executor_count(spark) -> int:
         return max(1, int(spark.conf.get("spark.executor.instances", "1")))
     except (ValueError, TypeError):
         return 1
-
-
-def cluster_byte_budget(spark) -> int:
-    """Scale the spill-safe candidate byte budget by the cluster size
-    (r15, ROADMAP r16 #3 pulled forward):
-    :data:`DEFAULT_CANDIDATE_BYTE_BUDGET` (128 GiB) is a SINGLE-NODE
-    bound (anchored to two measured staged runs on local[32]/128 GiB —
-    PROBE_PREFIX_STAGED_SFP10_r15 / PROBE_CONTAINMENT_STAGED_SFP10_r15),
-    but the staged filter's shuffle spreads uniformly over executors
-    (candidates key on uniform ids), so an N-executor cluster tolerates
-    ~N x the bytes before any one node spills past its disk. Reads
-    ``spark.executor.instances`` via :func:`declared_executor_count`
-    (absent degrades to 1, the measured single-node bound; a
-    dynamic-allocation operator should pass ``byte_budget`` explicitly).
-
-    This is the probe-anchored CONSTANT cap; the runtime default the
-    pre-flights actually use is :func:`resolve_byte_budget`, which also
-    floors the per-node bound by measured local-disk headroom
-    (r16, VERDICT r15 #4)."""
-    return DEFAULT_CANDIDATE_BYTE_BUDGET * declared_executor_count(spark)
 
 
 def measured_local_headroom_bytes(spark=None) -> tuple[int, str] | None:
@@ -184,6 +159,12 @@ class ResolvedByteBudget:
 
 
 def resolve_byte_budget(spark) -> ResolvedByteBudget:
+    """The per-node bound scales by ``spark.executor.instances`` (via
+    :func:`declared_executor_count`; absent degrades to 1, the measured
+    single-node bound): the staged filter's shuffle keys on uniform ids,
+    so it spreads evenly and an N-executor cluster tolerates ~N x the
+    bytes before any one node spills past its disk. A dynamic-allocation
+    operator should pass ``pair_budget`` explicitly instead."""
     n = declared_executor_count(spark)
     measured = measured_local_headroom_bytes(spark)
     gib = 1 << 30
@@ -214,12 +195,8 @@ def resolve_byte_budget(spark) -> ResolvedByteBudget:
         )
     return ResolvedByteBudget(per_node * n, per_node, n, free, prov)
 
-#: sentinel distinguishing "caller did not choose a cap" (use the family
-#: default) from an EXPLICIT ``default_cap=None`` (the caller already
-#: accepted the uncapped quadratic workload — ADVICE r13: mapping None
-#: back to the default made the pre-flight refuse with advice to "pass
-#: max_bucket_size=None", the exact thing the caller had already done)
-_UNSET = object()
+
+# ------------------------------------------------ measurement + telemetry
 
 
 @dataclass
@@ -257,6 +234,20 @@ class FrontStats:
         }
 
 
+def _cap_aggs(n: str, cap: int):
+    """(oversized, max, uncapped pairs, capped pairs) aggregates over the
+    bucket-size expression ``n`` — the ONE arithmetic behind both the
+    pre-flight (:func:`measure_front`) and the run-time observation
+    (:func:`observe_cap`)."""
+    capped = f"least({n}, {cap})"
+    return (
+        F.sum(F.expr(f"{n} > {cap}").cast("long")),
+        F.max(F.expr(n)),
+        F.expr(f"sum({n} * ({n} - 1) div 2)"),
+        F.expr(f"sum({capped} * ({capped} - 1) div 2)"),
+    )
+
+
 def measure_front(keys: DataFrame, default_cap: int, name: str = "front") -> FrontStats:
     """Measure one front's bucket-size distribution. ``keys`` is a
     one-column (``key``) DataFrame with one row per (doc, bucket-key)
@@ -264,15 +255,15 @@ def measure_front(keys: DataFrame, default_cap: int, name: str = "front") -> Fro
     corpus, never quadratic. NULL aggregates (an empty or single-bucket
     corpus returns NULL max/p99) default to 0 instead of raising."""
     sizes = keys.groupBy("key").agg(F.count(F.lit(1)).alias("n"))
-    capped = f"least(n, {default_cap})"
+    oversized, largest, uncapped, capped = _cap_aggs("n", default_cap)
     r = (
         sizes.agg(
             F.count(F.lit(1)).alias("n_buckets"),
-            F.max("n").alias("max_bucket"),
+            largest.alias("max_bucket"),
             F.expr("percentile_approx(n, 0.99)").alias("p99_bucket"),
-            F.sum((F.col("n") > default_cap).cast("long")).alias("oversized"),
-            F.expr("sum(n * (n - 1) div 2)").alias("uncapped_pairs"),
-            F.expr(f"sum({capped} * ({capped} - 1) div 2)").alias("capped_pairs"),
+            oversized.alias("oversized"),
+            uncapped.alias("uncapped_pairs"),
+            capped.alias("capped_pairs"),
         )
         .collect()[0]
         .asDict()
@@ -284,11 +275,54 @@ def measure_front(keys: DataFrame, default_cap: int, name: str = "front") -> Fro
     )
 
 
+def observe_cap(
+    buckets: DataFrame,
+    family: str,
+    cap: int | None,
+    size: str,
+    observation=None,
+    unit: str = "bucket",
+) -> DataFrame:
+    """Attach the cap telemetry to a capped core's grouped bucket frame
+    (one row per bucket, ``size`` the SQL expression of its UNCAPPED
+    member count). With no caller ``observation`` and a cap set, a named
+    one is auto-attached (:func:`telemetry.cap_observation_name`) so the
+    session listener can warn when the cap BINDS — a capped subset must
+    never read as exact; uncapped and unobserved, the frame is returned
+    as is. Metrics: ``n_{unit}s``, ``oversized_{unit}s``,
+    ``max_{unit}_size_seen`` (``unit`` is ``"posting"`` for containment,
+    ``"bucket"`` for the rest — the names the listener and the headroom
+    gates read), plus the recall arithmetic ``uncapped_candidate_pairs``
+    / ``capped_candidate_pairs`` (r15, VERDICT r14 #8): a capped run
+    self-reports "emitted ~X of Y in-bucket candidates", counted exactly
+    as :func:`measure_front` counts them."""
+    if observation is None:
+        if cap is None:
+            return buckets
+        from video_data_pipeline_spark.telemetry import cap_observation_name
+
+        observation = cap_observation_name(family)
+    oversized, largest, uncapped, capped = _cap_aggs(
+        size, cap if cap is not None else 1 << 62
+    )
+    return buckets.observe(
+        observation,
+        F.count(F.lit(1)).alias(f"n_{unit}s"),
+        oversized.alias(f"oversized_{unit}s"),
+        largest.alias(f"max_{unit}_size_seen"),
+        uncapped.alias("uncapped_candidate_pairs"),
+        capped.alias("capped_candidate_pairs"),
+    )
+
+
+# ---------------------------------------------------------- the pre-flight
+
+
 class CapBoundError(RuntimeError):
     """The default cap binds on this corpus AND no exact plan fits the
-    pair budget: refusing is the honest answer (a silent capped subset
-    reads as oracle-exact). Carries the per-geometry :class:`FrontStats`
-    so the caller/artifact can record the named boundary."""
+    budget: refusing is the honest answer (a silent capped subset reads
+    as oracle-exact). Carries the per-geometry :class:`FrontStats` so the
+    caller/artifact can record the named boundary."""
 
     def __init__(self, message: str, stats: dict[str, FrontStats]):
         super().__init__(message)
@@ -296,195 +330,175 @@ class CapBoundError(RuntimeError):
 
 
 @dataclass
-class SimhashPlan:
-    """Outcome of :func:`calibrate_simhash`: which pigeonhole geometry to
-    run and with what cap, plus the measurements that justify it.
-    ``decision`` is ``"default"`` (cap proven not to bind — registered
-    behavior, exact) or ``"exact_uncapped"`` (cap binds; run the cheapest
-    complete geometry uncapped within budget — exact). A corpus where
-    neither is possible raises :class:`CapBoundError` instead."""
+class FrontPlan:
+    """Outcome of :func:`preflight`: the geometry to run, with which cap,
+    and the measurements that justify it. ``decision`` is
+
+    - ``"default"``: the family default cap was measured not to bind —
+      the registered plan, exact;
+    - ``"exact_uncapped"``: the default binds; the cheapest measured
+      geometry whose exact workload fits the budget runs uncapped —
+      exact;
+    - ``"explicit_capped"``: the caller's own non-default cap (accepted
+      partial recall); ``reason`` reports the measured recall.
+
+    A binding default with no geometry inside the budget raises
+    :class:`CapBoundError` instead."""
 
     decision: str
     geometry: str
     max_bucket_size: int | None
     reason: str
     stats: dict[str, FrontStats]
-    signatures: DataFrame | None = field(default=None, repr=False)
-
-    def as_dict(self) -> dict:
-        return {
-            "decision": self.decision,
-            "geometry": self.geometry,
-            "max_bucket_size": self.max_bucket_size,
-            "reason": self.reason,
-            "fronts": {k: v.as_dict() for k, v in self.stats.items()},
-        }
 
 
-def _key(df: DataFrame) -> DataFrame:
-    return df.select(F.concat_ws("/", "c", "chunk").alias("key"))
+def preflight(
+    family: str,
+    fronts: dict[str, Callable[[], DataFrame]],
+    cap: int,
+    default: int,
+    pair_budget: int | None = None,
+    bytes_per_candidate: int | None = None,
+    escape_arg: str = "max_bucket_size",
+    sf_dir: str | None = None,
+) -> FrontPlan:
+    """The cap pre-flight of every capped pair family.
 
+    ``fronts`` maps each geometry, in preference order, to a builder of
+    its one-column ``key`` frame (one row per (doc, bucket-key)
+    membership — the family's own front-key builder over the checkpointed
+    frame the join then consumes). Builders are called only for the
+    fronts actually measured. A cap of None needs no pre-flight: the
+    caller already chose the uncapped exact join, so the registered
+    queries skip this call (ADVICE r13 — nothing can refuse it).
 
-def calibrate_simhash(
-    docs: DataFrame,
-    pair_budget: int = DEFAULT_PAIR_BUDGET,
-    default_cap=_UNSET,
-    max_hamming: int = 3,
-) -> SimhashPlan:
-    """Pre-flight for the simhash near-pair family (VERDICT r12 #1).
+    - ``cap != default``: an explicit cap is accepted partial recall (the
+      escape a refusal names, r15 / ADVICE r14): the first front is
+      measured at that cap, the recall arithmetic is reported, and the
+      plan proceeds with the caller's cap — never a refusal.
+    - otherwise the first front is measured; if the default does not
+      bind, the plan is ``default``. If it binds, every other front is
+      measured too, and the cheapest geometry whose exact (uncapped)
+      workload fits the budget runs uncapped, else :class:`CapBoundError`
+      lists every measured front.
 
-    Measures the 4x15-bit chunk front first (one linear groupBy over the
-    rep-collapsed corpus); if the default cap does not bind, the
-    registered default IS exact here and the plan says so. If it binds,
-    the 20x30-bit combo front is measured too and the cheapest geometry
-    whose EXACT (uncapped) candidate workload fits ``pair_budget`` is
-    selected — both geometries are complete for hamming <= 3
-    (output-invariance pytest- and oracle-pinned), so the uncapped run is
-    oracle-exact regardless of which wins. If neither fits, raises
-    :class:`CapBoundError` naming the measured maxima and workloads.
+    Budget model: with ``bytes_per_candidate`` set (the verified families
+    pass :data:`STAGED_CANDIDATE_BYTES`) and no ``pair_budget``, the
+    proceed test is bytes-weighted against :func:`resolve_byte_budget`
+    (r15, VERDICT r14 #4 — bytes are what a node spills); otherwise it
+    counts pairs against ``pair_budget`` (default
+    :data:`DEFAULT_PAIR_BUDGET`). ``uncapped_pairs`` upper-bounds the real
+    candidates of the length-filtered/asymmetric fronts, so a proceed is
+    always safe and a refusal conservative by at most that slack.
 
-    The 60-bit signature is computed ONCE and lazily checkpointed; the
-    returned plan carries it (``signatures``) so the subsequent pair join
-    reuses the same frame instead of re-running the md5 pass.
+    With ``sf_dir`` the measurement is memoized under
+    ``(family, corpus_fingerprint(sf_dir), cap)`` (:func:`cached_plan`);
+    the decision is re-derived on every call."""
+    geometry = next(iter(fronts))
+    fp = None if sf_dir is None else corpus_fingerprint(sf_dir)
+    key = None if fp is None else (family, fp, cap)
 
-    ``default_cap`` semantics (ADVICE r13): leaving it unset means "test
-    the family default"; an EXPLICIT ``default_cap=None`` means the caller
-    already chose the uncapped exact join, so there is nothing to
-    calibrate — the plan is ``explicit_uncapped`` with no measurement (in
-    particular, no :class:`CapBoundError` can send the caller back to the
-    escape they already took). An integer ``default_cap`` keeps the full
-    LADDER semantics here — this is the library pre-flight probes and the
-    CLI use to test arbitrary caps; the REGISTERED-query layer is where
-    an explicit non-default cap means accepted partial recall (r15,
-    ADVICE r14 — see :func:`explicit_cap_plan` and the ``calibrate=True``
-    branches in ``queries/dedup.py`` / ``queries/simjoin.py``).
-    """
-    from video_data_pipeline_spark.queries.dedup import (
-        DEFAULT_SIMHASH_MAX_BUCKET_SIZE,
-        chunk_keys,
-        combo_keys,
-        exact_dup_representatives,
-        simhash_signatures,
-    )
+    def measure():
+        stats = {geometry: measure_front(fronts[geometry](), cap, geometry)}
+        if cap == default and stats[geometry].binds:
+            for g, build in list(fronts.items())[1:]:
+                stats[g] = measure_front(build(), cap, g)
+        return stats
 
-    if default_cap is _UNSET:
-        default_cap = DEFAULT_SIMHASH_MAX_BUCKET_SIZE
-    sig = checkpoint_frame(simhash_signatures(exact_dup_representatives(docs)))
-    if default_cap is None:
+    stats = cached_plan(key, measure)
+    first = stats[geometry]
+    if cap != default:
+        if not first.binds:
+            reason = (
+                f"explicit cap {cap} does not bind (measured max bucket "
+                f"{first.max_bucket}) — output is exact here"
+            )
+        else:
+            pct = 100.0 * first.capped_pairs / max(first.uncapped_pairs, 1)
+            reason = (
+                f"explicit cap {cap} BINDS (max bucket {first.max_bucket}, "
+                f"{first.oversized} oversized buckets): proceeding with the "
+                f"caller's accepted partial recall — in-bucket candidate "
+                f"workload {first.capped_pairs:,} of {first.uncapped_pairs:,} "
+                f"({pct:.1f}%)"
+            )
+        (log.warning if first.binds else log.info)(
+            "%s calibration (explicit cap): %s", family, reason
+        )
+        return FrontPlan("explicit_capped", geometry, cap, reason, stats)
+    if not first.binds:
         reason = (
-            "caller passed max_bucket_size=None explicitly — the uncapped "
-            "exact join was already chosen, pre-flight skipped"
+            f"default cap {cap} does not bind (measured max bucket "
+            f"{first.max_bucket}) — registered default is exact here"
         )
-        log.info("simhash calibration: %s", reason)
-        return SimhashPlan(
-            decision="explicit_uncapped",
-            geometry="chunks",
-            max_bucket_size=None,
-            reason=reason,
-            stats={},
-            signatures=sig,
-        )
-    stats: dict[str, FrontStats] = {}
-    stats["chunks"] = measure_front(_key(chunk_keys(sig)), default_cap, "chunks")
-    if not stats["chunks"].binds:
-        reason = (
-            f"default cap {default_cap} does not bind (measured max bucket "
-            f"{stats['chunks'].max_bucket}) — registered default is exact here"
-        )
-        log.info("simhash calibration: %s", reason)
-        return SimhashPlan(
-            decision="default",
-            geometry="chunks",
-            max_bucket_size=default_cap,
-            reason=reason,
-            stats=stats,
-            signatures=sig,
-        )
-    if max_hamming <= 3:
-        # the 3-of-6 combo geometry is complete only for hamming <= 3;
-        # beyond that, chunks-uncapped is the only exact candidate
-        stats["combos"] = measure_front(
-            _key(combo_keys(sig)), default_cap, "combos"
-        )
-    affordable = [
-        s for s in stats.values() if s.uncapped_pairs <= pair_budget
-    ]
+        log.info("%s calibration: %s", family, reason)
+        return FrontPlan("default", geometry, cap, reason, stats)
+
+    gib = 1 << 30
+    if bytes_per_candidate is not None and pair_budget is None:
+        rb = resolve_byte_budget(SparkSession.active())
+        unit, budget, note = bytes_per_candidate, rb.total, f" [{rb.provenance}]"
+        budget_text = f"the candidate byte budget ({budget / gib:.0f} GiB)"
+
+        def workload(s):
+            return (
+                f"{s.uncapped_pairs:,} candidates x {unit} B = "
+                f"{s.uncapped_pairs * unit / gib:.1f} GiB"
+            )
+    else:
+        unit, note = 1, ""
+        budget = DEFAULT_PAIR_BUDGET if pair_budget is None else pair_budget
+        budget_text = f"pair_budget={budget:,}"
+
+        def workload(s):
+            return f"{s.uncapped_pairs:,} exact candidate pairs"
+
+    affordable = [s for s in stats.values() if s.uncapped_pairs * unit <= budget]
     if affordable:
         best = min(affordable, key=lambda s: s.uncapped_pairs)
         reason = (
-            f"default cap {default_cap} BINDS on this corpus (chunk-bucket max "
-            f"{stats['chunks'].max_bucket}, {stats['chunks'].oversized} oversized "
-            f"buckets) — running geometry={best.name!r} UNCAPPED instead: its "
-            f"exact candidate workload {best.uncapped_pairs:,} pairs fits the "
-            f"budget ({pair_budget:,}); output stays oracle-exact"
+            f"default cap {cap} BINDS on this corpus ({geometry} max bucket "
+            f"{first.max_bucket}, {first.oversized} oversized buckets) — "
+            f"running geometry={best.name!r} UNCAPPED instead: its exact "
+            f"workload {workload(best)} fits {budget_text}; output stays "
+            f"oracle-exact{note}"
         )
-        log.warning("simhash calibration: %s", reason)
-        return SimhashPlan(
-            decision="exact_uncapped",
-            geometry=best.name,
-            max_bucket_size=None,
-            reason=reason,
-            stats=stats,
-            signatures=sig,
-        )
+        log.warning("%s calibration: %s", family, reason)
+        return FrontPlan("exact_uncapped", best.name, None, reason, stats)
     measured = "; ".join(
         f"{s.name} front max bucket {s.max_bucket} ({s.oversized} oversized, "
-        f"{s.uncapped_pairs:,} exact candidate pairs)"
+        f"{workload(s)})"
         for s in stats.values()
     )
+    count_override = " (a count budget overrides the byte model)" if note else ""
     raise CapBoundError(
-        f"simhash default cap {default_cap} BINDS on this corpus and no exact "
-        f"plan fits pair_budget={pair_budget:,}: {measured}. Refusing "
-        "rather than silently emitting a capped subset. Escapes: raise "
-        "pair_budget and re-calibrate; pass max_bucket_size=None to accept "
-        "the quadratic exact workload; or pass an explicit non-default "
-        "max_bucket_size to accept DOCUMENTED partial recall — under "
-        "calibrate=True the pre-flight then MEASURES the recall "
+        f"{family} default cap {cap} BINDS on this corpus and no exact plan "
+        f"fits {budget_text}: {measured}{note}. Refusing rather than "
+        f"silently emitting a capped subset. Escapes: raise pair_budget"
+        f"{count_override} and re-calibrate; pass {escape_arg}=None to "
+        "accept the quadratic exact workload; or pass an explicit "
+        f"non-default {escape_arg} to accept DOCUMENTED partial recall — "
+        "under calibrate=True the pre-flight then MEASURES the recall "
         "(emitted-vs-total candidate workload) and proceeds with your cap "
         "instead of refusing again.",
         stats,
     )
 
 
-def calibrated_simhash_near_pairs(
-    docs: DataFrame,
-    pair_budget: int = DEFAULT_PAIR_BUDGET,
-    default_cap=_UNSET,
-    observation=None,
-    max_hamming: int = 3,
-) -> DataFrame:
-    """:func:`calibrate_simhash` + the pair join the plan prescribes —
-    the ``calibrate=True`` body of the registered ``q_simhash_near_pairs``.
-    Exact by construction: every path this function returns is either a
-    proven-not-to-bind default, an uncapped complete geometry, or the
-    caller's own explicit ``default_cap=None`` uncapped request; the
-    cap-binds-and-over-budget case raises :class:`CapBoundError`."""
-    from video_data_pipeline_spark.queries.dedup import simhash_near_pairs_capped
-
-    plan = calibrate_simhash(
-        docs, pair_budget=pair_budget, default_cap=default_cap, max_hamming=max_hamming
-    )
-    return simhash_near_pairs_capped(
-        docs,
-        max_bucket_size=plan.max_bucket_size,
-        observation=observation,
-        max_hamming=max_hamming,
-        geometry=plan.geometry,
-        signatures=plan.signatures,
-    )
-
-
-# ------------------------------------------------ pre-flight decision cache
+# ------------------------------------------------ pre-flight measurement cache
 #
-# r14 (VERDICT r13 #8, unlocked by #5 making pre-flights routine): a
-# pre-flight's DECISION depends only on the corpus bytes and the knobs
-# (cap, budget), so repeated calibrated runs on an unchanged corpus can
-# skip the measurement shuffle. The cache stores plain decisions — never
-# DataFrames, so entries are session-independent — keyed by a stat-based
-# corpus fingerprint (realpath + per-file mtime_ns + size): any rewrite of
-# the parquet changes the key, so staleness is structural, not timed.
-# Refusals cache too (the CapBoundError itself, re-raised), since re-
-# measuring a corpus just to refuse it again is the most wasteful repeat.
+# r14 (VERDICT r13 #8): a front's MEASUREMENT depends only on the corpus
+# bytes and the cap, so repeated calibrated runs on an unchanged corpus
+# skip the measurement shuffle. The cache stores plain
+# ``{geometry: FrontStats}`` dicts — never DataFrames, so entries are
+# session-independent — keyed by (family, stat-based corpus fingerprint
+# (realpath + per-file mtime_ns + size), cap): any rewrite of the parquet
+# changes the key, so staleness is structural, not timed. Decisions are
+# NOT cached: they depend on the budget (pair_budget, executor count,
+# measured disk headroom), and re-deriving one from the stats is
+# microseconds of driver arithmetic — so a proceed computed under one
+# budget is never replayed under another, and a repeated refusal re-raises
+# without re-measuring.
 
 
 _PLAN_CACHE: dict[tuple, object] = {}
@@ -503,14 +517,14 @@ def clear_plan_cache() -> None:
 # pattern where the pre-flight matters most — scheduled re-runs on an
 # unchanged (or slowly-growing) 100 TB corpus, each a NEW driver
 # process. Setting ``SPARK_GRAFT_PLAN_CACHE=/path/plan_cache.json``
-# spills every decision to a JSON sidecar (atomic tmp+rename,
+# spills every measurement to a JSON sidecar (atomic tmp+rename,
 # merge-on-save so concurrent jobs don't clobber each other) and
 # reloads it lazily on the first cached_plan call of a new process.
 # Staleness stays STRUCTURAL: keys embed the stat fingerprint (realpath
 # + per-leaf-file mtime_ns + size), so any rewrite of the parquet makes
 # a new key — persisted entries for the old bytes simply never match
 # again. Opt-in by env var, deliberately: an always-on sidecar would
-# leak decisions between unrelated test sessions, and the production
+# leak measurements between unrelated test sessions, and the production
 # caller (a nightly job) is exactly the one that can set one env var.
 
 
@@ -528,74 +542,26 @@ def _key_from_json(k):
     return tuple(_key_from_json(x) for x in k) if isinstance(k, list) else k
 
 
-def _stats_to_json(stats: dict) -> dict:
-    return {name: dataclasses.asdict(s) for name, s in stats.items()}
-
-
-def _stats_from_json(d: dict) -> dict:
-    return {name: FrontStats(**payload) for name, payload in d.items()}
-
-
 def _entry_to_json(obj):
-    if isinstance(obj, FrontStats):
-        # r16 (ADVICE r15 medium): the byte-model paths cache the
-        # MEASUREMENT, not the decision — a proceed/refusal derived under
-        # one budget (executor count, disk headroom) must not be served
-        # verbatim under another; the stats are budget-invariant and the
-        # decision re-derives in microseconds
-        return {"kind": "FrontStats", "stats": dataclasses.asdict(obj)}
-    if isinstance(obj, SimhashPlan):
+    if isinstance(obj, dict) and all(
+        isinstance(s, FrontStats) for s in obj.values()
+    ):
         return {
-            "kind": "SimhashPlan",
-            "decision": obj.decision,
-            "geometry": obj.geometry,
-            "max_bucket_size": obj.max_bucket_size,
-            "reason": obj.reason,
-            "stats": _stats_to_json(obj.stats),
+            "kind": "fronts",
+            "stats": {g: dataclasses.asdict(s) for g, s in obj.items()},
         }
-    if isinstance(obj, FrontPlan):
-        return {
-            "kind": "FrontPlan",
-            "decision": obj.decision,
-            "max_bucket_size": obj.max_bucket_size,
-            "reason": obj.reason,
-            "stats": _stats_to_json(obj.stats),
-        }
-    if isinstance(obj, CapBoundError):
-        return {
-            "kind": "CapBoundError",
-            "message": str(obj),
-            "stats": _stats_to_json(obj.stats),
-        }
-    return None  # unknown decision type: keep it process-local
+    return None  # anything else stays process-local
 
 
 def _entry_from_json(rec):
-    kind = rec.get("kind")
-    if kind == "FrontStats":
-        return FrontStats(**rec["stats"])
-    if kind == "SimhashPlan":
-        return SimhashPlan(
-            decision=rec["decision"],
-            geometry=rec["geometry"],
-            max_bucket_size=rec["max_bucket_size"],
-            reason=rec["reason"],
-            stats=_stats_from_json(rec["stats"]),
-            signatures=None,
-        )
-    if kind == "FrontPlan":
-        return FrontPlan(
-            decision=rec["decision"],
-            max_bucket_size=rec["max_bucket_size"],
-            reason=rec["reason"],
-            stats=_stats_from_json(rec["stats"]),
-        )
-    if kind == "CapBoundError":
-        return CapBoundError(rec["message"], _stats_from_json(rec["stats"]))
-    raise ValueError(f"unknown plan-cache entry kind {kind!r}")
+    if rec.get("kind") == "fronts":
+        return {g: FrontStats(**s) for g, s in rec["stats"].items()}
+    raise ValueError(f"unknown plan-cache entry kind {rec.get('kind')!r}")
 
 
-_CACHE_FORMAT = 1
+#: 2 since the measurement-only cache: format-1 sidecars held decision
+#: objects (plans, refusals) and are ignored, never misread
+_CACHE_FORMAT = 2
 
 #: sidecar entry cap (r15, ROADMAP r16 #4 pulled forward): entries are
 #: ~1 KB and structurally self-invalidating, but a deployment pointing
@@ -640,7 +606,7 @@ def _fresh(rec: dict) -> bool:
 
 def _read_sidecar_records(path: str) -> list[dict]:
     """Raw (still-JSON) records of a sidecar file, format-checked but not
-    parsed into decision objects — the merge half of :func:`_persist`
+    parsed into measurements — the merge half of :func:`_persist`
     works on these so fields like ``saved_at`` survive a rewrite."""
     import json
 
@@ -663,7 +629,7 @@ def _read_sidecar(path: str) -> dict[tuple, object]:
     for rec in _read_sidecar_records(path):
         # per-entry parse (ADVICE r15): one malformed or unknown-kind
         # record (e.g. written by a newer version) skips THAT record,
-        # not the whole file — older readers keep every decision they
+        # not the whole file — older readers keep every entry they
         # can still understand
         try:
             if not _fresh(rec):
@@ -687,7 +653,7 @@ def _load_persisted_once() -> None:
     for k, v in loaded.items():
         _PLAN_CACHE.setdefault(k, v)  # in-memory (fresher) entries win
     if loaded:
-        log.info("plan cache: loaded %d persisted decision(s) from %s",
+        log.info("plan cache: loaded %d persisted measurement(s) from %s",
                  len(loaded), path)
 
 
@@ -739,6 +705,7 @@ def _persist(key: tuple, entry) -> None:
         log.warning("plan cache: could not persist to %s (%s)", path, e)
 
 
+
 def corpus_fingerprint(sf_dir: str, table: str = "documents"):
     """Stat-based fingerprint of one parquet table (file or directory of
     part files). Walks the FULL tree (ADVICE r14): a partitioned layout
@@ -768,240 +735,20 @@ def corpus_fingerprint(sf_dir: str, table: str = "documents"):
 
 
 def cached_plan(key, compute):
-    """Memoized pre-flight: return/compute the decision under ``key``
-    (None bypasses the cache entirely). Cached :class:`SimhashPlan`
-    entries drop their session-bound ``signatures`` frame — a hit rebuilds
-    signatures lazily inside the pair join, which is exactly the one-pass
-    plan the uncached query runs; the saving is the measurement shuffle,
-    not the signature math. Cached refusals re-raise the stored
-    :class:`CapBoundError`. With ``$SPARK_GRAFT_PLAN_CACHE`` set,
-    decisions also round-trip a JSON sidecar, so a NEW process on the
-    unchanged corpus skips the measurement too (r15, VERDICT r14 #2)."""
-    if key is not None:
-        _load_persisted_once()
-    if key is not None and key in _PLAN_CACHE:
-        hit = _PLAN_CACHE[key]
+    """Memoized pre-flight measurement: return/compute the value under
+    ``key`` (None bypasses the cache entirely). With
+    ``$SPARK_GRAFT_PLAN_CACHE`` set, ``{geometry: FrontStats}`` values
+    also round-trip a JSON sidecar, so a NEW process on the unchanged
+    corpus skips the measurement too (r15, VERDICT r14 #2)."""
+    if key is None:
+        return compute()
+    _load_persisted_once()
+    if key in _PLAN_CACHE:
         log.info("calibration cache hit for %s", key[0])
-        if isinstance(hit, CapBoundError):
-            raise hit
-        return hit
-    try:
-        plan = compute()
-    except CapBoundError as e:
-        if key is not None:
-            _PLAN_CACHE[key] = e
-            _persist(key, e)
-        raise
-    if key is not None:
-        stored = plan
-        if isinstance(plan, SimhashPlan) and plan.signatures is not None:
-            stored = dataclasses.replace(plan, signatures=None)
-        _PLAN_CACHE[key] = stored
-        _persist(key, stored)
-    return plan
-
-
-# ---------------------------------------------- generic single-front plan
-#
-# r14 (VERDICT r13 #5): the simhash pre-flight above juggles two complete
-# pigeonhole geometries; every OTHER capped pair generator — minhash-LSH
-# bands, prefix-filter buckets, containment postings — has exactly one
-# front, so its pre-flight is the simpler ladder below. Their caps were
-# measured never to bind off clone corpora, which is why calibrate= stays
-# OFF by default there (zero added cost on the registered path); turning
-# it on buys the same contract the simhash family has: proceed on a
-# proven-exact plan or refuse by name — never a silent capped subset.
-
-
-@dataclass
-class FrontPlan:
-    """Outcome of :func:`calibrate_capped_front`. ``decision`` is
-    ``"default"`` (cap measured not to bind — registered behavior, exact)
-    or ``"exact_uncapped"`` (cap binds; the measured uncapped in-bucket
-    workload fits the budget, so run uncapped — exact). Over-budget binds
-    raise :class:`CapBoundError` instead."""
-
-    decision: str
-    max_bucket_size: int | None
-    reason: str
-    stats: dict[str, FrontStats]
-
-    def as_dict(self) -> dict:
-        return {
-            "decision": self.decision,
-            "max_bucket_size": self.max_bucket_size,
-            "reason": self.reason,
-            "fronts": {k: v.as_dict() for k, v in self.stats.items()},
-        }
-
-
-def calibrate_capped_front(
-    keys: DataFrame,
-    default_cap: int,
-    name: str,
-    pair_budget: int | None = None,
-    escape_arg: str = "max_bucket_size",
-    bytes_per_candidate: int | None = None,
-    byte_budget: int | None = None,
-) -> FrontPlan:
-    """Single-front cap pre-flight: one linear groupBy over ``keys`` (one
-    row per (doc, bucket-key) membership — no pair expansion), then decide.
-
-    ``uncapped_pairs`` is the in-bucket candidate workload sum(n*(n-1)/2)
-    — for the prefix/containment fronts an UPPER bound on real candidates
-    (their joins are length-filtered / asymmetric), so a proceed decision
-    is always safe and a refusal is conservative by at most that slack.
-    ``escape_arg`` names the family's uncapped knob in the refusal text
-    (``max_bucket_size`` / ``max_posting_size``).
-
-    Budget model (r15, VERDICT r14 #4): with ``bytes_per_candidate`` set
-    (the verified families pass :data:`STAGED_CANDIDATE_BYTES` — a
-    constant, since staged verification moved the array payloads off the
-    candidate shuffle) the proceed test is BYTES-weighted:
-    ``uncapped_pairs * bytes_per_candidate <= byte_budget`` (default
-    :data:`DEFAULT_CANDIDATE_BYTE_BUDGET`). Without it, the r12 count
-    test against ``pair_budget`` applies. The count proxy mis-ranked
-    corpora by set length — a short-set corpus with 80M cheap candidates
-    refused while a long-set one with 40M expensive candidates
-    proceeded; bytes are the thing the node actually spills."""
-    budget_note = ""
-    if byte_budget is None and bytes_per_candidate is not None:
-        # runtime-resolved: executor-count-scaled AND floored by measured
-        # spill-dir headroom (r16, VERDICT r15 #4) — the provenance string
-        # rides every decision/refusal so the artifact names the measured
-        # free space alongside the workload arithmetic
-        rb = resolve_byte_budget(keys.sparkSession)
-        byte_budget, budget_note = rb.total, rb.provenance
-    return front_plan_from_stats(
-        measure_front(keys, default_cap, name),
-        pair_budget=pair_budget,
-        escape_arg=escape_arg,
-        bytes_per_candidate=bytes_per_candidate,
-        byte_budget=byte_budget,
-        budget_note=budget_note,
-    )
-
-
-def front_plan_from_stats(
-    s: FrontStats,
-    pair_budget: int | None = None,
-    escape_arg: str = "max_bucket_size",
-    bytes_per_candidate: int | None = None,
-    byte_budget: int | None = None,
-    budget_note: str = "",
-) -> FrontPlan:
-    """The DECISION half of :func:`calibrate_capped_front`, factored out
-    (r16, ADVICE r15 medium) so the registered byte-model paths can cache
-    the budget-invariant MEASUREMENT (``s``) and re-derive the decision
-    against the CURRENT budget — a proceed computed under an N-executor
-    budget must never be served verbatim to a single-node process on the
-    same corpus (or vice versa for refusals). Pure local arithmetic: no
-    Spark job, so re-deriving on every cache hit costs nothing.
-    ``budget_note`` (the resolved-budget provenance) is appended to the
-    decision/refusal text."""
-    if pair_budget is None:
-        pair_budget = DEFAULT_PAIR_BUDGET
-    name, default_cap = s.name, s.default_cap
-    note = f" [{budget_note}]" if budget_note else ""
-    stats = {name: s}
-    if not s.binds:
-        reason = (
-            f"default cap {default_cap} does not bind (measured max bucket "
-            f"{s.max_bucket}) — registered default is exact here"
-        )
-        log.info("%s calibration: %s", name, reason)
-        return FrontPlan("default", default_cap, reason, stats)
-    if bytes_per_candidate is not None:
-        if byte_budget is None:
-            byte_budget = DEFAULT_CANDIDATE_BYTE_BUDGET
-        workload = s.uncapped_pairs * bytes_per_candidate
-        if workload <= byte_budget:
-            reason = (
-                f"default cap {default_cap} BINDS on this corpus (max bucket "
-                f"{s.max_bucket}, {s.oversized} oversized buckets) — running "
-                f"UNCAPPED instead: the exact workload {s.uncapped_pairs:,} "
-                f"candidates x {bytes_per_candidate} B = "
-                f"{workload / (1 << 30):.1f} GiB fits the byte budget "
-                f"({byte_budget / (1 << 30):.0f} GiB); output stays "
-                f"oracle-exact{note}"
-            )
-            log.warning("%s calibration: %s", name, reason)
-            return FrontPlan("exact_uncapped", None, reason, stats)
-        raise CapBoundError(
-            f"{name} default cap {default_cap} BINDS on this corpus and the "
-            f"exact plan does not fit the candidate byte budget: "
-            f"{s.uncapped_pairs:,} candidates x {bytes_per_candidate} B = "
-            f"{workload / (1 << 30):.1f} GiB > {byte_budget / (1 << 30):.0f} "
-            f"GiB (max bucket {s.max_bucket}, {s.oversized} oversized)"
-            f"{note}. "
-            "Refusing rather than silently emitting a capped subset. "
-            "Escapes: raise pair_budget (a count budget overrides the byte "
-            f"model) and re-calibrate; pass {escape_arg}=None to accept the "
-            f"quadratic exact workload; or pass an explicit non-default "
-            f"{escape_arg} to accept DOCUMENTED partial recall — under "
-            "calibrate=True the pre-flight then MEASURES the recall "
-            "(emitted-vs-total candidate workload) and proceeds with your "
-            "cap instead of refusing again.",
-            stats,
-        )
-    if s.uncapped_pairs <= pair_budget:
-        reason = (
-            f"default cap {default_cap} BINDS on this corpus (max bucket "
-            f"{s.max_bucket}, {s.oversized} oversized buckets) — running "
-            f"UNCAPPED instead: the exact in-bucket workload "
-            f"{s.uncapped_pairs:,} pairs fits the budget ({pair_budget:,}); "
-            "output stays oracle-exact"
-        )
-        log.warning("%s calibration: %s", name, reason)
-        return FrontPlan("exact_uncapped", None, reason, stats)
-    raise CapBoundError(
-        f"{name} default cap {default_cap} BINDS on this corpus and the "
-        f"exact plan does not fit pair_budget={pair_budget:,}: max bucket "
-        f"{s.max_bucket} ({s.oversized} oversized, {s.uncapped_pairs:,} "
-        "exact candidate pairs). Refusing rather than silently emitting a "
-        "capped subset. Escapes: raise pair_budget and re-calibrate; pass "
-        f"{escape_arg}=None to accept the quadratic exact workload; or "
-        f"pass an explicit non-default {escape_arg} to accept DOCUMENTED "
-        "partial recall — under calibrate=True the pre-flight then "
-        "MEASURES the recall (emitted-vs-total candidate workload) and "
-        "proceeds with your cap instead of refusing again.",
-        stats,
-    )
-
-
-def explicit_cap_plan(
-    keys: DataFrame, cap: int, name: str
-) -> FrontPlan:
-    """Pre-flight for a caller-EXPLICIT cap under ``calibrate=True``
-    (r15, ADVICE r14 medium): an explicit non-default cap is an accepted
-    partial-recall choice — the escape the refusal itself names — so this
-    path NEVER raises :class:`CapBoundError` (the old behavior re-refused
-    the caller's own escape, and with the decision cache the refusal
-    re-raised instantly: an infinite loop by instruction-following).
-    Instead it measures the front at the caller's cap and reports the
-    recall arithmetic: the capped in-bucket candidate workload vs the
-    uncapped total (an upper bound on emitted candidates for the
-    length-filtered families), so "accepted partial recall" comes with
-    the measured number, not a shrug (VERDICT r14 #8)."""
-    s = measure_front(keys, cap, name)
-    stats = {name: s}
-    if not s.binds:
-        reason = (
-            f"explicit cap {cap} does not bind (measured max bucket "
-            f"{s.max_bucket}) — output is exact here"
-        )
-        log.info("%s calibration (explicit cap): %s", name, reason)
-    else:
-        pct = 100.0 * s.capped_pairs / max(s.uncapped_pairs, 1)
-        reason = (
-            f"explicit cap {cap} BINDS (max bucket {s.max_bucket}, "
-            f"{s.oversized} oversized buckets): proceeding with the "
-            f"caller's accepted partial recall — in-bucket candidate "
-            f"workload {s.capped_pairs:,} of {s.uncapped_pairs:,} "
-            f"({pct:.1f}%)"
-        )
-        log.warning("%s calibration (explicit cap): %s", name, reason)
-    return FrontPlan("explicit_capped", cap, reason, stats)
+        return _PLAN_CACHE[key]
+    value = _PLAN_CACHE[key] = compute()
+    _persist(key, value)
+    return value
 
 
 # ------------------------------------------------------------- CLI fronts
@@ -1010,42 +757,41 @@ def explicit_cap_plan(
 def standard_fronts(spark, sf_dir: str):
     """(name, default_cap, key-DataFrame builder) for every capped front
     in the engine, over the documents table at ``sf_dir`` — the
-    measurement matrix ``tools/cap_calibrate.py`` reports. Builders are
-    lazy so the CLI can flush per-front."""
+    measurement matrix ``tools/cap_calibrate.py`` reports. Each builder
+    is the family's own front-key builder, the one its ``calibrate=True``
+    pre-flight measures; builders are lazy so the CLI can flush
+    per-front."""
     from video_data_pipeline_spark.queries.dedup import (
         DEFAULT_LSH_MAX_BUCKET_SIZE,
         DEFAULT_SIMHASH_MAX_BUCKET_SIZE,
+        band_front,
+        chunk_keys,
+        combo_keys,
         exact_dup_representatives,
         minhash_bands,
-        simhash_chunks,
-        simhash_combo_keys,
+        pigeonhole_front,
+        simhash_signatures,
     )
     from video_data_pipeline_spark.queries.registry import table
     from video_data_pipeline_spark.queries.simjoin import (
         DEFAULT_MAX_BUCKET_SIZE,
         DEFAULT_MAX_POSTING_SIZE,
         hashed_shingle_sets,
-        rarity_prefix_rows,
+        posting_front,
+        prefix_front,
     )
 
     docs = table(spark, sf_dir, "documents")
     reps = exact_dup_representatives(docs)
     sets = hashed_shingle_sets(docs)
-
-    def prefix_tokens():
-        # the SAME rarity-ordered prefix rows prefix_filter_pairs joins
-        # (shared builder since r14 — measurement can't drift from the join)
-        return rarity_prefix_rows(sets).select(F.col("h").alias("key"))
-
     return [
         ("minhash_bands", DEFAULT_LSH_MAX_BUCKET_SIZE,
-         lambda: minhash_bands(reps).select(
-             F.concat_ws("/", "band_idx", "band_key").alias("key"))),
-        ("prefix_buckets", DEFAULT_MAX_BUCKET_SIZE, prefix_tokens),
+         lambda: band_front(minhash_bands(reps))),
+        ("prefix_buckets", DEFAULT_MAX_BUCKET_SIZE, lambda: prefix_front(sets)),
         ("containment_postings", DEFAULT_MAX_POSTING_SIZE,
-         lambda: sets.select(F.explode("hs").alias("key"))),
+         lambda: posting_front(sets)),
         ("simhash_chunks", DEFAULT_SIMHASH_MAX_BUCKET_SIZE,
-         lambda: _key(simhash_chunks(reps))),
+         lambda: pigeonhole_front(chunk_keys(simhash_signatures(reps)))),
         ("simhash_combos", DEFAULT_SIMHASH_MAX_BUCKET_SIZE,
-         lambda: _key(simhash_combo_keys(reps))),
+         lambda: pigeonhole_front(combo_keys(simhash_signatures(reps)))),
     ]

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from video_data_pipeline_spark.calibrate import observe_cap
 from video_data_pipeline_spark.checkpoint import checkpoint_frame
 from video_data_pipeline_spark.queries.registry import query, spread, table
 
@@ -204,6 +205,13 @@ def minhash_bands(docs):
     return sig.select("doc_id", F.posexplode(band_keys).alias("band_idx", "band_key"))
 
 
+def band_front(bands):
+    """(doc_id, band_idx, band_key) → the one-column ``key`` frame of the
+    band-bucket front (one row per bucket membership): what the minhash
+    cap pre-flight and ``calibrate.standard_fronts`` measure."""
+    return bands.select(F.concat_ws("/", "band_idx", "band_key").alias("key"))
+
+
 def _spark_shingle_hashes(spark, sf_dir):
     return shingle_hashes(table(spark, sf_dir, "documents"))
 
@@ -274,37 +282,15 @@ def lsh_pairs_from_bands(bands, max_bucket_size: int | None = None, observation=
     sliced past the cap emit NO pairs from that bucket — a dropped doc is
     merged downstream only if another band's bucket witnesses it. Pass a
     ``pyspark.sql.Observation`` to get per-run telemetry after the first
-    action: n_buckets / oversized_buckets / max_bucket_size_seen."""
+    action (:func:`calibrate.observe_cap` — auto-attached when capped)."""
     buckets = (
         bands.groupBy("band_idx", "band_key")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
         .where(F.size("ids") > 1)
     )
-    if observation is None and max_bucket_size is not None:
-        # capped with no caller-supplied Observation: auto-attach a named
-        # one so the session-level listener (telemetry.py, r13) can warn
-        # when the cap BINDS — a capped subset must never read as exact
-        from video_data_pipeline_spark.telemetry import cap_observation_name
-
-        observation = cap_observation_name("minhash_bands")
-    if observation is not None:
-        cap = max_bucket_size if max_bucket_size is not None else 1 << 62
-        buckets = buckets.observe(
-            observation,
-            F.count(F.lit(1)).alias("n_buckets"),
-            F.sum((F.size("ids") > cap).cast("long")).alias("oversized_buckets"),
-            F.max(F.size("ids")).alias("max_bucket_size_seen"),
-            # recall arithmetic (r15, VERDICT r14 #8): a capped run
-            # self-reports "emitted ~X of Y in-bucket candidates", not
-            # just that the cap bound; integer div (the measure_front
-            # precision argument)
-            F.expr("sum(size(ids) * (size(ids) - 1) div 2)").alias(
-                "uncapped_candidate_pairs"
-            ),
-            F.expr(
-                f"sum(least(size(ids), {cap}) * (least(size(ids), {cap}) - 1) div 2)"
-            ).alias("capped_candidate_pairs"),
-        )
+    buckets = observe_cap(
+        buckets, "minhash_bands", max_bucket_size, "size(ids)", observation
+    )
     if max_bucket_size is not None:
         buckets = buckets.select(
             "band_idx", "band_key", F.slice("ids", 1, max_bucket_size).alias("ids")
@@ -364,55 +350,28 @@ def q_minhash_lsh_pairs(
     survivors, triangles, pagerank, LPA — inherits the guard through this
     entry). ``max_bucket_size=None`` is the exactness escape.
 
-    ``calibrate=True`` (r14, VERDICT r13 #5) runs the generic cap
-    pre-flight first — ONE linear groupBy over the band front, no pair
-    expansion — and proceeds with the default (measured not to bind →
-    exact), runs uncapped where the measured in-bucket workload fits
-    ``pair_budget`` (exact), or raises
+    ``calibrate=True`` (r14, VERDICT r13 #5) runs the cap pre-flight
+    (:func:`calibrate.preflight`) first — ONE linear groupBy over the band
+    front, no pair expansion — and proceeds with the default (measured
+    not to bind → exact), runs uncapped where the measured in-bucket
+    workload fits ``pair_budget`` (exact), or raises
     :class:`~video_data_pipeline_spark.calibrate.CapBoundError` naming
     the boundary. An explicit ``max_bucket_size=None`` skips the
-    pre-flight: the caller already chose the uncapped exact join (the
-    simhash family's ADVICE-r13 contract)."""
-    reps = exact_dup_representatives(table(spark, sf_dir, "documents"))
+    pre-flight: the caller already chose the uncapped exact join."""
+    bands = minhash_bands(exact_dup_representatives(table(spark, sf_dir, "documents")))
     if calibrate and max_bucket_size is not None:
-        from video_data_pipeline_spark.calibrate import (
-            DEFAULT_PAIR_BUDGET,
-            cached_plan,
-            calibrate_capped_front,
-            corpus_fingerprint,
-            explicit_cap_plan,
-        )
+        from video_data_pipeline_spark.calibrate import preflight
 
-        budget = DEFAULT_PAIR_BUDGET if pair_budget is None else pair_budget
         # lazy checkpoint: the banding front runs ONCE across the
-        # measurement agg and the pair join (the calibrate_simhash
-        # signature-reuse pattern); on a decision-cache hit the
-        # checkpoint is just a no-op wrapper around the single join pass
-        bands = checkpoint_frame(minhash_bands(reps))
-        front = bands.select(
-            F.concat_ws("/", "band_idx", "band_key").alias("key")
-        )
-        fp = corpus_fingerprint(sf_dir)
-        key = None if fp is None else ("minhash_bands", fp, max_bucket_size, budget)
-        if max_bucket_size != DEFAULT_LSH_MAX_BUCKET_SIZE:
-            # explicit non-default cap = accepted partial recall (r15,
-            # ADVICE r14): measure + report, never refuse the caller's
-            # own escape (see calibrate.explicit_cap_plan)
-            compute = lambda: explicit_cap_plan(  # noqa: E731
-                front, max_bucket_size, "minhash_bands"
-            )
-        else:
-            compute = lambda: calibrate_capped_front(  # noqa: E731
-                front, max_bucket_size, "minhash_bands", pair_budget=budget
-            )
-        plan = cached_plan(key, compute)
-        return lsh_pairs_from_bands(
-            bands, max_bucket_size=plan.max_bucket_size, observation=observation
-        )
+        # measurement agg and the pair join
+        bands = checkpoint_frame(bands)
+        max_bucket_size = preflight(
+            "minhash_bands", {"minhash_bands": lambda: band_front(bands)},
+            max_bucket_size, DEFAULT_LSH_MAX_BUCKET_SIZE,
+            pair_budget=pair_budget, sf_dir=sf_dir,
+        ).max_bucket_size
     return lsh_pairs_from_bands(
-        minhash_bands(reps),
-        max_bucket_size=max_bucket_size,
-        observation=observation,
+        bands, max_bucket_size=max_bucket_size, observation=observation
     )
 
 
@@ -593,6 +552,14 @@ def combo_keys(sig):
     ).select("doc_id", "simhash", F.col("k.c").alias("c"), F.col("k.chunk").alias("chunk"))
 
 
+def pigeonhole_front(keys):
+    """(doc_id, simhash, c, chunk) keys of either geometry
+    (:func:`chunk_keys` / :func:`combo_keys`) → the one-column ``key``
+    frame of that pigeonhole front: what the simhash cap pre-flight and
+    ``calibrate.standard_fronts`` measure."""
+    return keys.select(F.concat_ws("/", "c", "chunk").alias("key"))
+
+
 def simhash_combo_keys(docs):
     """(doc_id, text, ...) → (doc_id, simhash, c, chunk): the 60-bit
     signature keyed by every 3-of-6 ten-bit chunk COMBINATION — c is the
@@ -664,68 +631,33 @@ def q_simhash_near_pairs(
     :class:`~video_data_pipeline_spark.calibrate.CapBoundError` naming
     the boundary and the workload estimate — a capped-subset answer is
     never silently produced on a corpus where the default binds. The
-    decision is memoized by corpus fingerprint + knobs (r14), so repeat
-    runs on an unchanged table skip the measurement shuffle."""
+    measurement is memoized by corpus fingerprint + cap (r14), so repeat
+    runs on an unchanged table skip the measurement shuffle. The 60-bit
+    signature is computed ONCE and lazily checkpointed, so the md5 pass
+    runs once across both fronts and the pair join. An explicit
+    ``max_bucket_size=None`` skips the pre-flight."""
     docs = table(spark, sf_dir, "documents")
-    if calibrate:
-        from video_data_pipeline_spark.calibrate import (
-            DEFAULT_PAIR_BUDGET,
-            cached_plan,
-            calibrate_simhash,
-            corpus_fingerprint,
-            explicit_cap_plan,
-        )
+    geometry, sig = "chunks", None
+    if calibrate and max_bucket_size is not None:
+        from video_data_pipeline_spark.calibrate import preflight
 
-        budget = DEFAULT_PAIR_BUDGET if pair_budget is None else pair_budget
-        # decision cache (r14): keyed by the corpus fingerprint + knobs,
-        # so a repeat run on the unchanged table skips the measurement
-        # shuffle (and a cached refusal re-raises without re-measuring)
-        fp = corpus_fingerprint(sf_dir)
-        key = None if fp is None else ("simhash", fp, max_bucket_size, budget)
-        if (
-            max_bucket_size is not None
-            and max_bucket_size != DEFAULT_SIMHASH_MAX_BUCKET_SIZE
-        ):
-            # explicit non-default cap = accepted partial recall (r15,
-            # ADVICE r14): measure + report on the chunks front (the
-            # capped default's geometry), then proceed with the caller's
-            # cap — never refuse the escape they already took
-            sig = checkpoint_frame(
-                simhash_signatures(exact_dup_representatives(docs))
-            )
-            cached_plan(
-                key,
-                lambda: explicit_cap_plan(
-                    chunk_keys(sig).select(
-                        F.concat_ws("/", "c", "chunk").alias("key")
-                    ),
-                    max_bucket_size,
-                    "simhash_chunks",
-                ),
-            )
-            return simhash_near_pairs_capped(
-                docs,
-                max_bucket_size=max_bucket_size,
-                observation=observation,
-                signatures=sig,
-            )
-        plan = cached_plan(
-            key,
-            lambda: calibrate_simhash(
-                docs, pair_budget=budget, default_cap=max_bucket_size
-            ),
+        sig = checkpoint_frame(simhash_signatures(exact_dup_representatives(docs)))
+        plan = preflight(
+            "simhash",
+            {
+                "chunks": lambda: pigeonhole_front(chunk_keys(sig)),
+                "combos": lambda: pigeonhole_front(combo_keys(sig)),
+            },
+            max_bucket_size, DEFAULT_SIMHASH_MAX_BUCKET_SIZE,
+            pair_budget=pair_budget, sf_dir=sf_dir,
         )
-        return simhash_near_pairs_capped(
-            docs,
-            max_bucket_size=plan.max_bucket_size,
-            observation=observation,
-            geometry=plan.geometry,
-            signatures=plan.signatures,
-        )
+        max_bucket_size, geometry = plan.max_bucket_size, plan.geometry
     return simhash_near_pairs_capped(
         docs,
         max_bucket_size=max_bucket_size,
         observation=observation,
+        geometry=geometry,
+        signatures=sig,
     )
 
 
@@ -805,8 +737,8 @@ def simhash_near_pairs_capped(
     (transitivity merges those), but members sliced past the cap emit NO
     pairs from that bucket — a dropped doc is merged only if another
     chunk's bucket witnesses it. The hamming residual filters after pair
-    generation. Pass an ``Observation`` for n_buckets /
-    oversized_buckets / max_bucket_size_seen telemetry.
+    generation. Pass an ``Observation`` for the cap telemetry
+    (:func:`calibrate.observe_cap`, auto-attached when capped).
 
     ``signatures`` short-circuits the signature computation with a
     precomputed (doc_id, simhash) frame — the calibration pre-flight
@@ -879,29 +811,9 @@ def simhash_near_pairs_capped(
     # query measured 0.70× but returned None metrics — rejected;
     # BENCH_SIMHASH_FLAT_CKPT_AB_r16.json records both).
     buckets = checkpoint_frame(buckets)
-    if observation is None and max_bucket_size is not None:
-        # see lsh_pairs_from_bands: self-announcing cap engagement
-        from video_data_pipeline_spark.telemetry import cap_observation_name
-
-        observation = cap_observation_name(f"simhash_{geometry}")
-    observed = buckets
-    if observation is not None:
-        cap = max_bucket_size if max_bucket_size is not None else 1 << 62
-        observed = buckets.observe(
-            observation,
-            F.count(F.lit(1)).alias("n_buckets"),
-            F.sum((F.col("n_uncapped") > cap).cast("long")).alias(
-                "oversized_buckets"
-            ),
-            F.max("n_uncapped").alias("max_bucket_size_seen"),
-            # recall arithmetic (r15, VERDICT r14 #8) — see lsh_pairs_from_bands
-            F.expr("sum(n_uncapped * (n_uncapped - 1) div 2)").alias(
-                "uncapped_candidate_pairs"
-            ),
-            F.expr(
-                f"sum(least(n_uncapped, {cap}) * (least(n_uncapped, {cap}) - 1) div 2)"
-            ).alias("capped_candidate_pairs"),
-        )
+    observed = observe_cap(
+        buckets, f"simhash_{geometry}", max_bucket_size, "n_uncapped", observation
+    )
 
     # pair generation: explode the (pre-capped) members back to rows and
     # equi-join on the chunk key — NOT in-bucket array combinatorics. The

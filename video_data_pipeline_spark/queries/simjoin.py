@@ -51,8 +51,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from video_data_pipeline_spark.calibrate import observe_cap
 from video_data_pipeline_spark.checkpoint import checkpoint_frame
-
 from video_data_pipeline_spark.queries.dedup import (
     _DUCK_REPS,
     _DUCK_SHINGLES,
@@ -326,9 +326,22 @@ def rarity_prefix_rows(sets):
     ).select("doc_id", "n", "h")
 
 
+def prefix_front(sets):
+    """(doc_id, n, hs) → the one-column ``key`` frame of the prefix-bucket
+    front (one row per rarity-prefix token): what the prefix cap
+    pre-flight and ``calibrate.standard_fronts`` measure."""
+    return rarity_prefix_rows(sets).select(F.col("h").alias("key"))
+
+
+def posting_front(sets):
+    """(doc_id, n, hs) → the one-column ``key`` frame of the containment
+    posting front (one row per shingle membership): what the containment
+    cap pre-flight and ``calibrate.standard_fronts`` measure."""
+    return sets.select(F.explode("hs").alias("key"))
+
+
 def prefix_filter_pairs(
-    docs, max_bucket_size=None, observation=None, sets=None, staged_verify=None,
-    prefix=None,
+    docs, max_bucket_size=None, observation=None, sets=None, staged_verify=None
 ):
     """Core of :func:`q_prefix_filter_join`, parameterized with the family's
     100 TB hot-bucket guard (the ``lsh_pairs_from_bands`` /
@@ -348,8 +361,8 @@ def prefix_filter_pairs(
     members the survivors keep pairing among themselves, so downstream
     connected-components still merges capped cliques transitively through
     the kept members (the lsh_pairs_from_bands argument). Pass an
-    ``Observation`` for n_buckets / oversized_buckets /
-    max_bucket_size_seen telemetry — the metric that tells an operator the
+    ``Observation`` for the cap telemetry (:func:`calibrate.observe_cap`,
+    auto-attached when capped) — the metric that tells an operator the
     cap actually engaged.
 
     The registered query delegates here with ``DEFAULT_MAX_BUCKET_SIZE``
@@ -373,17 +386,11 @@ def prefix_filter_pairs(
     # ``sets`` so measurement and join share one checkpoint.
     if sets is None:
         sets = hashed_shingle_sets(docs)
-    # ``prefix`` short-circuits the rarity-prefix derivation. NOT used by
-    # the registered queries (r17, VERDICT r16 #6 revisit — REJECTED):
-    # sharing a checkpointed prefix frame between the calibrated
-    # pre-flight and this join measured 0.82x at sf0.1 but ~2x the task
-    # time at the sfp10 cap-binding scale (deterministic across two
-    # same-epoch interleaved pairs, PROBE_PREFIX_SHARE_SFP10_r17.json) —
-    # the same family of failure as the r16 grouped-bucket sharing
-    # revert. Kept as a parameter so tools/exp_prefix_cal_share.py can
-    # reproduce the rejected composition.
-    if prefix is None:
-        prefix = rarity_prefix_rows(sets)
+    # the rarity prefix is re-derived here rather than shared with the
+    # calibrated pre-flight's front: sharing a checkpointed prefix frame
+    # measured 0.82x at sf0.1 but ~2x the task time at the sfp10
+    # cap-binding scale (r17, PROBE_PREFIX_SHARE_SFP10_r17.json)
+    prefix = rarity_prefix_rows(sets)
     # bucketed pair generation WITH the PPJoin length filter evaluated
     # inside the bucket lambda: J >= τ forces τ·max(n) <= min(n), so most
     # cross-size pairs never materialize (measured: 299k -> far fewer
@@ -394,31 +401,11 @@ def prefix_filter_pairs(
         .agg(F.sort_array(F.collect_list(F.struct("n", "doc_id"))).alias("xs"))
         .where(F.size("xs") > 1)
     )
-    if observation is None and max_bucket_size is not None:
-        # capped with no caller-supplied Observation: auto-attach a named
-        # one so the session-level listener (telemetry.py, r13) can warn
-        # when the cap BINDS — a capped subset must never read as exact
-        from video_data_pipeline_spark.telemetry import cap_observation_name
-
-        observation = cap_observation_name("prefix_buckets")
-    if observation is not None:
-        cap = max_bucket_size if max_bucket_size is not None else 1 << 62
-        buckets = buckets.observe(
-            observation,
-            F.count(F.lit(1)).alias("n_buckets"),
-            F.sum((F.size("xs") > cap).cast("long")).alias("oversized_buckets"),
-            F.max(F.size("xs")).alias("max_bucket_size_seen"),
-            # recall arithmetic (r15, VERDICT r14 #8): for this family
-            # the in-bucket workload UPPER-BOUNDS emitted candidates
-            # (the in-lambda length filter prunes further) — see
-            # lsh_pairs_from_bands for the exact-count families
-            F.expr("sum(size(xs) * (size(xs) - 1) div 2)").alias(
-                "uncapped_candidate_pairs"
-            ),
-            F.expr(
-                f"sum(least(size(xs), {cap}) * (least(size(xs), {cap}) - 1) div 2)"
-            ).alias("capped_candidate_pairs"),
-        )
+    # for this family the in-bucket workload UPPER-BOUNDS emitted
+    # candidates (the in-lambda length filter prunes further)
+    buckets = observe_cap(
+        buckets, "prefix_buckets", max_bucket_size, "size(xs)", observation
+    )
     if max_bucket_size is not None:
         buckets = buckets.select(
             "h", F.slice("xs", 1, max_bucket_size).alias("xs")
@@ -498,77 +485,28 @@ def q_prefix_filter_join(
     NOT bind on the standard fixtures).
 
     ``calibrate=True`` (r14, VERDICT r13 #5) measures the prefix-bucket
-    front first — one linear groupBy, no pair expansion — then proceeds
-    exact (default or uncapped-within-``pair_budget``) or raises
-    ``CapBoundError`` by name. An explicit ``max_bucket_size=None`` skips
-    the pre-flight (uncapped was already chosen)."""
+    front first (:func:`calibrate.preflight`) — one linear groupBy, no
+    pair expansion — then proceeds exact (default, or uncapped within the
+    bytes-weighted staged-verify budget; an explicit ``pair_budget``
+    selects count semantics) or raises ``CapBoundError`` by name. An
+    explicit ``max_bucket_size=None`` skips the pre-flight (uncapped was
+    already chosen)."""
     docs = table(spark, sf_dir, "documents")
+    sets = None
     if calibrate and max_bucket_size is not None:
         from video_data_pipeline_spark.calibrate import (
             STAGED_CANDIDATE_BYTES,
-            cached_plan,
-            calibrate_capped_front,
-            corpus_fingerprint,
-            explicit_cap_plan,
-            front_plan_from_stats,
-            measure_front,
-            resolve_byte_budget,
+            preflight,
         )
 
         sets = hashed_shingle_sets(docs)  # lazily checkpointed, shared
-        front = rarity_prefix_rows(sets).select(F.col("h").alias("key"))
-        fp = corpus_fingerprint(sf_dir)
-        if max_bucket_size != DEFAULT_MAX_BUCKET_SIZE:
-            # explicit non-default cap = accepted partial recall (r15,
-            # ADVICE r14): measure + report, never refuse the caller's
-            # own escape (see calibrate.explicit_cap_plan)
-            key = (
-                None if fp is None
-                else ("prefix_buckets", fp, max_bucket_size, pair_budget)
-            )
-            plan = cached_plan(key, lambda: explicit_cap_plan(
-                front, max_bucket_size, "prefix_buckets"
-            ))
-        elif pair_budget is None:
-            # bytes-weighted workload model (r15, VERDICT r14 #4): staged
-            # verification made per-candidate shuffle bytes a CONSTANT
-            # (STAGED_CANDIDATE_BYTES — summaries, not arrays), so the
-            # default proceed test budgets candidates x bytes. The cache
-            # holds the budget-INVARIANT measurement only (r16, ADVICE r15
-            # medium): the byte budget resolves at runtime (executor
-            # count, measured disk headroom), so a proceed/refusal from an
-            # N-executor process must not be replayed verbatim into a
-            # single-node one — the decision re-derives here, locally,
-            # against THIS process's budget on every hit
-            key = None if fp is None else ("prefix_front", fp, max_bucket_size)
-            stats = cached_plan(key, lambda: measure_front(
-                front, max_bucket_size, "prefix_buckets"
-            ))
-            bb = resolve_byte_budget(spark)
-            plan = front_plan_from_stats(
-                stats,
-                bytes_per_candidate=STAGED_CANDIDATE_BYTES,
-                byte_budget=bb.total,
-                budget_note=bb.provenance,
-            )
-        else:
-            # explicit pair_budget keeps the count semantics (CLI/probes);
-            # the budget is in the key, so the cached decision is sound
-            key = (
-                None if fp is None
-                else ("prefix_buckets", fp, max_bucket_size, pair_budget)
-            )
-            plan = cached_plan(key, lambda: calibrate_capped_front(
-                front, max_bucket_size, "prefix_buckets", pair_budget=pair_budget
-            ))
-        return prefix_filter_pairs(
-            docs, max_bucket_size=plan.max_bucket_size,
-            observation=observation, sets=sets,
-        )
+        max_bucket_size = preflight(
+            "prefix_buckets", {"prefix_buckets": lambda: prefix_front(sets)},
+            max_bucket_size, DEFAULT_MAX_BUCKET_SIZE, pair_budget=pair_budget,
+            bytes_per_candidate=STAGED_CANDIDATE_BYTES, sf_dir=sf_dir,
+        ).max_bucket_size
     return prefix_filter_pairs(
-        docs,
-        max_bucket_size=max_bucket_size,
-        observation=observation,
+        docs, max_bucket_size=max_bucket_size, observation=observation, sets=sets
     )
 
 
@@ -727,79 +665,31 @@ def q_containment_pairs(
     reproduces the uncapped form bit-for-bit.
 
     ``calibrate=True`` (r14, VERDICT r13 #5) measures the posting front
-    first — one linear groupBy over the exploded hash sets — then
-    proceeds exact (default or uncapped-within-``pair_budget``; the
-    measured in-posting workload upper-bounds the asymmetric join's real
-    candidates, so proceeding is always safe) or raises ``CapBoundError``
-    naming the boundary. An explicit ``max_posting_size=None`` skips the
-    pre-flight (uncapped was already chosen)."""
+    first (:func:`calibrate.preflight`) — one linear groupBy over the
+    exploded hash sets — then proceeds exact (default, or uncapped within
+    the bytes-weighted staged-verify budget; the measured in-posting
+    workload upper-bounds the asymmetric join's real candidates, so
+    proceeding is always safe) or raises ``CapBoundError`` naming the
+    boundary. An explicit ``max_posting_size=None`` skips the pre-flight
+    (uncapped was already chosen)."""
     docs = table(spark, sf_dir, "documents")
+    sets = None
     if calibrate and max_posting_size is not None:
         from video_data_pipeline_spark.calibrate import (
             STAGED_CANDIDATE_BYTES,
-            cached_plan,
-            calibrate_capped_front,
-            corpus_fingerprint,
-            explicit_cap_plan,
-            front_plan_from_stats,
-            measure_front,
-            resolve_byte_budget,
+            preflight,
         )
 
         sets = hashed_shingle_sets(docs)  # lazily checkpointed, shared
-        front = sets.select(F.explode("hs").alias("key"))
-        fp = corpus_fingerprint(sf_dir)
-        if max_posting_size != DEFAULT_MAX_POSTING_SIZE:
-            # explicit non-default cap = accepted partial recall (r15,
-            # ADVICE r14): measure + report, never refuse the caller's
-            # own escape (see calibrate.explicit_cap_plan)
-            key = (
-                None if fp is None
-                else ("containment_postings", fp, max_posting_size, pair_budget)
-            )
-            plan = cached_plan(key, lambda: explicit_cap_plan(
-                front, max_posting_size, "containment_postings"
-            ))
-        elif pair_budget is None:
-            # bytes-weighted model (r15) — see q_prefix_filter_join for
-            # why the cache holds the budget-invariant MEASUREMENT and the
-            # decision re-derives against this process's resolved budget
-            # (r16, ADVICE r15 medium)
-            key = (
-                None if fp is None
-                else ("containment_front", fp, max_posting_size)
-            )
-            stats = cached_plan(key, lambda: measure_front(
-                front, max_posting_size, "containment_postings"
-            ))
-            bb = resolve_byte_budget(spark)
-            plan = front_plan_from_stats(
-                stats,
-                bytes_per_candidate=STAGED_CANDIDATE_BYTES,
-                byte_budget=bb.total,
-                budget_note=bb.provenance,
-                escape_arg="max_posting_size",
-            )
-        else:
-            key = (
-                None if fp is None
-                else ("containment_postings", fp, max_posting_size, pair_budget)
-            )
-            plan = cached_plan(key, lambda: calibrate_capped_front(
-                front,
-                max_posting_size,
-                "containment_postings",
-                pair_budget=pair_budget,
-                escape_arg="max_posting_size",
-            ))
-        return containment_pairs_capped(
-            docs, max_posting_size=plan.max_bucket_size,
-            observation=observation, sets=sets,
-        )
+        max_posting_size = preflight(
+            "containment_postings",
+            {"containment_postings": lambda: posting_front(sets)},
+            max_posting_size, DEFAULT_MAX_POSTING_SIZE, pair_budget=pair_budget,
+            bytes_per_candidate=STAGED_CANDIDATE_BYTES,
+            escape_arg="max_posting_size", sf_dir=sf_dir,
+        ).max_bucket_size
     return containment_pairs_capped(
-        docs,
-        max_posting_size=max_posting_size,
-        observation=observation,
+        docs, max_posting_size=max_posting_size, observation=observation, sets=sets
     )
 
 
@@ -937,9 +827,10 @@ def containment_pairs_capped(
     postings are by construction corpus-wide boilerplate shingles, the
     weakest containment witnesses, while a genuinely contained document
     shares ceil(t·|A|) tokens and therefore carries many independent
-    witnesses. Pass an ``Observation`` for n_postings / oversized_postings
-    / max_posting_size_seen telemetry — the metric that tells an operator
-    the cap actually engaged (and which corpus shingle caused it to).
+    witnesses. Pass an ``Observation`` for the cap telemetry
+    (:func:`calibrate.observe_cap`: n_postings / oversized_postings /
+    max_posting_size_seen + the recall arithmetic, auto-attached when
+    capped) — the metric that tells an operator the cap actually engaged.
 
     Uncapped it equals the oracle SQL exactly (pytest-pinned); the
     registered query delegates here with ``DEFAULT_MAX_POSTING_SIZE``,
@@ -978,25 +869,11 @@ def containment_pairs_capped(
             .groupBy("h")
             .agg(F.sort_array(F.collect_list(F.struct("n", "doc_id"))).alias("ps"))
         )
-        if observation is None:
-            # see prefix_filter_pairs: self-announcing cap engagement
-            from video_data_pipeline_spark.telemetry import cap_observation_name
-
-            observation = cap_observation_name("containment_postings")
-        cap = max_posting_size if max_posting_size is not None else 1 << 62
-        postings = postings.observe(
-            observation,
-            F.count(F.lit(1)).alias("n_postings"),
-            F.sum((F.size("ps") > cap).cast("long")).alias("oversized_postings"),
-            F.max(F.size("ps")).alias("max_posting_size_seen"),
-            # recall arithmetic (r15, VERDICT r14 #8): in-posting workload
-            # upper-bounds the asymmetric join's real candidates
-            F.expr("sum(size(ps) * (size(ps) - 1) div 2)").alias(
-                "uncapped_candidate_pairs"
-            ),
-            F.expr(
-                f"sum(least(size(ps), {cap}) * (least(size(ps), {cap}) - 1) div 2)"
-            ).alias("capped_candidate_pairs"),
+        # in-posting workload upper-bounds the asymmetric join's real
+        # candidates
+        postings = observe_cap(
+            postings, "containment_postings", max_posting_size, "size(ps)",
+            observation, unit="posting",
         )
         if max_posting_size is not None:
             postings = postings.select(
