@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from video_data_pipeline_spark.telemetry import (
     StageMetricsDelta,
+    codegen_compile_count,
     cumulative_stage_metrics,
 )
 
@@ -35,7 +36,7 @@ def test_delta_sees_shuffle_bytes(spark):
     df = spark.range(200_000).select((F.col("id") % 97).alias("k"))
     with StageMetricsDelta(spark) as m:
         df.groupBy("k").count().write.format("noop").mode("overwrite").save()
-    assert set(m.delta) == _KEYS
+    assert set(m.delta) == _KEYS | {"codegen_compiles"}
     assert m.delta["shuffle_write_bytes"] > 0, "groupBy wrote no shuffle bytes?"
     assert m.warning is None, "healthy job must not warn"
 
@@ -140,3 +141,60 @@ def test_installed_registry_does_not_pin_or_alias_sessions():
     del fake
     gc.collect()
     assert ref() is None, "handle/registry must not keep the session alive"
+
+
+def _fresh_shape(spark):
+    # a literal per call: Spark inlines it into the generated source, so
+    # the plan's classes are new to this JVM's codegen cache
+    import uuid
+
+    salt = uuid.uuid4().int % 1_000_003 + 7
+    return (
+        spark.range(20_000)
+        .select(((F.col("id") * salt) % 31).alias("k"))
+        .groupBy("k")
+        .count()
+    )
+
+
+def test_codegen_compiles_counts_then_reads_zero_on_repeat(spark):
+    df = _fresh_shape(spark)
+    rounds = []
+    for _ in range(2):
+        with StageMetricsDelta(spark) as m:
+            df.write.format("noop").mode("overwrite").save()
+        rounds.append(m.delta["codegen_compiles"])
+    assert rounds[0] > 0 and rounds[1] == 0, rounds
+
+
+class _NoCodegenMetricsJvm:
+    """The session's JVM view with every ``org.*`` lookup failing, as
+    after a rename of ``CodegenMetrics``; ``java.*`` still resolves."""
+
+    def __init__(self, jvm):
+        self._real = jvm
+
+    def __getattr__(self, name):
+        if name == "org":
+            raise RuntimeError("no CodegenMetrics")
+        return getattr(self._real, name)
+
+
+class _Proxy:
+    def __init__(self, real, **overrides):
+        self._real = real
+        self.__dict__.update(overrides)
+
+    def __getattr__(self, name):
+        return getattr(self._real, name)
+
+
+def test_codegen_compiles_degrade_to_zero_on_py4j_failure(spark):
+    sc = _Proxy(spark.sparkContext, _jvm=_NoCodegenMetricsJvm(spark.sparkContext._jvm))
+    stub = _Proxy(spark, sparkContext=sc)
+    assert codegen_compile_count(stub) is None
+    with StageMetricsDelta(stub) as m:
+        _fresh_shape(spark).write.format("noop").mode("overwrite").save()
+    assert not m.degraded, "the stage scan does not depend on CodegenMetrics"
+    assert m.delta["codegen_compiles"] == 0
+    assert m.delta["shuffle_write_bytes"] > 0

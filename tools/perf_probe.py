@@ -3,7 +3,8 @@ plan-shape counters the optimization guide says to look at — number of
 Spark jobs, number of stages, summed task time, shuffle read/write bytes,
 and spill — per bench query, read from the driver's AppStatusStore after
 each noop-sink run (same mechanism as telemetry.StageMetricsDelta, plus
-job/stage counts and executorRunTime).
+job/stage counts and executorRunTime), and the classes the JVM compiled
+from generated code during the run (StageMetricsDelta's codegen_compiles).
 
 Usage:
     python tools/perf_probe.py --sf-dir /root/testdata/sf0.1 \
@@ -88,6 +89,7 @@ def main() -> None:
     from bench import HEADLINE  # noqa: E402
     from video_data_pipeline_spark.queries.registry import load_all
     from video_data_pipeline_spark.session import get_spark
+    from video_data_pipeline_spark.telemetry import StageMetricsDelta
 
     names = (
         [q.strip() for q in args.queries.split(",") if q.strip()]
@@ -113,11 +115,13 @@ def main() -> None:
         best = None
         for _ in range(max(1, args.repeat)):
             spark.sparkContext.setJobDescription(f"probe:{name}")
-            sec = run(name)
+            with StageMetricsDelta(spark) as m:
+                sec = run(name)
             metrics, stage_anchor, n_jobs, job_anchor = _scan(
                 spark, stage_anchor, job_anchor
             )
-            rec = {"secs": round(sec, 3), "n_jobs": n_jobs, **metrics}
+            rec = {"secs": round(sec, 3), "n_jobs": n_jobs,
+                   "codegen_compiles": m.delta.get("codegen_compiles", 0), **metrics}
             if best is None or rec["secs"] < best["secs"]:
                 best = rec
         results[name] = best
@@ -126,7 +130,8 @@ def main() -> None:
             f"stages={best['n_stages']} tasks={best['n_tasks']} "
             f"tasktime={best['executor_run_time_ms']}ms "
             f"shW={best['shuffle_write_bytes'] >> 10}KiB "
-            f"spill={best['disk_spill_bytes'] >> 20}MiB",
+            f"spill={best['disk_spill_bytes'] >> 20}MiB "
+            f"compiled={best['codegen_compiles']}",
             flush=True,
         )
     if args.json:

@@ -14,6 +14,12 @@ at *analysis* time — cheap to detect, expensive to miss. This gate:
    no zip directory (``session.gate_zip_invalidation``) — catches a PySpark
    upgrade that moves the per-task ``invalidate_caches`` call, or workers
    that stop importing the package.
+6. runs the four curation queries of perfbench's ``curation`` pass three
+   times and checks that the last round compiles no generated class —
+   catches a codegen cache sized below the queries' working set (136
+   classes at sf0.001, above Spark's stock cap of 100). The first round
+   may plan differently after the work before it, so the last is a
+   repeat of the second.
 
 Analysis is driver-side only, so the whole gate runs in ~1 minute. Run it
 before any end-of-round commit:
@@ -72,6 +78,36 @@ def zip_rereads_per_task(spark, tasks: int = 8) -> list[int]:
 
     run(2 * tasks)
     return run(tasks)
+
+
+#: perfbench's ``curation`` pass (perfbench/workloads.py::CURATION_QUERIES)
+CODEGEN_QUERIES = (
+    "q_prefix_filter_join",
+    "q_minhash_lsh_pairs_calibrated",
+    "q_simhash_near_pairs_calibrated",
+    "q_dedup_exact",
+)
+
+
+def codegen_compiles_per_round(spark, sf_dir: str, rounds: int):
+    """(classes compiled from generated code in each round, each round's
+    sorted rows per query) for ``rounds`` runs of :data:`CODEGEN_QUERIES`,
+    each round after a cleared plan cache, as every perfbench pass runs."""
+    from video_data_pipeline_spark.calibrate import clear_plan_cache
+    from video_data_pipeline_spark.queries.registry import load_all
+    from video_data_pipeline_spark.telemetry import StageMetricsDelta
+
+    registry = load_all()
+    compiles, rows = [], []
+    for _ in range(rounds):
+        clear_plan_cache()
+        with StageMetricsDelta(spark) as m:
+            rows.append({
+                q: sorted(registry[q].spark_fn(spark, sf_dir).collect(), key=repr)
+                for q in CODEGEN_QUERIES
+            })
+        compiles.append(m.delta["codegen_compiles"])
+    return compiles, rows
 
 
 def main() -> int:
@@ -151,6 +187,19 @@ def main() -> int:
             failures.append("zip directories re-read on reused Python workers")
             print(f"workers FAIL {detail}")
 
+    # 6. a repeat of the curation queries compiles no generated class
+    try:
+        compiles, rows = codegen_compiles_per_round(spark, args.sf_dir, rounds=3)
+        ok = compiles[-1] == 0 and rows[-1] == rows[0]
+        detail = f"classes compiled per round: {compiles}, same rows: {rows[-1] == rows[0]}"
+    except Exception:
+        ok, detail = False, traceback.format_exc()
+    if ok:
+        print(f"codegen OK  ({detail})")
+    else:
+        failures.append("generated classes recompiled on a repeated query")
+        print(f"codegen FAIL {detail}")
+
     dt = time.time() - t_start
     if failures:
         print(f"\nSMOKE GATE FAILED in {dt:.0f}s — {len(failures)} failure(s):")
@@ -158,7 +207,8 @@ def main() -> int:
             print(f"  - {f}")
         return 1
     print(f"\nSMOKE GATE PASSED in {dt:.0f}s "
-          f"({len(selfcheck.TABLES)} tables, {len(registry)} plans, entry, workers)")
+          f"({len(selfcheck.TABLES)} tables, {len(registry)} plans, entry, workers, "
+          "codegen)")
     return 0
 
 

@@ -81,6 +81,20 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "256k"),
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # r18 perf: Spark caches the classes it compiles from generated
+        # code in one per-JVM LRU of codegen.cache.maxEntries entries
+        # (stock 100), keyed by the generated source. The registry's
+        # working set is far above that: the four capped-front curation
+        # queries alone need 136 distinct classes at sf0.001, one sweep of
+        # all 185 queries 2,033. At the stock cap each repeat evicted the
+        # classes the next query needed, so every curation pass recompiled
+        # 107-109 classes (Janino, class loading and JIT of the new
+        # classes) and a second registry sweep recompiled 3,101. At 4096 a
+        # repeat compiles 0 (curation) and 48 (sweep; OPTIMIZATION_r18.md
+        # names the plans whose source changes from run to run), with
+        # metaspace at ~200 MB either way. Static conf: it binds when the
+        # JVM's first session is built; extra_conf can still override it.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")

@@ -1,4 +1,5 @@
-"""Driver-side stage-metrics telemetry: spill / shuffle bytes per query.
+"""Driver-side stage-metrics telemetry: spill / shuffle bytes per query,
+plus the classes the JVM compiled from generated code.
 
 Motivation (r10/r11 VERDICT #5): the sfp30 probe's uncapped pair joins
 died as *disk exhaustion five minutes in* — the only observable was the OS
@@ -116,6 +117,19 @@ def _scan_stages(
     return out, max_id, True
 
 
+def codegen_compile_count(spark) -> int | None:
+    """Classes this JVM has compiled from generated code so far: the count
+    of Spark's ``CodegenMetrics`` compilation-time histogram, which gets
+    one update per codegen cache miss. Only the count is exact; the
+    histogram's time values are a sampled reservoir, so their sum is not.
+    None on any py4j failure, so callers degrade instead of raising."""
+    try:
+        metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        return int(metrics.METRIC_COMPILATION_TIME().getCount())
+    except Exception:  # noqa: BLE001 — Spark API drift / dead session
+        return None
+
+
 class StageMetricsDelta:
     """Context manager: per-unit-of-work spill/shuffle bytes.
 
@@ -125,7 +139,12 @@ class StageMetricsDelta:
     >>> m.warning  # None, or a human-readable spill warning string
 
     ``delta``/``warning`` are also populated when the body RAISES — the
-    spill of a dying query is exactly the number the probe wants."""
+    spill of a dying query is exactly the number the probe wants.
+
+    ``delta["codegen_compiles"]`` counts the classes this JVM compiled from
+    generated code during the window (:func:`codegen_compile_count`): 0 on
+    a repeat of plan shapes the codegen cache still holds. In local mode
+    that covers the executors too; on a cluster, driver-side compiles only."""
 
     def __init__(self, spark, warn_bytes: int = SPILL_WARN_BYTES):
         self._spark = spark
@@ -145,17 +164,24 @@ class StageMetricsDelta:
         # zeros for the window instead (ADVICE r13): telemetry degrades,
         # never overstates.
         self.degraded = not ok
+        self._compiles = codegen_compile_count(self._spark)
         return self
 
     def __exit__(self, exc_type, exc, tb) -> None:
         if self.degraded:
-            self.delta = dict.fromkeys(_METRICS.values(), 0)
+            self.delta = dict.fromkeys([*_METRICS.values(), "codegen_compiles"], 0)
             return
         try:
             after, _, _ = _scan_stages(self._spark, self._since)
         except Exception:  # noqa: BLE001 — a dead session shouldn't mask exc
             return
         self.delta = {k: max(0, v) for k, v in after.items()}
+        compiles = codegen_compile_count(self._spark)
+        self.delta["codegen_compiles"] = (
+            max(0, compiles - self._compiles)
+            if compiles is not None and self._compiles is not None
+            else 0
+        )
         spilled = self.delta.get("disk_spill_bytes", 0) + self.delta.get(
             "memory_spill_bytes", 0
         )
