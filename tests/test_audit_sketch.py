@@ -88,12 +88,12 @@ def test_hard_negatives_semihard_band_properties(spark, sf_dir):
 
 def test_simhash_calibration_rides_checkpointed_pairs(spark, sf_dir):
     # r16 opt: _calibration_from_pairs lazily localCheckpoints the candidate
-    # frame (measured 0.78x, tools/exp_simhash_ckpt.py). r17 goes further
-    # (VERDICT r16 #3): signature and shingle set come from ONE checkpointed
-    # corpus pass (_calibration_corpus), so the final query plan must carry
-    # NO corpus relation at all — the front reads the pair checkpoint and
-    # both Jaccard sides read slices of the corpus checkpoint (0.85x,
-    # tools/exp_cal_corpus.py).
+    # frame (measured 0.78x, tools/exp_simhash_ckpt.py at 79da2d5). r17
+    # goes further (VERDICT r16 #3): signature and shingle set come from ONE
+    # checkpointed corpus pass (_calibration_corpus), so the final query
+    # plan must carry NO corpus relation at all — the front reads the pair
+    # checkpoint and both Jaccard sides read slices of the corpus
+    # checkpoint (0.85x, tools/exp_cal_corpus.py, reproduces at 79da2d5).
     from video_data_pipeline_spark.queries.audit import q_simhash_calibration
 
     plan = (

@@ -75,8 +75,8 @@ def test_pagerank_plan_covers_one_iteration_only(spark, sf_dir):
     # r16: q_pagerank's sym/deg are lazily checkpointed (like the LPA loop
     # above) — without them the 3-iteration unroll re-instantiated the
     # LSH subtree 28x in one plan (28 parquet scans, 0 ReusedExchange;
-    # measured 0.67x after the fix, tools/exp_pagerank_ckpt.py). The
-    # final optimized plan must reference the checkpointed graph (scan-free
+    # measured 0.67x after the fix, tools/exp_pagerank_ckpt.py at 79da2d5).
+    # The final optimized plan must reference the checkpointed graph (scan-free
     # ExistingRDD leaves), not re-derive the corpus scan per round.
     from video_data_pipeline_spark.queries.dedup import q_pagerank
 

@@ -23,6 +23,10 @@ _KEYS = {
     "memory_spill_bytes",
     "shuffle_write_bytes",
     "shuffle_read_bytes",
+    "input_bytes",
+    "executor_run_time_ms",
+    "n_tasks",
+    "n_stages",
 }
 
 
@@ -38,6 +42,9 @@ def test_delta_sees_shuffle_bytes(spark):
         df.groupBy("k").count().write.format("noop").mode("overwrite").save()
     assert set(m.delta) == _KEYS | {"codegen_compiles"}
     assert m.delta["shuffle_write_bytes"] > 0, "groupBy wrote no shuffle bytes?"
+    # a groupBy is a map stage plus a reduce stage
+    assert m.delta["n_stages"] >= 2 and m.delta["n_tasks"] >= m.delta["n_stages"]
+    assert m.delta["executor_run_time_ms"] > 0 and not m.degraded
     assert m.warning is None, "healthy job must not warn"
 
 
@@ -94,6 +101,26 @@ def test_degraded_enter_scan_reports_zeros_not_history(spark, monkeypatch):
     assert m.degraded
     assert all(v == 0 for v in m.delta.values()), m.delta
     assert m.warning is None, "a degraded window must not warn"
+
+
+def test_degraded_exit_scan_sets_flag(spark, monkeypatch):
+    # a failed EXIT scan also reads as zeros; the flag is what tells a
+    # probe record those zeros are not a measurement
+    from video_data_pipeline_spark import telemetry
+
+    real = telemetry._scan_stages
+    calls = {"n": 0}
+
+    def flaky(s, min_stage_id=-1):
+        calls["n"] += 1
+        if calls["n"] == 2:  # the exit scan fails
+            return dict.fromkeys(telemetry._METRICS.values(), 0), min_stage_id, False
+        return real(s, min_stage_id)
+
+    monkeypatch.setattr(telemetry, "_scan_stages", flaky)
+    with telemetry.StageMetricsDelta(spark) as m:
+        spark.range(1000).groupBy((F.col("id") % 3).alias("k")).count().collect()
+    assert m.degraded
 
 
 def test_listener_degraded_anchor_reanchors_without_overcount(spark):

@@ -11,19 +11,9 @@ Usage:
 Run this ONLY when nothing else is on the machine (no sweeps, no tests);
 a concurrent job inflates the band and hides real regressions.
 
-``--ab <git-ref>`` (r16, VERDICT r15 #3) is the INTERLEAVED A/B mode —
-the cross-round regression signal that does not depend on ambient
-epochs (which confounded the r9/r10/r15 absolute anchors: same code,
-1.3–1.8x apart across days). It checks the ref out into a temporary
-worktree and alternates full bench runs new/old/new/old/... in ONE
-session, so both trees see the same machine state, then reports
-per-query new/old median ratios over the common queries. A flat ratio
-(~1.0) on untouched queries means any absolute anchor shift is ambient;
-a per-query ratio off 1.0 is a real regression/improvement with the
-epoch controlled away. Writes BENCH_AB_r{N}.json; TRENDS.md cross-round
-claims should cite these ratios, not anchor-to-anchor absolutes.
-
-    python tools/bench_anchor.py --round 16 --ab <last-round-commit>
+Each run goes through ``tools/ab.py``'s bench runner, which reads the
+full-precision result file. For an interleaved comparison against another
+tree or env value use ``tools/ab.py`` itself.
 """
 
 from __future__ import annotations
@@ -33,11 +23,13 @@ import json
 import os
 import re
 import statistics
-import subprocess
 import sys
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+from tools.ab import run_bench  # noqa: E402
 
 #: the one prose line that may quote the anchor; bench_anchor rewrites it
 #: and REFUSES to finish if it is missing (r11 VERDICT #8: the quoted
@@ -76,146 +68,11 @@ PURPOSE = (
 )
 
 
-def one_run(tree: str = ROOT) -> dict:
-    env = dict(os.environ)
-    # keep each tree's committed BENCH_FULL*.json untouched — A/B and
-    # anchor runs are measurements, not artifact refreshes
-    out_file = os.path.join(tree, ".bench_run.json")
-    env["SPARK_GRAFT_BENCH_OUT"] = out_file
-    out = subprocess.run(
-        [sys.executable, os.path.join(tree, "bench.py")],
-        capture_output=True,
-        text=True,
-        check=True,
-        cwd=tree,
-        env=env,
-    )
-    # the artifact file carries the full 3-decimal per-query record; the
-    # LAST stdout line may be tail-budget-quantized since r17 (2 sig figs),
-    # which would smear every A/B ratio — never take timings from it
-    try:
-        with open(out_file) as f:
-            return json.load(f)
-    except OSError:
-        # old trees (pre-r14 had no --out env honor): fall back to the
-        # FIRST stdout record with the map, which is always full precision
-        records = [
-            json.loads(ln) for ln in out.stdout.splitlines() if ln.startswith("{")
-        ]
-        return next(r for r in records if "queries" in r)
-
-
-def ab_run(ref: str, rnd: int, runs: int, load_at_start: float) -> int:
-    """Interleaved A/B: alternate new-tree / old-tree full bench runs in
-    one session, then report per-query new/old median ratios over the
-    common queries. Whole-run (not per-query) alternation is deliberate:
-    the two trees are the same package name, so one process cannot hold
-    both registries; run-level interleaving in a single idle session is
-    exactly the control that separated the r15 anchor jump into ambient
-    epoch + flat code (TRENDS r15 note), now institutionalized."""
-    wt = os.path.join(ROOT, f".wt_ab_r{rnd}")
-    sha = subprocess.run(
-        ["git", "rev-parse", "--short", ref], capture_output=True,
-        text=True, check=True, cwd=ROOT,
-    ).stdout.strip()
-    subprocess.run(
-        ["git", "worktree", "add", "--detach", wt, ref],
-        check=True, cwd=ROOT, capture_output=True, text=True,
-    )
-    try:
-        # ABBA ordering (r16 opt round): strict new/old alternation is
-        # biased under MONOTONE ambient drift (this host's CPU-steal
-        # epochs drain over a session, so whichever tree always runs
-        # second in a pair is systematically penalized — observed as
-        # ~0.6x "improvements" on queries neither tree changed).
-        # Palindromic order cancels any linear drift component.
-        new_runs, old_runs = [], []
-        for i in range(runs):
-            order = [("new", ROOT, new_runs), ("old", wt, old_runs)]
-            if i % 2 == 1:
-                order.reverse()
-            for label, tree, sink in order:
-                print(f"A/B round {i + 1}/{runs}: {label} tree ...")
-                sink.append(one_run(tree))
-    finally:
-        subprocess.run(
-            ["git", "worktree", "remove", "--force", wt],
-            cwd=ROOT, capture_output=True,
-        )
-    common = sorted(
-        set(new_runs[0]["queries"]) & set(old_runs[0]["queries"])
-    )
-    per_q = {}
-    for q in common:
-        new_med = statistics.median(r["queries"][q] for r in new_runs)
-        old_med = statistics.median(r["queries"][q] for r in old_runs)
-        per_q[q] = {
-            "new_median": round(new_med, 3),
-            "old_median": round(old_med, 3),
-            "ratio": round(new_med / old_med, 3) if old_med else None,
-        }
-    new_total = statistics.median(
-        sum(r["queries"][q] for q in common) for r in new_runs
-    )
-    old_total = statistics.median(
-        sum(r["queries"][q] for q in common) for r in old_runs
-    )
-    ratios = sorted(
-        (v["ratio"], q) for q, v in per_q.items() if v["ratio"] is not None
-    )
-    payload = {
-        "round": rnd,
-        "purpose": (
-            "Interleaved A/B (new/old/new/old/... full bench runs, one idle "
-            "session): per-query new-tree vs old-tree median ratios on the "
-            "common queries. Ambient epochs cancel — ratio ~1.0 on an "
-            "untouched query means flat; cite THESE for cross-round perf "
-            "claims, not anchor-to-anchor absolutes."
-        ),
-        "old_ref": ref,
-        "old_sha": sha,
-        "runs_per_tree": runs,
-        "sf": new_runs[0]["sf"],
-        "load_at_start": load_at_start,
-        "n_common_queries": len(common),
-        "new_only": sorted(set(new_runs[0]["queries"]) - set(common)),
-        "old_only": sorted(set(old_runs[0]["queries"]) - set(common)),
-        "common_total": {
-            "new_median": round(new_total, 3),
-            "old_median": round(old_total, 3),
-            "ratio": round(new_total / old_total, 3) if old_total else None,
-        },
-        "worst_ratio": {"query": ratios[-1][1], "ratio": ratios[-1][0]}
-        if ratios else None,
-        "best_ratio": {"query": ratios[0][1], "ratio": ratios[0][0]}
-        if ratios else None,
-        "queries": per_q,
-    }
-    out = os.path.join(ROOT, f"BENCH_AB_r{rnd}.json")
-    with open(out, "w") as f:
-        json.dump(payload, f, indent=1)
-    print(
-        f"wrote {out}: common-total ratio "
-        f"{payload['common_total']['ratio']} over {len(common)} queries "
-        f"(new {payload['common_total']['new_median']}s vs old "
-        f"{payload['common_total']['old_median']}s @ {sha}); worst "
-        f"{payload['worst_ratio']}"
-    )
-    return 0
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--round", type=int, required=True)
     ap.add_argument("--runs", type=int, default=3)
     ap.add_argument("--out", default=None)
-    ap.add_argument(
-        "--ab", default=None, metavar="GIT_REF",
-        help="interleaved A/B mode against this git ref (usually the "
-        "previous round's final commit): alternate new/old full bench "
-        "runs in one session and write per-query ratios to "
-        "BENCH_AB_r{N}.json instead of an absolute anchor",
-    )
     ap.add_argument(
         "--max-load", type=float, default=1.0,
         help="refuse to anchor while the 1-min load average exceeds this "
@@ -233,10 +90,7 @@ def main() -> int:
         time.sleep(30)
     load_at_start = round(os.getloadavg()[0], 2)
 
-    if args.ab:
-        return ab_run(args.ab, args.round, args.runs, load_at_start)
-
-    runs = [one_run() for _ in range(args.runs)]
+    runs = [run_bench(where=f"run {i + 1}/{args.runs}") for i in range(args.runs)]
     names = list(runs[0]["queries"])
     per_q = {
         q: {

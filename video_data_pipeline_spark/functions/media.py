@@ -85,16 +85,6 @@ def sample_frames_batch(
         yield out
 
 
-def resize_cap_image(data: bytes, max_side: int = 1280) -> bytes:
-    """STUB for the tokenize-time resize guard (tokenize/main.py:196-200):
-    real impl opens with PIL and resizes any side > max_side to
-    (max_side, max_side). Fake: deterministic passthrough with a marker
-    prefix when 'oversized' (length heuristic stands in for pixel dims)."""
-    if len(data) > max_side:
-        return b"RSZ0" + hashlib.md5(data).digest()
-    return data
-
-
 #: schemes a *data-derived* path (a value read out of a dataset row) may
 #: open. Deliberately excludes ``pipe:`` — the gopen table is for operator-
 #: authored shard URLs, where pipe: is an explicit user command; letting a

@@ -4,8 +4,9 @@
 ``defaultParallelism``-slice PYTHON RDD (``Scan ExistingRDD`` in the
 plan): every downstream task forks a Python worker just to unpickle a
 handful of literals. Measured on ``q_countmin_freq``'s 8 probe words at
-sf0.1 (r16 opt round, tools/exp_local_rows.py): the probes' exchange ran
-as a 32-task stage whose tasks were BLOCKED on worker startup/IPC —
+sf0.1 (r16 opt round, tools/exp_local_rows.py, reproduces at 79da2d5): the
+probes' exchange ran as a 32-task stage whose tasks were BLOCKED on worker
+startup/IPC —
 52 s summed executorRunTime against 0.7 s executorCpuTime — the guide
 §4 boundary tax paid for rows the driver already holds.
 

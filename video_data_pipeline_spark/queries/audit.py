@@ -331,13 +331,13 @@ def _calibration_from_pairs(spark, sf_dir, pairs, sets=None):
     their CollectMetrics observe node defeats exchange canonicalization,
     so planning the signature self-join inside this audit's join chain
     re-ran the signature lambda — the repo's heaviest per-doc expression.
-    Measured same-session ABBA (tools/exp_simhash_ckpt.py, 6 rounds,
+    Measured same-session ABBA (tools/exp_simhash_ckpt.py at 79da2d5, 6 rounds,
     identical rows asserted): ckpt on the PAIR frame 0.78x vs current;
     ckpt on signatures or reps instead: no win. The q_minhash_estimate
     sibling is deliberately NOT checkpointed — its LSH front already
     checkpoints bands internally, and the same experiment measured an
     extra pair checkpoint there as pure overhead (1.19x,
-    tools/exp_audit_ckpt.py)."""
+    tools/exp_audit_ckpt.py, reproduces at 79da2d5)."""
     pairs = checkpoint_frame(pairs)
     if sets is None:
         reps = exact_dup_representatives(table(spark, sf_dir, "documents"))

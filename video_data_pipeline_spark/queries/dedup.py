@@ -212,10 +212,6 @@ def band_front(bands):
     return bands.select(F.concat_ws("/", "band_idx", "band_key").alias("key"))
 
 
-def _spark_shingle_hashes(spark, sf_dir):
-    return shingle_hashes(table(spark, sf_dir, "documents"))
-
-
 def _spark_signatures(spark, sf_dir):
     return signatures(table(spark, sf_dir, "documents"))
 
@@ -1532,7 +1528,7 @@ def q_pagerank(spark, sf_dir):
     reuse only recovered part of it; a 6-round same-session ABBA of the
     two forms measured the checkpointed graph at 0.67× (2.75 s → 1.84 s
     median, identical rows asserted in-process,
-    tools/exp_pagerank_ckpt.py)."""
+    tools/exp_pagerank_ckpt.py, reproduces at 79da2d5)."""
     pairs = q_minhash_lsh_pairs(spark, sf_dir)
     fwd = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
     rev = pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))

@@ -221,7 +221,7 @@ def q_chunk_fixed(spark, sf_dir):
 
     NOT spread() (r17, VERDICT r16 #5 measured keep-or-reject):
     round-robin repartitioning the single-row-group scan measured 1.80x
-    SLOWER same-session ABBA (tools/exp_spread_pack.py) — both
+    SLOWER same-session ABBA (tools/exp_spread_pack.py at 79da2d5) — both
     global-index passes would pay a keyless repartition (which sorts its
     input first, SPARK-23207) of 600k rows to parallelize a predicate
     chain that one core finishes faster than the exchange. q_pack_merge

@@ -1129,8 +1129,8 @@ def q_hard_negatives(spark, sf_dir):
     # (no new shuffle), no checkpoint, no union, one corpus pass.
     # A first r17 attempt that streamed the corpus TWICE (top-4 pass +
     # band pass) measured 1.25x — two BroadcastNestedLoopJoin cosine
-    # expansions outweigh the window savings; kept in
-    # tools/exp_hard_negatives.py history for the record.
+    # expansions outweigh the window savings; reproduces with
+    # tools/exp_hard_negatives.py at 79da2d5.
     out_k = _HN_POS + _HN_NEG
     return (
         scored.withColumn("rnk", F.row_number().over(w))

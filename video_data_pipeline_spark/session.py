@@ -64,7 +64,8 @@ def get_spark(
         # byte. Measured at sf0.1: the stock floor coalesced those stages
         # to 1-5 partitions, serializing multi-second compute onto one
         # core (perf_probe: ~1.0 effective cores on a 32-core master).
-        # Value chosen by two same-tree env-flip ABBA A/Bs (tools/env_ab.py,
+        # Value chosen by two same-tree env-flip ABBA A/Bs
+        # (tools/env_ab.py at 79da2d5, now tools/ab.py VAR=VALUE arms;
         # OPTIMIZATION_r16.md §aqe-floor): 64k freed the compute-dense
         # families (simjoin family 0.57× vs stock) but over-split the
         # byte-tiny shuffles of iterative/sketch queries (q_countmin_freq
@@ -223,28 +224,6 @@ def ensure_shipped(spark: SparkSession) -> None:
         os.replace(tmp, zip_path)
     spark.sparkContext.addPyFile(zip_path)
     _SHIPPED.add(key)
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None):
-    """Register the standard test tables as temp views; return dict of DataFrames."""
-    names = names or [
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    ]
-    out = {}
-    for name in names:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
 
 
 def enable_runtime_bloom_filters(

@@ -35,12 +35,17 @@ import threading
 import warnings
 import weakref
 
-#: AppStatusStore getter -> snake_case key in our records
+#: AppStatusStore StageData getter -> snake_case key in our records, summed
+#: over the window's stages; the ``None`` getter counts the stages themselves
 _METRICS = {
     "diskBytesSpilled": "disk_spill_bytes",
     "memoryBytesSpilled": "memory_spill_bytes",
     "shuffleWriteBytes": "shuffle_write_bytes",
     "shuffleReadBytes": "shuffle_read_bytes",
+    "inputBytes": "input_bytes",
+    "executorRunTime": "executor_run_time_ms",
+    "numCompleteTasks": "n_tasks",
+    None: "n_stages",
 }
 
 #: default WARN threshold: 8 GiB of disk spill in one query is the scale of
@@ -102,7 +107,7 @@ def _scan_stages(
             if sid <= min_stage_id:
                 continue
             for getter, key in _METRICS.items():
-                out[key] += int(getattr(s, getter)())
+                out[key] += int(getattr(s, getter)()) if getter else 1
     except Exception as e:  # noqa: BLE001 — Spark API drift / dead session
         if not _DEGRADED_WARNED:
             _DEGRADED_WARNED = True
@@ -140,6 +145,8 @@ class StageMetricsDelta:
 
     ``delta``/``warning`` are also populated when the body RAISES — the
     spill of a dying query is exactly the number the probe wants.
+    ``degraded`` is True when either status-store scan failed; the stage
+    sums are then zeros, not measurements.
 
     ``delta["codegen_compiles"]`` counts the classes this JVM compiled from
     generated code during the window (:func:`codegen_compile_count`): 0 on
@@ -172,9 +179,12 @@ class StageMetricsDelta:
             self.delta = dict.fromkeys([*_METRICS.values(), "codegen_compiles"], 0)
             return
         try:
-            after, _, _ = _scan_stages(self._spark, self._since)
+            after, _, ok = _scan_stages(self._spark, self._since)
         except Exception:  # noqa: BLE001 — a dead session shouldn't mask exc
             return
+        # a failed exit scan reads as zeros; flag it so nobody takes them
+        # for a window that did no work
+        self.degraded = not ok
         self.delta = {k: max(0, v) for k, v in after.items()}
         compiles = codegen_compile_count(self._spark)
         self.delta["codegen_compiles"] = (
