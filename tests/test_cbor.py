@@ -1,4 +1,4 @@
-"""CBOR codec + cbors DataSource (reference cborsiterators.py:6-51)."""
+"""CBOR codec + cbors shard reader (reference cborsiterators.py:6-51)."""
 
 from __future__ import annotations
 
@@ -83,7 +83,7 @@ def test_cbor_stream_iteration_and_eof():
 
 def test_cbors_to_samples_datasource(spark, tmp_path):
     """End-to-end: write two concatenated-item .cbors shards, read via the
-    DataSource (one partition per shard), verify exact value round-trip
+    shard-scan kernel (one partition per shard), verify exact value round-trip
     through the map<string,binary> re-encoding."""
     from video_data_pipeline_spark.sources.cbors import cbors_to_samples
 

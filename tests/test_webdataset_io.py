@@ -442,7 +442,8 @@ def test_member_level_gz_decode(spark, tmp_path):
 def test_streaming_shard_ingest_incremental(spark, tmp_path):
     """readStream over a shard directory: first availableNow run drains the
     existing shards; after a NEW shard lands, a restart from the same
-    checkpoint ingests ONLY the new one (offset = discovered-shard set)."""
+    checkpoint ingests ONLY the new one (the file source's checkpointed
+    file log)."""
     from video_data_pipeline_spark.sources.webdataset import read_webdataset_stream
 
     shard_dir = str(tmp_path / "stream_shards")
@@ -486,8 +487,8 @@ def test_streaming_shard_ingest_incremental(spark, tmp_path):
 
 
 def test_streaming_rate_limit(spark, tmp_path):
-    """max_shards_per_batch caps admission per microbatch (the
-    maxFilesPerTrigger analog): a 6-shard backlog drains in >=3 batches of
+    """max_shards_per_batch caps admission per microbatch (it is the file
+    source's maxFilesPerTrigger): a 6-shard backlog drains in >=3 batches of
     <=2 shards each, with every sample ingested exactly once."""
     from video_data_pipeline_spark.sources.webdataset import read_webdataset_stream
 
@@ -557,6 +558,156 @@ def test_streaming_decode_with_explicit_suffixes(spark, tmp_path):
     )
     q.awaitTermination(120)
     assert sorted(got) == [(f"{i:06d}", f"caption {i}", i % 5) for i in range(5)]
+
+
+def _drain_stream(stream, ckpt: str) -> list[list[tuple]]:
+    """Run ``stream`` once under ``availableNow`` from checkpoint ``ckpt``;
+    return each non-empty microbatch's ``(__key__, __url__)`` rows."""
+    batches: list[list[tuple]] = []
+
+    def sink(batch_df, _bid):
+        rows = [(r["__key__"], r["__url__"]) for r in batch_df.collect()]
+        if rows:
+            batches.append(rows)
+
+    q = (
+        stream.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert not q.isActive and q.exception() is None
+    return batches
+
+
+def test_streaming_capped_backlog_restarts(spark, tmp_path):
+    """A capped backlog drains exactly once under ``availableNow`` in
+    microbatches of at most ``max_shards_per_batch`` shards; a restart
+    from the same checkpoint ingests nothing, and a shard written later
+    is ingested alone."""
+    from video_data_pipeline_spark.sources.webdataset import read_webdataset_stream
+
+    shard_dir = str(tmp_path / "capped_shards")
+    ckpt = str(tmp_path / "capped_ckpt")
+    write_webdataset(
+        _sample_df(spark, n=6).repartition(1).sortWithinPartitions("__key__"),
+        shard_dir,
+        maxcount=1,
+        sample_col=None,
+    ).collect()
+
+    def drain():
+        stream = read_webdataset_stream(spark, shard_dir, max_shards_per_batch=2)
+        return _drain_stream(stream, ckpt)
+
+    first = drain()
+    keys = [k for b in first for k, _ in b]
+    assert sorted(keys) == [f"{i:06d}" for i in range(6)]
+    assert all(len({url for _, url in b}) <= 2 for b in first)
+
+    assert drain() == []
+
+    extra = spark.createDataFrame(
+        [("x00001", "late caption", 9, b"\x01")],
+        "`__key__` string, txt string, cls int, jpg binary",
+    )
+    write_webdataset(extra.repartition(1), shard_dir, prefix="late", sample_col=None).collect()
+    assert [k for b in drain() for k, _ in b] == ["x00001"]
+
+
+def test_streaming_lists_without_reading_shard_bytes(spark, tmp_path):
+    """The stream lists shard paths and never reads a shard's bytes on the
+    JVM: with ``binaryFile.maxLength`` below every shard's size (a content
+    read would raise) it still returns every sample, and the same rows as
+    ``read_webdataset``, from a directory whose name has a space."""
+    from video_data_pipeline_spark.sources.webdataset import read_webdataset_stream
+
+    shard_dir = str(tmp_path / "shards with space")
+    write_webdataset(
+        _sample_df(spark, n=6).repartition(1).sortWithinPartitions("__key__"),
+        shard_dir,
+        maxcount=2,
+        sample_col=None,
+    ).collect()
+    assert min(os.path.getsize(p) for p in glob.glob(os.path.join(shard_dir, "*.tar"))) > 1024
+
+    conf = "spark.sql.sources.binaryFile.maxLength"
+    spark.conf.set(conf, "1024")
+    try:
+        batches = _drain_stream(read_webdataset_stream(spark, shard_dir), str(tmp_path / "ckpt"))
+    finally:
+        spark.conf.unset(conf)
+    streamed = sorted(row for b in batches for row in b)
+    batch = sorted((r["__key__"], r["__url__"]) for r in read_webdataset(spark, shard_dir).collect())
+    assert len(streamed) == 6
+    assert streamed == batch
+
+
+def test_streaming_from_foreign_cwd(tmp_path):
+    """The stream needs no repo on the workers' path: a Spark application
+    started outside the repo, without the repo on ``PYTHONPATH``, that puts
+    the repo on its own ``sys.path`` drains a one-shard stream."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import io, sys, tarfile
+sys.path.insert(0, {repo!r})
+from video_data_pipeline_spark.session import get_spark
+from video_data_pipeline_spark.sources.webdataset import read_webdataset_stream
+
+spark = get_spark("foreign_cwd", master="local[2]", shuffle_partitions=2)
+with tarfile.open("shards/s0.tar", "w") as tf:
+    info = tarfile.TarInfo("k0.txt")
+    info.size = 2
+    tf.addfile(info, io.BytesIO(b"hi"))
+got = []
+q = (
+    read_webdataset_stream(spark, "shards")
+    .writeStream.foreachBatch(lambda b, _i: got.extend(r["__key__"] for r in b.collect()))
+    .option("checkpointLocation", "ckpt")
+    .trigger(availableNow=True)
+    .start()
+)
+q.awaitTermination(120)
+print("KEYS", got)
+spark.stop()
+"""
+    (tmp_path / "shards").mkdir()
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEMORY"] = "1g"
+    res = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert res.returncode == 0, res.stderr[-3000:]
+    assert "KEYS ['k0']" in res.stdout, res.stderr[-3000:]
+
+
+@pytest.mark.parametrize(
+    "paths",
+    [
+        ["/data/a", "/data/b"],
+        "/data/a::/data/b",
+        "/data/shard-{000..009}.tar",
+        "pipe:cat /data/a.tar",
+        "s3://bucket/shards",
+    ],
+    ids=["list", "concat", "brace-range", "pipe", "remote"],
+)
+def test_streaming_rejects_unlistable_paths(spark, paths):
+    """The stream watches one local directory or glob; fixed URL lists
+    and specs the file source cannot list point to ``read_webdataset``."""
+    from video_data_pipeline_spark.sources.webdataset import read_webdataset_stream
+
+    with pytest.raises(ValueError, match="read_webdataset"):
+        read_webdataset_stream(spark, paths)
 
 
 def test_gopen_pipe_read_timeout_kills_hung_command():

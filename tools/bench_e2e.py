@@ -133,7 +133,7 @@ def main() -> int:
     n_shards = len([f for f in os.listdir(src) if f.endswith(".tar")])
 
     # ---- stage 3: raw tar-source scan throughput (bytes of every member
-    # stream through the DataSource; count is the action)
+    # stream through the shard scan; count is the action)
     t0 = time.time()
     with StageMetricsDelta(spark) as sm:
         n_members = read_webdataset(spark, src).count()

@@ -2,7 +2,6 @@
 
 from video_data_pipeline_spark.sources.shardlists import expand_urls  # noqa: F401
 from video_data_pipeline_spark.sources.webdataset import (  # noqa: F401
-    WebDatasetDataSource,
     decode_columns,
     read_webdataset,
 )

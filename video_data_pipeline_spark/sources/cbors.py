@@ -1,4 +1,4 @@
-"""CBOR shard reader — ``cbors_to_samples`` as a Spark DataSource.
+"""CBOR shard reader — ``cbors_to_samples`` on the shard-scan kernel.
 
 Reference: ``webdataset-private/webdataset/cborsiterators.py:6-27``
 (``cbor_iterator`` / ``cbors_samples`` / ``cbors_to_samples``): open each
@@ -6,18 +6,18 @@ shard URL, ``cbor.load`` items until EOF, yield the decoded samples. The
 reference documented this engine's gap as "cbor lib absent" — closed by
 the dependency-free codec in :mod:`..functions.cbor`.
 
-Spark shape mirrors the webdataset source: one partition per shard, each
-executor streams its shard via :func:`gopen` (driver never proxies
-bytes). Samples must be CBOR maps; every value is re-encoded to CBOR
-bytes in a ``map<string,binary>`` column, so arbitrary nesting survives
-Spark's static typing — ``cbor_decode_value`` (or
+Spark shape is the tar batch scan's, with a CBOR read function
+(``sources.webdataset._scan_shards``): one row and one partition per
+shard, each executor streams its shard via :func:`gopen` (driver never
+proxies bytes). Samples must be CBOR maps; every value is re-encoded to
+CBOR bytes in a ``map<string,binary>`` column, so arbitrary nesting
+survives Spark's static typing — ``cbor_decode_value`` (or
 ``functions.cbor.cbor_load``) restores the original value exactly.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import (
     BinaryType,
     LongType,
@@ -36,16 +36,11 @@ CBOR_SAMPLE_SCHEMA = StructType(
 )
 
 
-class _CborShardPartition(InputPartition):
-    def __init__(self, path: str):
-        self.path = path
-
-
-def _read_cbor_shard(path: str, gopen_kw: dict):
+def _read_cbor_shard(path: str):
     from video_data_pipeline_spark.functions.cbor import cbor_encode, cbor_iter
     from video_data_pipeline_spark.sources.gopen import gopen
 
-    fh = gopen(path, "rb", **gopen_kw)
+    fh = gopen(path, "rb")
     try:
         for idx, sample in enumerate(cbor_iter(fh)):
             if not isinstance(sample, dict):
@@ -62,59 +57,13 @@ def _read_cbor_shard(path: str, gopen_kw: dict):
         fh.close()
 
 
-class _CborReader(DataSourceReader):
-    def __init__(self, options: dict):
-        from video_data_pipeline_spark.sources.webdataset import expand_paths
-
-        self.paths = expand_paths(options.get("path", ""))
-        from video_data_pipeline_spark.sources.webdataset import _gopen_kw
-
-        self.gopen_kw = _gopen_kw(options)
-
-    def partitions(self):
-        return [_CborShardPartition(p) for p in self.paths]
-
-    def read(self, partition: _CborShardPartition | None):
-        if partition is None:
-            return
-        yield from _read_cbor_shard(partition.path, self.gopen_kw)
-
-
-class CborDataSource(DataSource):
-    """``spark.read.format("cbors")`` — one row per CBOR item."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "cbors"
-
-    def schema(self) -> StructType:
-        return CBOR_SAMPLE_SCHEMA
-
-    def reader(self, schema: StructType) -> DataSourceReader:
-        return _CborReader(self.options)
-
-
-_REGISTERED: set[int] = set()
-
-
-def register(spark: SparkSession) -> None:
-    from video_data_pipeline_spark.session import ensure_shipped
-
-    ensure_shipped(spark)
-    key = id(spark)
-    if key not in _REGISTERED:
-        spark.dataSource.register(CborDataSource)
-        _REGISTERED.add(key)
-
-
 def cbors_to_samples(spark: SparkSession, paths: str | list[str]) -> DataFrame:
     """Read CBOR shard(s) into (``__url__``, ``__idx__``, ``sample``) rows
     (reference ``cbors_to_samples``; ``cbors2_to_samples`` is the same
     reader — the reference binds both names to one implementation)."""
-    register(spark)
-    if isinstance(paths, list):
-        paths = ",".join(paths)
-    return spark.read.format("cbors").option("path", paths).load()
+    from video_data_pipeline_spark.sources.webdataset import _scan_shards, expand_paths
+
+    return _scan_shards(spark, expand_paths(paths), _read_cbor_shard, CBOR_SAMPLE_SCHEMA)
 
 
 #: reference exports both names for the same reader (cborsiterators.py:27,51)

@@ -1,12 +1,13 @@
 """Scheme-dispatch stream opener (reference ``gopen.py:316-344``).
 
 The reference opens every shard URL through a ``gopen_schemes`` table
-(pipe/http/https/s3/gs/ais/...). Same shape here, Spark-flavored: the tar
-DataSource's partition reader calls :func:`gopen` per shard, so each
-*executor* opens its own shards directly against the object store — the
-driver never proxies bytes. Handlers must be constructible inside Python
-worker processes (no driver-process state): s3 clients are built lazily
-per-process from env/arguments.
+(pipe/http/https/s3/gs/ais/...). Same shape here, Spark-flavored: the
+shard scan's per-shard read function (tar and CBOR, batch and stream;
+``sources.webdataset._per_shard``) calls :func:`gopen` inside the scan
+task, so each *executor* opens its own shards directly against the
+object store — the driver never proxies bytes. Handlers must be
+constructible inside Python worker processes (no driver-process state):
+s3 clients are built lazily per-process from env/arguments.
 
 Supported out of the box:
 

@@ -9,19 +9,24 @@ The reference scans tar shards with generator chains
     sample map<string, binary>
 
 Design for scale:
-- Batch reads are a JVM-planned shard frame, one row and one partition per
-  shard file (``spark.range(n, numPartitions=n)``), with ONE
-  ``mapInPandas`` that streams each shard. Spark schedules shards across
+- Every shard read in this package — tar batch, tar stream and CBOR
+  (:mod:`.cbors`) — is one mechanism: a frame with one row per shard,
+  then ONE ``mapInPandas`` that calls a per-shard read function on each
+  row's path and streams its rows out in bounded Arrow batches. Only the
+  frame differs.
+- Batch reads (:func:`map_shards`, :func:`read_webdataset`) plan the frame
+  on the JVM, one row and one partition per shard file
+  (``spark.range(n, numPartitions=n)``). Spark schedules shards across
   executors exactly like the reference's shard striping
   (``split_by_node``/``split_by_worker``, shardlists.py:115-142), but
   elastically and with retry, and planning costs no Python round trips.
-- :func:`map_shards` exposes that per-shard kernel: a plan runs its own
-  per-shard function inside the scan worker, so a shard-local stage
-  (tokenize → pack → merge) is one Python pass with no shuffle.
-  :func:`read_webdataset` is the kernel with an identity function.
-- Streaming reads (:func:`read_webdataset_stream`) are a Spark 4 Python
-  ``DataSourceStreamReader`` (``readStream.format("webdataset")``); both
-  paths share :func:`_read_shard`.
+- :func:`map_shards` exposes that kernel with a caller's per-shard
+  function: a shard-local stage (tokenize → pack → merge) is one Python
+  pass with no shuffle. :func:`read_webdataset` is the identity function.
+- Streaming reads (:func:`read_webdataset_stream`) take the frame from
+  Spark's own file-source stream, listing shard paths only, so offsets,
+  checkpointed exactly-once delivery and ``maxFilesPerTrigger`` admission
+  are Spark's; the JVM never reads shard bytes.
 - Streaming tar read (mode ``r|``) — memory is bounded by one member, not
   one shard, matching the reference's ``stream.members = []`` release
   (tariterators.py:135); output leaves the worker in bounded Arrow batches.
@@ -44,11 +49,6 @@ from collections.abc import Callable, Iterable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-)
 from pyspark.sql.types import (
     BinaryType,
     LongType,
@@ -66,6 +66,9 @@ SAMPLE_SCHEMA = StructType(
         StructField("sample", MapType(StringType(), BinaryType())),
     ]
 )
+
+#: file names a directory contributes as shards, in batch and stream reads
+_SHARD_GLOBS = ("*.tar", "*.tgz", "*.tar.gz")
 
 _META_RE = re.compile(r"^__[a-z0-9_]+__($|/)")
 
@@ -124,11 +127,6 @@ def iter_tar_samples(
         yield current_key, idx, current
 
 
-class _ShardPartition(InputPartition):
-    def __init__(self, path: str):
-        self.path = path
-
-
 def _filters_from_options(select: str | None, rename: str | None):
     select_files = None
     rename_files = None
@@ -148,8 +146,7 @@ def _filters_from_options(select: str | None, rename: str | None):
 
 
 def _read_shard(path: str, select: str | None, rename: str | None, gopen_kw: dict):
-    """One shard → sample tuples; shared by :func:`map_shards` and the
-    stream reader.
+    """One tar shard → sample tuples; the read function of every tar scan.
 
     scheme-dispatch open (gopen.py:316-344 semantics): each executor
     streams its shard straight from file/pipe/http/s3 — the driver never
@@ -165,86 +162,10 @@ def _read_shard(path: str, select: str | None, rename: str | None, gopen_kw: dic
         fh.close()
 
 
-def _gopen_kw(options: dict) -> dict:
-    return {
-        k: options[k]
-        for k in ("endpoint_url", "access_key_id", "secret_access_key")
-        if options.get(k)
-    }
-
-
-class _WebDatasetStreamReader(DataSourceStreamReader):
-    """``spark.readStream.format("webdataset")`` — shards as a streaming
-    source (the reference's "watch a bucket, ingest new tars" pattern that
-    its DataLoader world can't express; ROADMAP round-1 #7).
-
-    Offsets are the sorted set of discovered shard paths (JSON-serializable
-    and replayable); each microbatch plans ONE partition PER NEW SHARD, so
-    ingest parallelism scales with arrival rate and executors stream their
-    shards directly via gopen — exactly-once per shard under checkpointing
-    (Spark replays partitions(start, end) deterministically from offsets)."""
-
-    def __init__(self, options: dict):
-        self.path_spec = options.get("path", "")
-        self.select = options.get("select_files")
-        self.rename = options.get("rename_files")
-        self.gopen_kw = _gopen_kw(options)
-        # maxFilesPerTrigger analog: cap how many NEW shards one microbatch
-        # ingests (admission control for backlog catch-up). Best-effort: the
-        # cap is applied against the last offset this reader instance saw
-        # (committed or returned), so the first batch after a driver restart
-        # may exceed it once.
-        raw = options.get("max_shards_per_batch")
-        self.max_shards = int(raw) if raw else None
-        self._base: set[str] = set()
-
-    def initialOffset(self) -> dict:
-        return {"files": []}
-
-    def latestOffset(self) -> dict:
-        discovered = sorted(set(expand_paths(self.path_spec)))
-        if self.max_shards is None:
-            return {"files": discovered}
-        new = [p for p in discovered if p not in self._base][: self.max_shards]
-        end = sorted(self._base | set(new))
-        self._base = set(end)
-        return {"files": end}
-
-    def commit(self, end: dict) -> None:
-        self._base |= set(end.get("files", []))
-
-    def partitions(self, start: dict, end: dict):
-        new = sorted(set(end.get("files", [])) - set(start.get("files", [])))
-        return [_ShardPartition(p) for p in new]
-
-    def read(self, partition: _ShardPartition | None):
-        if partition is None:
-            return
-        yield from _read_shard(partition.path, self.select, self.rename, self.gopen_kw)
-
-
-class WebDatasetDataSource(DataSource):
-    """``spark.readStream.format("webdataset")`` — one row per tar sample.
-
-    Streaming only: batch reads go through :func:`map_shards`. Options:
-    ``select_files`` (``;``-separated globs kept, scan pushdown),
-    ``rename_files`` (``new=old`` suffix rewrites, e.g. ``txt=cls``).
-    """
-
-    @classmethod
-    def name(cls) -> str:
-        return "webdataset"
-
-    def schema(self) -> StructType:
-        return SAMPLE_SCHEMA
-
-    def streamReader(self, schema: StructType) -> "_WebDatasetStreamReader":
-        return _WebDatasetStreamReader(self.options)
-
-
-def expand_paths(path_spec: str) -> list[str]:
-    """Expand a path option (supports ``::``/braces via shardlists, plus
-    filesystem globs and directories)."""
+def expand_paths(path_spec: str | list[str]) -> list[str]:
+    """Expand a path spec or list (supports ``::``/braces via shardlists,
+    plus filesystem globs and directories); empty entries expand to
+    nothing."""
     import glob as globmod
     import os
 
@@ -252,15 +173,17 @@ def expand_paths(path_spec: str) -> list[str]:
 
     from video_data_pipeline_spark.sources.gopen import is_remote
 
+    if isinstance(path_spec, list):
+        path_spec = ",".join(path_spec)
     out: list[str] = []
-    for p in expand_urls(path_spec.split(",")):
+    for p in expand_urls([s for s in path_spec.split(",") if s]):
         if is_remote(p):
             # remote URL: no local glob/dir expansion (brace/`::` expansion
             # already happened in expand_urls)
             out.append(p)
         elif os.path.isdir(p):
             hits = []
-            for pat in ("*.tar", "*.tgz", "*.tar.gz"):
+            for pat in _SHARD_GLOBS:
                 hits.extend(globmod.glob(os.path.join(p, pat)))
             out.extend(sorted(hits))
         elif any(ch in p for ch in "*?["):
@@ -270,17 +193,14 @@ def expand_paths(path_spec: str) -> list[str]:
     return out
 
 
-_REGISTERED: set[int] = set()
-
-
 def register(spark: SparkSession) -> None:
+    """Ship the package to executors (:func:`ensure_shipped`); no reader
+    format needs registering, since every shard read is the shard-scan
+    kernel below. Kept because the repository benchmark
+    (``perfbench/run.py``) calls it in its set-up."""
     from video_data_pipeline_spark.session import ensure_shipped
 
     ensure_shipped(spark)
-    key = id(spark)
-    if key not in _REGISTERED:
-        spark.dataSource.register(WebDatasetDataSource)
-        _REGISTERED.add(key)
 
 
 #: bounds on one Arrow batch leaving a shard worker: a batch holds a slice
@@ -314,6 +234,43 @@ def _pandas_batches(rows: Iterable[tuple], columns: list[str]) -> Iterator[pd.Da
         yield pd.DataFrame.from_records(buf, columns=columns)
 
 
+def _per_shard(
+    frame: DataFrame,
+    path_of: Callable[[object], str],
+    read: Callable[[str], Iterable[tuple]],
+    schema: StructType,
+) -> DataFrame:
+    """The one ``mapInPandas`` of every shard scan: each row of ``frame``
+    names one shard in its first column (``path_of`` turns the value into
+    the shard's path), and ``read(path)`` yields that shard's rows of
+    ``schema`` as tuples in field order. Rows leave in bounded Arrow
+    batches (:data:`_BATCH_ROWS` rows or about :data:`_BATCH_BYTES`
+    payload bytes)."""
+    from video_data_pipeline_spark.session import ensure_shipped
+
+    ensure_shipped(frame.sparkSession)
+    columns = schema.fieldNames()
+
+    def _scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            for v in pdf.iloc[:, 0]:
+                yield from _pandas_batches(read(path_of(v)), columns)
+
+    return frame.mapInPandas(_scan, schema=schema)
+
+
+def _scan_shards(
+    spark: SparkSession,
+    shards: list[str],
+    read: Callable[[str], Iterable[tuple]],
+    schema: StructType,
+) -> DataFrame:
+    """Batch shard-scan kernel: a JVM-planned frame with one row and one
+    partition per expanded shard path, then :func:`_per_shard`."""
+    frame = spark.range(0, len(shards), 1, numPartitions=max(len(shards), 1))
+    return _per_shard(frame, lambda i: shards[i], read, schema)
+
+
 def map_shards(
     spark: SparkSession,
     paths: str | list[str],
@@ -326,35 +283,24 @@ def map_shards(
     """Run ``fn`` over every tar shard inside the scan worker.
 
     The shard frame is planned on the JVM: one row and one partition per
-    expanded path. One ``mapInPandas`` streams each shard's samples, as
+    expanded path (:func:`_scan_shards`). Each shard's samples stream, as
     ``(key, url, member_idx, sample)`` tuples in tar order, through
-    ``fn``, which yields rows of ``schema`` as tuples in field order. Rows
-    leave in bounded Arrow batches (:data:`_BATCH_ROWS` rows or about
-    :data:`_BATCH_BYTES` payload bytes). A per-shard stage (tokenize →
-    pack → merge) thereby runs in one Python pass with no shuffle.
+    ``fn``, which yields rows of ``schema`` as tuples in field order. A
+    per-shard stage (tokenize → pack → merge) thereby runs in one Python
+    pass with no shuffle.
 
     ``select_files``/``rename_files`` are the scan pushdowns; ``gopen_kw``
     (``endpoint_url``, ``access_key_id``, ``secret_access_key``) reach
     :func:`gopen` on the executors."""
-    from video_data_pipeline_spark.session import ensure_shipped
-
-    ensure_shipped(spark)
-    if isinstance(paths, list):
-        paths = ",".join(paths)
-    shards = expand_paths(paths) if paths else []
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
-    columns = schema.fieldNames()
-    kw = _gopen_kw(gopen_kw)
-
-    def _scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for i in pdf["id"]:
-                samples = _read_shard(shards[i], select_files, rename_files, kw)
-                yield from _pandas_batches(fn(samples), columns)
-
-    frame = spark.range(0, len(shards), 1, numPartitions=max(len(shards), 1))
-    return frame.mapInPandas(_scan, schema=schema)
+    kw = {k: v for k, v in gopen_kw.items() if v}
+    return _scan_shards(
+        spark,
+        expand_paths(paths),
+        lambda path: fn(_read_shard(path, select_files, rename_files, kw)),
+        schema,
+    )
 
 
 def read_webdataset(
@@ -389,30 +335,55 @@ def read_webdataset(
 
 def read_webdataset_stream(
     spark: SparkSession,
-    paths: str | list[str],
+    paths: str,
     select_files: str | None = None,
     rename_files: str | None = None,
     max_shards_per_batch: int | None = None,
 ) -> DataFrame:
-    """Streaming scan: new tar shards appearing under ``paths`` become
-    microbatches (one partition per new shard). Combine with the streaming
-    twins (streaming/jobs.py) or ``decode_columns`` exactly like the batch
-    reader; checkpointing gives exactly-once per shard.
-    ``max_shards_per_batch`` is the maxFilesPerTrigger analog — admission
-    control so a backlog catches up in bounded microbatches. Use it with a
-    processingTime trigger: ``availableNow`` captures one (capped) offset
-    and stops, leaving the rest of the backlog for the next run."""
-    register(spark)
-    if isinstance(paths, list):
-        paths = ",".join(paths)
-    reader = spark.readStream.format("webdataset").option("path", paths)
-    if select_files:
-        reader = reader.option("select_files", select_files)
-    if rename_files:
-        reader = reader.option("rename_files", rename_files)
+    """Streaming scan: tar shards appearing under ``paths`` become
+    microbatches of samples, with the batch reader's schema and per-shard
+    read. Combine with the streaming twins (streaming/jobs.py) or
+    ``decode_columns(..., suffixes=...)`` exactly like the batch reader.
+
+    ``paths`` is ONE local directory or glob that Spark's file source can
+    list; a directory contributes its ``*.tar``/``*.tgz``/``*.tar.gz``
+    files. A list, a ``::`` or brace-range spec, a ``pipe:`` command or a
+    remote URL raises ``ValueError``: read a fixed list of shard URLs with
+    :func:`read_webdataset`.
+
+    The stream is Spark's ``binaryFile`` file source projected to
+    ``path``, so listing never reads shard bytes and memory stays
+    O(member). Offsets, checkpointed exactly-once delivery per shard and
+    restarts are the file source's. ``max_shards_per_batch`` is its
+    ``maxFilesPerTrigger``: a backlog drains in microbatches of at most
+    that many shards, under a processingTime trigger and under
+    ``availableNow`` alike (which drains the whole backlog, then stops).
+    The file source packs small files into one task, so a task may read
+    several small shards in turn."""
+    from video_data_pipeline_spark.sources.gopen import is_remote
+    from video_data_pipeline_spark.sources.shardlists import _BRACE
+
+    if not isinstance(paths, str) or "::" in paths or _BRACE.search(paths) or is_remote(paths):
+        raise ValueError(
+            f"read_webdataset_stream watches one local directory or glob, "
+            f"not {paths!r}; read a fixed list of shard URLs with read_webdataset"
+        )
+    reader = (
+        spark.readStream.format("binaryFile")
+        # a file-source stream must be given its schema; this is binaryFile's
+        .schema("path string, modificationTime timestamp, length bigint, content binary")
+        .option("pathGlobFilter", "*.{" + ",".join(g[2:] for g in _SHARD_GLOBS) + "}")
+    )
     if max_shards_per_batch:
-        reader = reader.option("max_shards_per_batch", str(max_shards_per_batch))
-    return reader.load()
+        reader = reader.option("maxFilesPerTrigger", max_shards_per_batch)
+    return _per_shard(
+        reader.load(paths).select("path"),
+        # the file source names a shard ``file:/dir/x.tar``; ``__url__``
+        # carries the local path, as in read_webdataset
+        lambda uri: uri.removeprefix("file:"),
+        lambda path: _read_shard(path, select_files, rename_files, {}),
+        SAMPLE_SCHEMA,
+    )
 
 
 #: suffix → Spark cast for :func:`decode_columns` (reference basichandlers,
