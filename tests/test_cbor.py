@@ -108,6 +108,20 @@ def test_cbors_to_samples_datasource(spark, tmp_path):
     assert idx == {("a.cbors", 0), ("a.cbors", 1), ("a.cbors", 2), ("b.cbors", 0)}
 
 
+def test_cbors_to_samples_reads_a_directory(spark, tmp_path):
+    """A directory expands to its ``*.cbors`` shards, not to tar shards."""
+    from video_data_pipeline_spark.sources.cbors import cbors_to_samples
+
+    for name in ("a", "b"):
+        (tmp_path / f"{name}.cbors").write_bytes(
+            b"".join(cbor_encode({"__key__": f"{name}{i}"}) for i in range(2))
+        )
+    (tmp_path / "notes.txt").write_text("not a shard")
+    rows = cbors_to_samples(spark, str(tmp_path)).collect()
+    got = sorted((r["__url__"].rsplit("/", 1)[-1], r["__idx__"]) for r in rows)
+    assert got == [("a.cbors", 0), ("a.cbors", 1), ("b.cbors", 0), ("b.cbors", 1)]
+
+
 def test_cbors_non_map_sample_raises(spark, tmp_path):
     shard = tmp_path / "bad.cbors"
     shard.write_bytes(cbor_encode([1, 2, 3]))

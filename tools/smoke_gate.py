@@ -20,6 +20,12 @@ at *analysis* time — cheap to detect, expensive to miss. This gate:
    classes at sf0.001, above Spark's stock cap of 100). The first round
    may plan differently after the work before it, so the last is a
    repeat of the second.
+7. checks that the session's driver JVM used its class-data-sharing
+   archive (``session.cds_status``): fails when the JVM was given the
+   archive and its CDS log shows it refused it (a stale or damaged
+   archive; get_spark has deleted it, so the next run rebuilds it), or
+   when no CDS flag reached the JVM although no skip rule held. The first
+   run on a host has no archive yet and passes while its JVM writes one.
 
 Analysis is driver-side only, so the whole gate runs in ~1 minute. Run it
 before any end-of-round commit:
@@ -200,6 +206,17 @@ def main() -> int:
         failures.append("generated classes recompiled on a repeated query")
         print(f"codegen FAIL {detail}")
 
+    # 7. the driver JVM mapped its CDS archive, or writes one at exit
+    from video_data_pipeline_spark.session import cds_status
+
+    status = cds_status()
+    if status in ("mapped", "building") or status.startswith("skipped: "):
+        print(f"cds OK  ({status})")
+    else:
+        failures.append("driver JVM did not use its class-data-sharing archive")
+        print(f"cds FAIL {status or 'get_spark did not launch the JVM'} "
+              "(see session.cds_status)")
+
     dt = time.time() - t_start
     if failures:
         print(f"\nSMOKE GATE FAILED in {dt:.0f}s — {len(failures)} failure(s):")
@@ -208,7 +225,7 @@ def main() -> int:
         return 1
     print(f"\nSMOKE GATE PASSED in {dt:.0f}s "
           f"({len(selfcheck.TABLES)} tables, {len(registry)} plans, entry, workers, "
-          "codegen)")
+          "codegen, cds)")
     return 0
 
 

@@ -162,10 +162,13 @@ def _read_shard(path: str, select: str | None, rename: str | None, gopen_kw: dic
         fh.close()
 
 
-def expand_paths(path_spec: str | list[str]) -> list[str]:
+def expand_paths(
+    path_spec: str | list[str], dir_globs: tuple[str, ...] = _SHARD_GLOBS
+) -> list[str]:
     """Expand a path spec or list (supports ``::``/braces via shardlists,
-    plus filesystem globs and directories); empty entries expand to
-    nothing."""
+    plus filesystem globs and directories); a directory expands to its
+    files matching ``dir_globs`` (tar shards by default); empty entries
+    expand to nothing."""
     import glob as globmod
     import os
 
@@ -183,7 +186,7 @@ def expand_paths(path_spec: str | list[str]) -> list[str]:
             out.append(p)
         elif os.path.isdir(p):
             hits = []
-            for pat in _SHARD_GLOBS:
+            for pat in dir_globs:
                 hits.extend(globmod.glob(os.path.join(p, pat)))
             out.extend(sorted(hits))
         elif any(ch in p for ch in "*?["):
