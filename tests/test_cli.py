@@ -68,6 +68,9 @@ def test_cli_calibrate_and_calibrated_query(tmp_path):
     assert set(caps) >= {"minhash_bands", "prefix_buckets",
                          "containment_postings", "simhash_chunks",
                          "simhash_combos"}
+    line = next(x for x in r.stdout.splitlines() if x.startswith("simhash_chunks"))
+    assert (f"p99={caps['simhash_chunks']['p99']:6d}" in line
+            and "pairs uncapped=" in line and "capped=" in line), line
 
     r = run_cli("query", "q_simhash_near_pairs", "--calibrate",
                 "--sf-dir", "/root/testdata/sf0.001", "--show", "3")

@@ -19,7 +19,7 @@ from video_data_pipeline_spark.functions.text import (
     tokenize_conversation,
 )
 from video_data_pipeline_spark.sources.shardlists import expand_urls
-from video_data_pipeline_spark.sources.webdataset import base_plus_ext
+from video_data_pipeline_spark.sources.webdataset import base_plus_ext, expand_paths
 
 # ---------------------------------------------------------- greedy packing
 
@@ -147,6 +147,14 @@ def test_expand_urls_brace_count(lo, width, span):
     assert len(out) == span + 1
     assert out[0] == f"s-{str(lo).zfill(max(width, len(str(lo))))}.tar"
     assert len(set(out)) == len(out)
+
+
+def test_expand_paths_splits_only_a_string_spec(tmp_path):
+    shard = str(tmp_path / "a,b.tar")
+    open(shard, "wb").close()
+    assert expand_paths([shard]) == [shard]
+    assert expand_paths(str(tmp_path)) == [shard]
+    assert expand_paths("/d/x.tar,/d/y.tar") == ["/d/x.tar", "/d/y.tar"]
 
 
 @given(st.text(alphabet=st.characters(blacklist_characters="\x00"), max_size=30))

@@ -1,6 +1,6 @@
 """Stage-metrics telemetry (video_data_pipeline_spark/telemetry.py, r12).
 
-Pins the contract tools/scale_probe.py and tools/bench_e2e.py rely on:
+Pins the contract tools/perf_probe.py and tools/bench_e2e.py rely on:
 cumulative counters are readable from a plain driver session, a
 StageMetricsDelta around a shuffle job sees that job's shuffle bytes, the
 delta also lands when the body raises (a dying query's spill is the datum

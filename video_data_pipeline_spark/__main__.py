@@ -211,7 +211,9 @@ def main(argv: list[str] | None = None) -> int:
                 if rec["binds"] else "cap invisible (exact)"
             )
             print(f"{name:22s} default={default:5d} max={rec['max']:8d} "
-                  f"oversized={rec['oversized']:6d} {verdict}")
+                  f"p99={rec['p99']:6d} oversized={rec['oversized']:6d} "
+                  f"pairs uncapped={rec['uncapped_pairs']:.3g} "
+                  f"capped={rec['capped_pairs']:.3g} {verdict}")
         if args.json_out:
             with open(args.json_out, "w") as f:
                 json.dump(out, f, indent=1)

@@ -43,10 +43,11 @@ All four capped fronts share the two pieces of this module:
   pair arithmetic as :func:`measure_front`, so the pre-flight and the
   run-time observation count one workload one way.
 
-The same measurement core backs ``tools/cap_calibrate.py`` (the manual
-pre-flight CLI) through :func:`standard_fronts`, which builds each front
-with the family's own key builder — the frame the registered pre-flight
-measures.
+The same measurement core backs ``python -m video_data_pipeline_spark
+calibrate`` (the manual pre-flight CLI; ``tools/cap_calibrate.py`` ran the
+same loop and reproduces at commit ``296c966``) through
+:func:`standard_fronts`, which builds each front with the family's own key
+builder — the frame the registered pre-flight measures.
 
 At 100 TB the measurement is one shuffle over the corpus per front —
 ~the cost of a distinct-count — and the decision it buys is the
@@ -757,10 +758,10 @@ def cached_plan(key, compute):
 def standard_fronts(spark, sf_dir: str):
     """(name, default_cap, key-DataFrame builder) for every capped front
     in the engine, over the documents table at ``sf_dir`` — the
-    measurement matrix ``tools/cap_calibrate.py`` reports. Each builder
-    is the family's own front-key builder, the one its ``calibrate=True``
-    pre-flight measures; builders are lazy so the CLI can flush
-    per-front."""
+    measurement matrix ``python -m video_data_pipeline_spark calibrate``
+    reports. Each builder is the family's own front-key builder, the one
+    its ``calibrate=True`` pre-flight measures; builders are lazy so the
+    CLI can flush per-front."""
     from video_data_pipeline_spark.queries.dedup import (
         DEFAULT_LSH_MAX_BUCKET_SIZE,
         DEFAULT_SIMHASH_MAX_BUCKET_SIZE,

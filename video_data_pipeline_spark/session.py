@@ -30,7 +30,6 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    query_warnings: bool | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
 
@@ -44,15 +43,6 @@ def get_spark(
     - ``SPARK_DRIVER_MEMORY``: ``spark.driver.memory`` (default ``16g``).
     - ``SPARK_GRAFT_WAREHOUSE``: ``spark.sql.warehouse.dir`` (default
       ``/tmp/vdps-warehouse``).
-    - ``SPARK_GRAFT_QUERY_WARNINGS``: the default of ``query_warnings``.
-
-    ``query_warnings=True`` (or ``SPARK_GRAFT_QUERY_WARNINGS=1``) attaches
-    the session-level warning listener
-    (:func:`video_data_pipeline_spark.telemetry.install_query_warnings`):
-    every query on the session then warns when a hot-bucket cap BINDS
-    (capped-subset result) or spill crosses the pathology threshold —
-    the probe tools' early warnings, in production use. Opt-in because it
-    needs py4j's callback server (one extra socket + daemon thread).
 
     A call that launches the driver JVM starts it from the host's CDS
     archive, or has it write one at exit (:func:`cds_status`); the flags go
@@ -138,14 +128,6 @@ def get_spark(
     java_opts = (extra_conf or {}).get("spark.driver.extraJavaOptions", "")
     spark = _get_or_create(builder, java_opts)
     spark.sparkContext.setLogLevel("WARN")
-    if query_warnings is None:
-        query_warnings = os.environ.get("SPARK_GRAFT_QUERY_WARNINGS", "") not in (
-            "", "0", "false",
-        )
-    if query_warnings:
-        from video_data_pipeline_spark.telemetry import install_query_warnings
-
-        install_query_warnings(spark)
     return spark
 
 
@@ -498,10 +480,15 @@ def ensure_shipped(spark: SparkSession) -> None:
     ).hexdigest()[:12]
     zip_path = os.path.join(tempfile.gettempdir(), f"vdps_pkg_{stamp}.zip")
     if not os.path.exists(zip_path):
-        tmp = zip_path + ".tmp"
-        with zipfile.ZipFile(tmp, "w") as zf:
+        # a temp file of this call's own: processes shipping one stamp at
+        # once each build theirs, and the last os.replace wins
+        fd, tmp = tempfile.mkstemp(
+            prefix=os.path.basename(zip_path) + ".", dir=os.path.dirname(zip_path)
+        )
+        with os.fdopen(fd, "wb") as f, zipfile.ZipFile(f, "w") as zf:
             for p in files:
                 zf.write(p, os.path.join("video_data_pipeline_spark", os.path.relpath(p, pkg_dir)))
+        os.chmod(tmp, 0o644)  # mkstemp's 0600 would hide it from other users
         os.replace(tmp, zip_path)
     spark.sparkContext.addPyFile(zip_path)
     _SHIPPED.add(key)

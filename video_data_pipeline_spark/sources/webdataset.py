@@ -176,10 +176,11 @@ def expand_paths(
 
     from video_data_pipeline_spark.sources.gopen import is_remote
 
-    if isinstance(path_spec, list):
-        path_spec = ",".join(path_spec)
+    # only a string spec is a comma list; a list's entries are whole paths
+    if isinstance(path_spec, str):
+        path_spec = path_spec.split(",")
     out: list[str] = []
-    for p in expand_urls([s for s in path_spec.split(",") if s]):
+    for p in expand_urls([s for s in path_spec if s]):
         if is_remote(p):
             # remote URL: no local glob/dir expansion (brace/`::` expansion
             # already happened in expand_urls)

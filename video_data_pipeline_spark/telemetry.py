@@ -5,7 +5,7 @@ Motivation (r10/r11 VERDICT #5): the sfp30 probe's uncapped pair joins
 died as *disk exhaustion five minutes in* — the only observable was the OS
 filling up. The metric that names the pathology before the disk fills is
 ``diskBytesSpilled`` (and its memory twin), which Spark already tracks per
-stage; this module surfaces it driver-side so ``tools/scale_probe.py`` and
+stage; this module surfaces it driver-side so ``tools/perf_probe.py`` and
 ``tools/bench_e2e.py`` can record a per-query spill/shuffle budget and
 WARN while the job is still healthy.
 
@@ -441,9 +441,8 @@ def install_query_warnings(
     tests inject a collector (listener-bus callbacks run on a JVM-driven
     thread, so a plain list sidesteps cross-thread warning capture).
 
-    Opt-in from :func:`video_data_pipeline_spark.session.get_spark` via
-    ``query_warnings=True`` or ``SPARK_GRAFT_QUERY_WARNINGS=1``. The py4j
-    callback server this needs is an extra socket + daemon thread — the
+    This call is the one switch: ``get_spark`` never installs it. The py4j
+    callback server it needs is an extra socket + daemon thread — the
     reason it is not unconditionally on (see module docstring)."""
     if spark in _INSTALLED:
         return _INSTALLED[spark]
