@@ -85,6 +85,39 @@ def test_no_warning_when_cap_has_headroom(spark, hot_bucket_docs):
         handle.uninstall()
 
 
+def test_cap_that_drops_every_pair_still_announces_itself(spark, sf_dir):
+    # cap 1 leaves one member per bucket: 0 rows. With AQE's
+    # empty-relation propagation on, the CollectMetrics node goes with
+    # the empty subtree: the Observation raises and no warning fires
+    from pyspark.sql import Observation
+
+    from video_data_pipeline_spark.queries.simjoin import q_prefix_filter_join
+
+    obs = Observation("cap_one")
+    df = q_prefix_filter_join(spark, sf_dir, max_bucket_size=1, observation=obs)
+    assert df.count() == 0
+    got = obs.get
+    # every observed bucket holds >= 2 members, so cap 1 binds on all
+    assert got["n_buckets"] > 0
+    assert got["oversized_buckets"] == got["n_buckets"]
+    assert got["max_bucket_size_seen"] >= 2
+    assert got["capped_candidate_pairs"] == 0 < got["uncapped_candidate_pairs"]
+
+    events: list[tuple[str, type]] = []
+    handle = install_query_warnings(
+        spark, emit=lambda msg, cat: events.append((msg, cat))
+    )
+    try:
+        assert q_prefix_filter_join(spark, sf_dir, max_bucket_size=1).count() == 0
+        assert _wait_for(
+            lambda: any(cat is CapDivergenceWarning for _, cat in events)
+        ), f"no cap-divergence warning arrived; events={events}"
+        msg = next(m for m, cat in events if cat is CapDivergenceWarning)
+        assert "cap:prefix_buckets" in msg
+    finally:
+        handle.uninstall()
+
+
 def test_spill_warning_plumbing(spark):
     # forcing >8 GiB of real spill in a unit test is not reasonable; a
     # negative threshold proves the delta + emit path end-to-end

@@ -288,60 +288,6 @@ def test_streaming_lsh_pairs_components_match_batch(spark, tmp_path, sf_dir):
     assert spans > 0, "no cross-batch pair — anchor state did not persist"
 
 
-def test_streaming_dedup_tws_matches_legacy_api(spark, tmp_path):
-    """The transformWithStateInPandas twin produces exactly the
-    applyInPandasWithState operator's output (first occurrence wins across
-    micro-batches). Requires the RocksDB state store provider."""
-    import pytest
-
-    pytest.importorskip("pyspark.sql.streaming.stateful_processor")
-    # the TWS state-server protocol speaks protobuf from the Python side;
-    # without the protobuf package the driver worker crashes at pre-init
-    pytest.importorskip("google.protobuf")
-    from video_data_pipeline_spark.streaming.stateful import (
-        streaming_dedup_tws,
-        use_rocksdb_state,
-    )
-
-    src = tmp_path / "src_tws"
-    src.mkdir()
-    pd.DataFrame({"__key__": ["k1", "k2"], "fingerprint": ["A", "B"]}).to_parquet(
-        src / "b1.parquet"
-    )
-    pd.DataFrame({"__key__": ["k3", "k4"], "fingerprint": ["B", "C"]}).to_parquet(
-        src / "b2.parquet"
-    )
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
-    )
-    use_rocksdb_state(spark)
-    try:
-        stream = (
-            spark.readStream.schema("`__key__` string, fingerprint string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-        )
-        q = (
-            streaming_dedup_tws(stream)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName("dedup_tws_out")
-            .option("checkpointLocation", str(tmp_path / "ck_tws"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    rows = {
-        r.fingerprint: r for r in spark.sql("SELECT * FROM dedup_tws_out").collect()
-    }
-    assert set(rows) == {"A", "B", "C"}
-    assert rows["B"].first_key == "k2"
-    assert rows["A"].n_new == 1 and rows["C"].n_new == 1
-
-
 def test_streaming_heavy_hitters_emit_once_at_crossing(spark, tmp_path):
     """Counts accumulate across micro-batches; each item emits exactly
     once, in the batch where it crosses the threshold."""

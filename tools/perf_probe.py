@@ -14,10 +14,6 @@ One record per cell, built by :func:`cell_record`:
 - ``rows`` with ``--count``, which runs ``df.count()`` instead of the noop
   sink: the true workload to read a time ratio against, since perturbed
   corpora grow pair output faster than data;
-- ``plan_flags``: markers of a plan the planner had to rescue, read from
-  the DataFrame's own physical plan. The action runs under a
-  QueryExecution of its own, so this is the plan before AQE re-optimizes
-  it;
 - with ``--cap N``: N goes to the query's hot-bucket cap parameter, and
   the cap observation's counters (``oversized_*``, ``max_*_size_seen``,
   candidate pairs) go into the record;
@@ -49,8 +45,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-#: executed-plan markers of a plan AQE or the planner had to rescue
-PLAN_FLAGS = ("skewed=true", "CartesianProduct", "isEmptyRelation")
 #: the parameters the capped pair generators take their cap by
 CAP_PARAMS = ("max_bucket_size", "max_posting_size")
 
@@ -88,10 +82,6 @@ def cell_record(spark, fn, sf_dir: str, group: str, count: bool = False,
             else:
                 df.write.format("noop").mode("overwrite").save()
         rec["secs"] = round(time.time() - t0, 3)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        flags = {f: plan.count(f) for f in PLAN_FLAGS if f in plan}
-        if flags:
-            rec["plan_flags"] = flags
         if obs is not None:
             rec.update({k: int(v) for k, v in obs.get.items()})
     except Exception as e:  # noqa: BLE001 — the error is the cell's datum

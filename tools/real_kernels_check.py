@@ -3,11 +3,10 @@
 Several kernels are real code behind an import gate because the library is
 absent in this container (installs are not permitted): PIL JPEG/TIFF
 decode/encode, torch imagespecs + codec, SentencePiece tokenization,
-msgpack codec, decord video metadata, ffmpeg/ffprobe keyframes, and the
-protobuf-backed transformWithStateInPandas twin. The surrounding plumbing
-(schemas, batching, budgets, netpbm/png codecs) is real and tested
-everywhere; this tool answers "which gated branches did THIS environment
-actually exercise?" in one command:
+msgpack codec, decord video metadata and ffmpeg/ffprobe keyframes. The
+surrounding plumbing (schemas, batching, budgets, netpbm/png codecs) is
+real and tested everywhere; this tool answers "which gated branches did
+THIS environment actually exercise?" in one command:
 
     python tools/real_kernels_check.py          # probe + run available gated tests
 
@@ -32,11 +31,6 @@ BRANCHES: dict[str, tuple[list[str], list[str], str | None]] = {
     "msgpack_codec": (["msgpack"], [], "msgpack"),
     "decord_video_meta": (["decord"], [], "decord"),
     "ffmpeg_keyframes": ([], ["ffprobe", "ffmpeg"], "ffprobe or ffmpeg"),
-    "tws_streaming_dedup": (
-        ["pyspark.sql.streaming.stateful_processor", "google.protobuf"],
-        [],
-        "transform_with_state or tws",
-    ),
 }
 
 

@@ -33,10 +33,12 @@ All four capped fronts share the two pieces of this module:
     measures and reports it, and never refuses) or a cap of ``None``
     (accepting the quadratic workload; no pre-flight runs).
 
-  Only the measurement is memoized (``{geometry: FrontStats}`` keyed by
-  family, corpus fingerprint and cap, optionally persisted across
-  processes); the decision is driver arithmetic re-derived on every
-  call, so a refusal or a budget change never re-measures.
+  Only the measurement is memoized, in process (``{geometry:
+  FrontStats}`` keyed by family, corpus fingerprint and cap); the
+  decision is driver arithmetic re-derived on every call, so a refusal
+  or a budget change never re-measures. The retired cross-process JSON
+  sidecar and ``tools/plan_cache_probe.py`` reproduce at commit
+  ``27207c8``.
 
 - :func:`observe_cap`, the one cap telemetry the four capped cores
   attach to their bucket frames: five metrics, auto-named, with the same
@@ -56,7 +58,6 @@ difference between a silent recall hole and a named, budgeted plan.
 
 from __future__ import annotations
 
-import dataclasses
 import logging
 import os
 from collections.abc import Callable
@@ -503,208 +504,10 @@ def preflight(
 
 
 _PLAN_CACHE: dict[tuple, object] = {}
-_PERSISTED_LOADED = False
 
 
 def clear_plan_cache() -> None:
-    global _PERSISTED_LOADED
     _PLAN_CACHE.clear()
-    _PERSISTED_LOADED = False
-
-
-# -------------------------------------------- cross-process persistence
-#
-# r15 (VERDICT r14 #2): process-local memoization misses the usage
-# pattern where the pre-flight matters most — scheduled re-runs on an
-# unchanged (or slowly-growing) 100 TB corpus, each a NEW driver
-# process. Setting ``SPARK_GRAFT_PLAN_CACHE=/path/plan_cache.json``
-# spills every measurement to a JSON sidecar (atomic tmp+rename,
-# merge-on-save so concurrent jobs don't clobber each other) and
-# reloads it lazily on the first cached_plan call of a new process.
-# Staleness stays STRUCTURAL: keys embed the stat fingerprint (realpath
-# + per-leaf-file mtime_ns + size), so any rewrite of the parquet makes
-# a new key — persisted entries for the old bytes simply never match
-# again. Opt-in by env var, deliberately: an always-on sidecar would
-# leak measurements between unrelated test sessions, and the production
-# caller (a nightly job) is exactly the one that can set one env var.
-
-
-def plan_cache_path() -> str | None:
-    """Sidecar path from ``$SPARK_GRAFT_PLAN_CACHE`` (empty/unset →
-    persistence disabled, process-local cache only)."""
-    return os.environ.get("SPARK_GRAFT_PLAN_CACHE") or None
-
-
-def _key_to_json(k):
-    return [_key_to_json(x) for x in k] if isinstance(k, tuple) else k
-
-
-def _key_from_json(k):
-    return tuple(_key_from_json(x) for x in k) if isinstance(k, list) else k
-
-
-def _entry_to_json(obj):
-    if isinstance(obj, dict) and all(
-        isinstance(s, FrontStats) for s in obj.values()
-    ):
-        return {
-            "kind": "fronts",
-            "stats": {g: dataclasses.asdict(s) for g, s in obj.items()},
-        }
-    return None  # anything else stays process-local
-
-
-def _entry_from_json(rec):
-    if rec.get("kind") == "fronts":
-        return {g: FrontStats(**s) for g, s in rec["stats"].items()}
-    raise ValueError(f"unknown plan-cache entry kind {rec.get('kind')!r}")
-
-
-#: 2 since the measurement-only cache: format-1 sidecars held decision
-#: objects (plans, refusals) and are ignored, never misread
-_CACHE_FORMAT = 2
-
-#: sidecar entry cap (r15, ROADMAP r16 #4 pulled forward): entries are
-#: ~1 KB and structurally self-invalidating, but a deployment pointing
-#: one sidecar at thousands of distinct corpora shouldn't grow it
-#: unboundedly — the file keeps insertion order, so the cap drops the
-#: OLDEST entries (their corpora have usually been rewritten anyway,
-#: which orphans their fingerprint keys)
-_CACHE_MAX_ENTRIES = 512
-
-
-def _max_age_secs() -> float | None:
-    """Optional age-out (r16, VERDICT r15 #7):
-    ``SPARK_GRAFT_PLAN_CACHE_MAX_AGE_DAYS`` drops sidecar entries older
-    than N days on both read and save. Unset → no age limit: staleness is
-    primarily STRUCTURAL (fingerprint keys orphan on any corpus rewrite)
-    and the entry cap bounds growth; the age knob is for deployments that
-    also want a time bound (e.g. a budget-policy change should not serve
-    months-old measurements forever on a truly frozen corpus)."""
-    raw = os.environ.get("SPARK_GRAFT_PLAN_CACHE_MAX_AGE_DAYS")
-    if not raw:
-        return None
-    try:
-        return float(raw) * 86400.0
-    except ValueError:
-        log.warning("plan cache: ignoring non-numeric "
-                    "SPARK_GRAFT_PLAN_CACHE_MAX_AGE_DAYS=%r", raw)
-        return None
-
-
-def _fresh(rec: dict) -> bool:
-    import time
-
-    max_age = _max_age_secs()
-    if max_age is None:
-        return True
-    saved = rec.get("saved_at")
-    # entries written before the saved_at field existed have no timestamp;
-    # under an age policy treat them as expired (age unknown = not provably
-    # fresh)
-    return saved is not None and (time.time() - saved) <= max_age
-
-
-def _read_sidecar_records(path: str) -> list[dict]:
-    """Raw (still-JSON) records of a sidecar file, format-checked but not
-    parsed into measurements — the merge half of :func:`_persist`
-    works on these so fields like ``saved_at`` survive a rewrite."""
-    import json
-
-    try:
-        with open(path) as f:
-            doc = json.load(f)
-        if doc.get("format") != _CACHE_FORMAT:
-            return []
-        recs = doc.get("entries", [])
-        return recs if isinstance(recs, list) else []
-    except (OSError, ValueError, KeyError, TypeError) as e:
-        # a corrupt/unreadable sidecar must never fail the query — the
-        # cache is an optimization; fall back to measuring
-        log.warning("plan cache: ignoring unreadable sidecar %s (%s)", path, e)
-        return []
-
-
-def _read_sidecar(path: str) -> dict[tuple, object]:
-    out = {}
-    for rec in _read_sidecar_records(path):
-        # per-entry parse (ADVICE r15): one malformed or unknown-kind
-        # record (e.g. written by a newer version) skips THAT record,
-        # not the whole file — older readers keep every entry they
-        # can still understand
-        try:
-            if not _fresh(rec):
-                continue
-            out[_key_from_json(rec["key"])] = _entry_from_json(rec["entry"])
-        except (ValueError, KeyError, TypeError) as e:
-            log.warning("plan cache: skipping unparseable entry in %s (%s)",
-                        path, e)
-    return out
-
-
-def _load_persisted_once() -> None:
-    global _PERSISTED_LOADED
-    if _PERSISTED_LOADED:
-        return
-    _PERSISTED_LOADED = True
-    path = plan_cache_path()
-    if path is None:
-        return
-    loaded = _read_sidecar(path)
-    for k, v in loaded.items():
-        _PLAN_CACHE.setdefault(k, v)  # in-memory (fresher) entries win
-    if loaded:
-        log.info("plan cache: loaded %d persisted measurement(s) from %s",
-                 len(loaded), path)
-
-
-def _persist(key: tuple, entry) -> None:
-    path = plan_cache_path()
-    if path is None:
-        return
-    rec = _entry_to_json(entry)
-    if rec is None:
-        return
-    import json
-    import tempfile
-    import time
-
-    try:
-        d = os.path.dirname(os.path.abspath(path))
-        os.makedirs(d, exist_ok=True)
-        # an exclusive flock serializes the read-merge-replace (r16,
-        # VERDICT r15 #5 / ADVICE r15): without it two processes finishing
-        # measurements concurrently could both read, then the second
-        # os.replace silently dropped the first's new entry (lost update —
-        # only a future cache miss, but the "don't clobber" comment used
-        # to overstate the guarantee; now it doesn't have to)
-        with open(path + ".lock", "w") as lk:
-            try:
-                import fcntl
-
-                fcntl.flock(lk, fcntl.LOCK_EX)
-            except ImportError:  # non-POSIX: keep best-effort merge
-                pass
-            key_json = _key_to_json(key)
-            merged = [
-                r for r in _read_sidecar_records(path)
-                if r.get("key") != key_json and _fresh(r)
-            ]
-            merged.append(
-                {"key": key_json, "entry": rec, "saved_at": time.time()}
-            )
-            doc = {
-                "format": _CACHE_FORMAT,
-                # newest last; the cap drops the OLDEST entries
-                "entries": merged[-_CACHE_MAX_ENTRIES:],
-            }
-            fd, tmp = tempfile.mkstemp(dir=d, suffix=".plan_cache.tmp")
-            with os.fdopen(fd, "w") as f:
-                json.dump(doc, f, indent=1)
-            os.replace(tmp, path)  # atomic on POSIX
-    except OSError as e:
-        log.warning("plan cache: could not persist to %s (%s)", path, e)
-
 
 
 def corpus_fingerprint(sf_dir: str, table: str = "documents"):
@@ -737,19 +540,15 @@ def corpus_fingerprint(sf_dir: str, table: str = "documents"):
 
 def cached_plan(key, compute):
     """Memoized pre-flight measurement: return/compute the value under
-    ``key`` (None bypasses the cache entirely). With
-    ``$SPARK_GRAFT_PLAN_CACHE`` set, ``{geometry: FrontStats}`` values
-    also round-trip a JSON sidecar, so a NEW process on the unchanged
-    corpus skips the measurement too (r15, VERDICT r14 #2)."""
+    ``key`` (None bypasses the cache entirely). The memo lives in this
+    process only; a new driver process measures again."""
     if key is None:
         return compute()
-    _load_persisted_once()
     if key in _PLAN_CACHE:
         log.info("calibration cache hit for %s", key[0])
         return _PLAN_CACHE[key]
-    value = _PLAN_CACHE[key] = compute()
-    _persist(key, value)
-    return value
+    _PLAN_CACHE[key] = compute()
+    return _PLAN_CACHE[key]
 
 
 # ------------------------------------------------------------- CLI fronts

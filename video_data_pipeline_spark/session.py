@@ -85,6 +85,18 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "256k"),
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # A binding cap must announce itself. When a stage comes back
+        # empty, AQE's AQEPropagateEmptyRelation swaps the subtree above
+        # it for an empty relation, and with it the CollectMetrics node
+        # that ran inside: the cap observation is lost exactly when the
+        # cap drops every pair (prefix-filter cap 1 at sf0.001: 0 rows,
+        # no CapDivergenceWarning, Observation.get raising). Without the
+        # rule the empty stages still run, on no rows, and all five
+        # counters arrive.
+        .config(
+            "spark.sql.adaptive.optimizer.excludedRules",
+            "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation",
+        )
         # r18 perf: Spark caches the classes it compiles from generated
         # code in one per-JVM LRU of codegen.cache.maxEntries entries
         # (stock 100), keyed by the generated source. The registry's

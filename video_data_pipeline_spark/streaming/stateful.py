@@ -322,78 +322,6 @@ def streaming_lsh_pairs(
     )
 
 
-try:  # Spark 4.x modern stateful API; absent on older runtimes
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor as _SP
-except ImportError:  # pragma: no cover - this container ships Spark 4.1
-    _SP = object
-
-
-class _TWSDedupProcessor(_SP):
-    """transformWithStateInPandas processor for first-seen dedup."""
-
-    def __init__(self, ttl_ms: int | None):
-        self._ttl_ms = ttl_ms
-
-    def init(self, handle) -> None:
-        self._seen = handle.getValueState(
-            "seen", "seen long", ttlDurationMs=self._ttl_ms
-        )
-
-    def handleInputRows(self, key, rows, timerValues):
-        n = 0
-        first = None
-        for pdf in rows:
-            n += len(pdf)
-            if first is None and len(pdf):
-                first = str(pdf["__key__"].iloc[0])
-        if n > 0 and not self._seen.exists():
-            self._seen.update((1,))
-            yield pd.DataFrame(
-                {"fingerprint": [key[0]], "first_key": [first], "n_new": [n]}
-            )
-
-    def close(self) -> None:
-        pass
-
-
-def streaming_dedup_tws(
-    samples: DataFrame,
-    fingerprint_col: str = "fingerprint",
-    ttl_ms: int | None = None,
-) -> DataFrame:
-    """First-seen dedup on the MODERN stateful API
-    (``transformWithStateInPandas``, Spark 4.x) — same semantics as
-    :func:`streaming_dedup`, different machinery:
-
-    - typed state handles (``getValueState`` with a per-state schema and
-      built-in per-state TTL) instead of one flat state tuple + manual
-      processing-time timeouts;
-    - the operator REQUIRES the RocksDB state store provider (call
-      :func:`use_rocksdb_state` first) — state never lives on-heap, which
-      is the right default at fingerprint-scale cardinality;
-    - timers/initial-state hooks exist for richer operators (not needed
-      for dedup).
-
-    Kept alongside the ``applyInPandasWithState`` form because the old API
-    runs on the default state store (no RocksDB requirement) and the new
-    one is the forward path; the parity test pins them to identical
-    output.
-
-    Runtime dependency: the TWS state-server protocol requires the
-    ``protobuf`` Python package on driver and executors (PySpark ships the
-    generated ``StateMessage_pb2`` but not protobuf itself) — absent it,
-    the driver worker crashes at pre-init with
-    ``STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE``. The parity test
-    importorskips on ``google.protobuf`` accordingly (same gating pattern
-    as the decord/ffmpeg/SentencePiece kernels)."""
-    return samples.groupBy(fingerprint_col).transformWithStateInPandas(
-        statefulProcessor=_TWSDedupProcessor(ttl_ms),
-        outputStructType=_OUT_SCHEMA,
-        outputMode="append",
-        timeMode="none" if ttl_ms is None else "processingTime",
-    )
-
-
 _HH_OUT_SCHEMA = StructType(
     [
         StructField("item", StringType()),
