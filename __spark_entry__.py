@@ -6,7 +6,7 @@ implemented operator from SURVEY.md §2 (+ Phase-5 extensions) as
 any checked prefix covers every family, oracle-less queries last);
 ``oracle_sql()`` gives the DuckDB oracle for each SQL-expressible one.
 Counts are live properties of the registry — ``len(queries())`` /
-``len(oracle_sql())`` (175 / 173 as of round 9); implementations live in
+``len(oracle_sql())``; implementations live in
 ``video_data_pipeline_spark/queries/``.
 """
 

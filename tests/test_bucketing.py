@@ -7,8 +7,6 @@ join exchange-free (SURVEY.md §4 partitioning row; ARCHITECTURE.md).
 
 from __future__ import annotations
 
-import re
-
 import pytest
 
 
@@ -78,40 +76,3 @@ def test_ivf_lists_partition_pruning(spark, sf_dir, tmp_path):
     # the pruned scan returns exactly the probed lists' rows
     expected = assigned.where(F.col("cid").isin(probe)).count()
     assert probed.count() == expected > 0
-
-
-def test_write_bucketed_operator_and_bucket_pruning(spark, sf_dir, tmp_path):
-    """The write_bucketed operator (operators/layout.py) + the OTHER bucket
-    payoff: an equality filter on the bucket key scans 1 of N buckets
-    (`SelectedBucketsCount`) — hash-key partition pruning without the
-    small-files explosion a high-cardinality partitionBy would cause.
-
-    Subtlety pinned here: Spark's autoBucketedScan turns bucketed reading
-    OFF when no join/aggregate consumes the distribution, which also
-    forfeits pruning on a bare point lookup — a table that serves key
-    lookups wants `spark.sql.sources.bucketing.autoBucketedScan.enabled`
-    false."""
-    from pyspark.sql import functions as F
-
-    from video_data_pipeline_spark.operators.layout import write_bucketed
-    from video_data_pipeline_spark.queries.registry import table
-
-    spark.sql("DROP TABLE IF EXISTS ord_pt")
-    orders = table(spark, sf_dir, "orders")
-    write_bucketed(
-        orders, "ord_pt", "o_custkey", 8,
-        path=str(tmp_path / "ord_pt"), sort_cols=["o_custkey"],
-    )
-    any_key = orders.select("o_custkey").first()[0]
-    old = spark.conf.get("spark.sql.sources.bucketing.autoBucketedScan.enabled")
-    try:
-        spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-        df = spark.table("ord_pt").where(F.col("o_custkey") == any_key)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        m = re.search(r"SelectedBucketsCount: (\d+) out of (\d+)", plan)
-        assert m, f"no bucket pruning in plan:\n{plan}"
-        assert m.group(1) == "1" and m.group(2) == "8"
-        assert df.count() == orders.where(F.col("o_custkey") == any_key).count()
-    finally:
-        spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", old)
-        spark.sql("DROP TABLE IF EXISTS ord_pt")

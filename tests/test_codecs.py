@@ -4,9 +4,11 @@ write → rescan → byte-layout checks per encoder."""
 from __future__ import annotations
 
 import glob
+import io
 import pickle
 import struct
 import tarfile
+import zipfile
 
 import numpy as np
 import pytest
@@ -18,12 +20,16 @@ from video_data_pipeline_spark.functions.codecs import (
     npy_encode,
     npz_decode,
     npz_encode,
-    npz_is_valid,
     tenbin_decode,
     tenbin_encode,
 )
 from video_data_pipeline_spark.sinks.webdataset import write_webdataset
 from video_data_pipeline_spark.sources.webdataset import read_webdataset
+
+
+def npz_is_valid(b: bytes) -> bool:
+    """Cheap sanity check: npz is a zip of .npy members."""
+    return zipfile.is_zipfile(io.BytesIO(b))
 
 
 def test_tenbin_roundtrip_and_layout():

@@ -1,70 +1,18 @@
-"""Multimodal end-to-end: pack → decode/resize plumbing → embed → LSH.
+"""Media kernels: image decode as an Arrow kernel, and the media fetch.
 
-Proves the full training-data path the engine is for: media bytes ride
-binary columns through tar shards, decode/feature-extract run as Arrow
-kernels, and the resulting embeddings drop straight into the ANN family.
 Decode kernels are the deterministic fakes (real libs absent); every
 schema, batch shape, and partition boundary is the production one.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from video_data_pipeline_spark.functions.media import (
     IMAGE_SCHEMA,
     decode_images_batch,
-    embed_media_batch,
 )
-from video_data_pipeline_spark.plans.pack import pack_dataset
-from video_data_pipeline_spark.sources.webdataset import read_webdataset
 
 import pytest
 pytestmark = pytest.mark.slow  # r17 fast-tier: see conftest/pytest.ini
-
-
-def _meta(spark, sf_dir, n=20):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(n)
-    return docs.select(
-        F.concat(F.lit("s3://b/"), F.col("doc_id").cast("string"), F.lit(".mp4"))
-        .alias("video_path"),
-        F.col("text").alias("value"),
-    )
-
-
-def test_pack_embed_lsh_end_to_end(spark, sf_dir, tmp_path):
-    out = str(tmp_path / "shards")
-    pack_dataset(
-        _meta(spark, sf_dir).repartition(2), out, samples_per_shard=8, hermetic=True
-    ).collect()
-
-    samples = read_webdataset(spark, out).select(
-        "__key__", F.col("sample")["mp4"].alias("video")
-    )
-    embedded = samples.mapInPandas(
-        lambda it: embed_media_batch(it),
-        schema="`__key__` string, video binary, embedding array<double>",
-    ).drop("video")
-
-    rows = embedded.collect()
-    assert len(rows) == 20
-    assert all(len(r.embedding) == 64 for r in rows)
-    # unit-normalized
-    import math
-
-    for r in rows[:5]:
-        assert abs(math.sqrt(sum(v * v for v in r.embedding)) - 1.0) < 1e-9
-
-    # embeddings flow into the LSH bucketing expression from similarity.py
-    from video_data_pipeline_spark.queries.similarity import _bucket
-
-    buckets = embedded.select(
-        "__key__", F.expr(_bucket("spark", "embedding")).alias("bucket")
-    ).collect()
-    assert all(0 <= r.bucket < 256 for r in buckets)
-    # deterministic: same content → same bucket on rerun
-    again = embedded.select(F.expr(_bucket("spark", "embedding")).alias("b")).collect()
-    assert [r.b for r in again] == [r.bucket for r in buckets]
 
 
 def test_decode_images_schema(spark):

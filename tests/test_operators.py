@@ -393,17 +393,33 @@ def test_connected_components_long_chain_no_lineage_blowup(spark):
     assert got == {i: 0 for i in range(n)}
 
 
-def test_connected_components_alternating_parity(spark):
-    """The alternating large-star/small-star engine must agree with
-    pointer doubling on every graph shape that exercises a distinct code
-    path: a long chain (worst-case diameter), disjoint cliques (the
-    exact-dup star case), a star, isolated pairs, and a random graph."""
+def _union_find_components(es):
+    """node -> min member of its component, by pure-Python union-find."""
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for u, v in es:
+        parent[find(u)] = find(v)
+    comp_min = {}
+    for n in parent:
+        r = find(n)
+        comp_min[r] = min(comp_min.get(r, n), n)
+    return {n: comp_min[find(n)] for n in parent}
+
+
+def test_connected_components_matches_union_find(spark):
+    """Pointer doubling must agree with a pure-Python union-find on every
+    graph shape that exercises a distinct code path: a long chain
+    (worst-case diameter), disjoint cliques (the exact-dup star case), a
+    star, isolated pairs, and a random graph."""
     import random
 
-    from video_data_pipeline_spark.operators.components import (
-        connected_components,
-        connected_components_alternating,
-    )
+    from video_data_pipeline_spark.operators.components import connected_components
 
     rng = random.Random(7)
     graphs = {
@@ -422,51 +438,11 @@ def test_connected_components_alternating_parity(spark):
     }
     for name, es in graphs.items():
         edges = _df(spark, es, "src bigint, dst bigint")
-        a = {
+        got = {
             r.node: r.component
             for r in connected_components(edges, strict=True).collect()
         }
-        b = {
-            r.node: r.component
-            for r in connected_components_alternating(
-                edges, strict=True
-            ).collect()
-        }
-        assert a == b, f"{name}: engines disagree"
-
-
-def test_connected_components_alternating_star_forest_invariant(spark):
-    """After convergence every component labels to its minimum member —
-    check against a pure-Python union-find on the random graph."""
-    import random
-
-    from video_data_pipeline_spark.operators.components import (
-        connected_components_alternating,
-    )
-
-    rng = random.Random(11)
-    es = [(rng.randrange(300), rng.randrange(300)) for _ in range(220)]
-    parent = {}
-
-    def find(x):
-        while parent.setdefault(x, x) != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for u, v in es:
-        parent[find(u)] = find(v)
-    comp_min = {}
-    for n in parent:
-        r = find(n)
-        comp_min[r] = min(comp_min.get(r, n), n)
-    want = {n: comp_min[find(n)] for n in parent}
-    edges = _df(spark, es, "src bigint, dst bigint")
-    got = {
-        r.node: r.component
-        for r in connected_components_alternating(edges, strict=True).collect()
-    }
-    assert got == want
+        assert got == _union_find_components(es), f"{name}: components differ"
 
 
 # ------------------------------------------------------------------ kmeans
@@ -700,51 +676,17 @@ def test_duplicate_ngrams_counts_distinct_docs(spark, tmp_path):
     assert all("totally" not in k for k in out)
 
 
-def test_lsh_band_plan_properties():
-    """The banding planner's S-curve math: the repo's 4x2 default IS the
-    tau=0.5 answer for 8 hashes; higher thresholds choose deeper rows
-    (more selective bands); error masses are genuine integrals in [0,1];
-    s50 sits where the candidate probability crosses 1/2."""
-    from video_data_pipeline_spark.queries.dedup import lsh_band_plan
-
-    p = lsh_band_plan(8, 0.5)
-    assert (p["bands"], p["rows"]) == (4, 2)
-
-    hi = lsh_band_plan(8, 0.85)
-    assert hi["rows"] > p["rows"]
-
-    lo = lsh_band_plan(8, 0.15)
-    assert lo["rows"] < p["rows"]
-
-    for plan in (p, hi, lo):
-        assert 0 <= plan["fp_mass"] <= 1 and 0 <= plan["fn_mass"] <= 1
-        b, r, st = plan["bands"], plan["rows"], plan["s_thresh"]
-        prob = 1 - (1 - st**r) ** b
-        assert abs(prob - (1 - (1 - 1 / b) ** b)) < 1e-9
-
-    import pytest
-
-    with pytest.raises(ValueError):
-        lsh_band_plan(0, 0.5)
-    with pytest.raises(ValueError):
-        lsh_band_plan(8, 1.0)
-
-
 def test_pointer_doubling_tree_topology_needs_linear_rounds(spark):
     """Regression pin for the r7 discovery: on a tree-shaped component with
     adversarial id placement the label-of-label jump adds nothing and
     pointer doubling propagates O(diameter) — this 200-node/150-edge graph
     (largest component 111 nodes) needs 21 rounds, so max_iter=15 must
-    NOT converge, while the alternating engine finishes within 10 rounds.
-    This is WHY connected_components_alternating exists and why
-    connected_components' default max_iter is 50, not 20."""
+    NOT converge. This is why connected_components' default max_iter is
+    50, not 20."""
     import random
     import warnings as _w
 
-    from video_data_pipeline_spark.operators.components import (
-        connected_components,
-        connected_components_alternating,
-    )
+    from video_data_pipeline_spark.operators.components import connected_components
 
     rng = random.Random(7)
     es = [(rng.randrange(200), rng.randrange(200)) for _ in range(150)]
@@ -753,5 +695,3 @@ def test_pointer_doubling_tree_topology_needs_linear_rounds(spark):
         _w.simplefilter("always")
         connected_components(edges, max_iter=15).collect()
     assert any("no convergence" in str(c.message) for c in caught)
-    out = connected_components_alternating(edges, max_iter=10, strict=True)
-    assert out.count() > 0

@@ -388,8 +388,9 @@ def test_q_simhash_near_pairs_bucketed_equi_join_wide_keyspace(spark, sf_dir):
     from video_data_pipeline_spark.queries.dedup import (
         _CHUNK_BITS,
         _SIMHASH_BITS,
+        chunk_keys,
         exact_dup_representatives,
-        simhash_chunks,
+        simhash_signatures,
     )
     from video_data_pipeline_spark.queries.registry import table
 
@@ -401,8 +402,8 @@ def test_q_simhash_near_pairs_bucketed_equi_join_wide_keyspace(spark, sf_dir):
     )
     # runtime cardinality: distinct (c, chunk) keys must exceed the old
     # 64-key ceiling by orders of magnitude even on the tiny test corpus
-    chunks = simhash_chunks(
-        exact_dup_representatives(table(spark, sf_dir, "documents"))
+    chunks = chunk_keys(
+        simhash_signatures(exact_dup_representatives(table(spark, sf_dir, "documents")))
     )
     n_keys = chunks.select("c", "chunk").distinct().count()
     assert n_keys > 200, f"chunk key space collapsed: {n_keys} distinct keys"
@@ -556,49 +557,6 @@ def test_q_pagerank_invariants(spark, sf_dir):
     again = {r.doc_id: r.rank_micro for r in q_pagerank(spark, sf_dir).collect()}
     assert again == rows
 
-
-def test_runtime_bloom_filter_engages_on_selective_join(spark, sf_dir):
-    """Runtime bloom-filter join pruning (dormant below its 10MB/10GB
-    defaults — the ROADMAP r5 'scaled demonstration'): with deployment-
-    tuned thresholds via enable_runtime_bloom_filters, a selective
-    dim-filtered fact join must get a bloom_filter_agg on the filtered
-    side and a might_contain pre-shuffle filter on the fact side."""
-    from pyspark.sql import functions as F
-
-    from video_data_pipeline_spark.queries.registry import table
-    from video_data_pipeline_spark.session import enable_runtime_bloom_filters
-
-    prev = {
-        k: spark.conf.get(k, None)
-        for k in (
-            "spark.sql.optimizer.runtime.bloomFilter.enabled",
-            "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-            "spark.sql.autoBroadcastJoinThreshold",
-        )
-    }
-    try:
-        enable_runtime_bloom_filters(spark, "10MB", "1KB")
-        # force a shuffle join: with a broadcast there is nothing to prune
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        li = table(spark, sf_dir, "lineitem")
-        o = table(spark, sf_dir, "orders").where(
-            F.col("o_orderpriority") == "1-URGENT"
-        )
-        j = (
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .groupBy("o_orderpriority")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "bloom_filter_agg" in plan, "no bloom filter built on dim side"
-        assert "might_contain" in plan, "fact side not pre-filtered by bloom"
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_q_segment_dedup_partial_agg_no_window(spark, sf_dir):

@@ -12,6 +12,7 @@ now, not just visible to callers who passed and read an Observation.
 from __future__ import annotations
 
 import time
+import warnings
 
 import pytest
 
@@ -20,7 +21,7 @@ from video_data_pipeline_spark.queries.dedup import simhash_near_pairs_capped
 from video_data_pipeline_spark.telemetry import (
     CapDivergenceWarning,
     SpillWarning,
-    cumulative_stage_metrics,
+    StageMetricsDelta,
     install_query_warnings,
 )
 
@@ -175,8 +176,14 @@ def test_stage_metrics_degrade_instead_of_raising():
 
     telemetry._DEGRADED_WARNED = False
     with pytest.warns(RuntimeWarning, match="telemetry degraded"):
-        out = cumulative_stage_metrics(DeadSpark())
-    assert out == dict.fromkeys(telemetry._METRICS.values(), 0)
-    # one-time: a second call stays silent
-    assert cumulative_stage_metrics(DeadSpark()) == out
+        with StageMetricsDelta(DeadSpark()) as m:
+            pass
+    assert m.degraded
+    assert m.delta == dict.fromkeys([*telemetry._METRICS.values(), "codegen_compiles"], 0)
+    # one-time: a second window stays silent
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        with StageMetricsDelta(DeadSpark()) as again:
+            pass
+    assert again.degraded and again.delta == m.delta
     telemetry._DEGRADED_WARNED = False

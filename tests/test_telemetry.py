@@ -1,8 +1,8 @@
 """Stage-metrics telemetry (video_data_pipeline_spark/telemetry.py, r12).
 
 Pins the contract tools/perf_probe.py and tools/bench_e2e.py rely on:
-cumulative counters are readable from a plain driver session, a
-StageMetricsDelta around a shuffle job sees that job's shuffle bytes, the
+a StageMetricsDelta on a plain driver session reads every counter, one
+around a shuffle job sees that job's shuffle bytes, the
 delta also lands when the body raises (a dying query's spill is the datum
 the probe wants), and the spill warning fires on threshold crossing.
 """
@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 from video_data_pipeline_spark.telemetry import (
     StageMetricsDelta,
     codegen_compile_count,
-    cumulative_stage_metrics,
 )
 
 _KEYS = {
@@ -30,10 +29,12 @@ _KEYS = {
 }
 
 
-def test_cumulative_metrics_shape(spark):
-    m = cumulative_stage_metrics(spark)
-    assert set(m) == _KEYS
-    assert all(isinstance(v, int) and v >= 0 for v in m.values())
+def test_delta_metrics_shape(spark):
+    with StageMetricsDelta(spark) as m:
+        spark.range(10).count()
+    assert set(m.delta) == _KEYS | {"codegen_compiles"}
+    assert all(isinstance(v, int) and v >= 0 for v in m.delta.values())
+    assert not m.degraded
 
 
 def test_delta_sees_shuffle_bytes(spark):

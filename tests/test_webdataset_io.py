@@ -439,215 +439,10 @@ def test_member_level_gz_decode(spark, tmp_path):
     assert got == {f"{i:05d}": (f"zipped {i}", i) for i in range(4)}
 
 
-def test_streaming_shard_ingest_incremental(spark, tmp_path):
-    """readStream over a shard directory: first availableNow run drains the
-    existing shards; after a NEW shard lands, a restart from the same
-    checkpoint ingests ONLY the new one (the file source's checkpointed
-    file log)."""
-    from video_data_pipeline_spark.sources.webdataset import read_webdataset_stream
-
-    shard_dir = str(tmp_path / "stream_shards")
-    ckpt = str(tmp_path / "ckpt")
-    write_webdataset(
-        _sample_df(spark, n=6).repartition(1).sortWithinPartitions("__key__"),
-        shard_dir,
-        prefix="batch0",
-        maxcount=3,
-        sample_col=None,
-    ).collect()
-
-    def drain(name):
-        got: set[str] = set()
-
-        def sink(batch_df, _bid):
-            got.update(r["__key__"] for r in batch_df.collect())
-
-        q = (
-            read_webdataset_stream(spark, shard_dir)
-            .writeStream.foreachBatch(sink)
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        return got
-
-    first = drain("wds_stream_1")
-    assert first == {f"{i:06d}" for i in range(6)}
-
-    # a new shard arrives; same checkpoint -> only its samples are new
-    extra = spark.createDataFrame(
-        [("x00001", "late caption", 9, b"\x01")],
-        "`__key__` string, txt string, cls int, jpg binary",
-    )
-    write_webdataset(extra.repartition(1), shard_dir, prefix="batch1", sample_col=None).collect()
-    second = drain("wds_stream_2")
-    assert second == {"x00001"}
-
-
-def test_streaming_rate_limit(spark, tmp_path):
-    """max_shards_per_batch caps admission per microbatch (it is the file
-    source's maxFilesPerTrigger): a 6-shard backlog drains in >=3 batches of
-    <=2 shards each, with every sample ingested exactly once."""
-    from video_data_pipeline_spark.sources.webdataset import read_webdataset_stream
-
-    shard_dir = str(tmp_path / "rl_shards")
-    write_webdataset(
-        _sample_df(spark, n=6).repartition(1).sortWithinPartitions("__key__"),
-        shard_dir,
-        maxcount=1,
-        sample_col=None,
-    ).collect()
-
-    batches: list[set[str]] = []
-
-    def sink(batch_df, _bid):
-        rows = {r["__key__"] for r in batch_df.collect()}
-        if rows:
-            batches.append(rows)
-
-    import time
-
-    q = (
-        read_webdataset_stream(spark, shard_dir, max_shards_per_batch=2)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "rl_ckpt"))
-        .trigger(processingTime="500 milliseconds")
-        .start()
-    )
-    try:
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            if sum(len(b) for b in batches) >= 6:
-                break
-            time.sleep(0.5)
-    finally:
-        q.stop()
-    all_keys = set().union(*batches) if batches else set()
-    assert all_keys == {f"{i:06d}" for i in range(6)}
-    assert len(batches) >= 3
-    assert all(len(b) <= 2 for b in batches)
-
-
-def test_streaming_decode_with_explicit_suffixes(spark, tmp_path):
-    """Streaming DataFrames can't run the sampled suffix inference (no
-    .limit/collect on a stream) — the explicit ``suffixes=`` zero-pre-pass
-    path composes with the shard stream end-to-end."""
-    from video_data_pipeline_spark.sources.webdataset import read_webdataset_stream
-
-    shard_dir = str(tmp_path / "dec_shards")
-    write_webdataset(
-        _sample_df(spark, n=5).repartition(1).sortWithinPartitions("__key__"),
-        shard_dir,
-        sample_col=None,
-    ).collect()
-
-    typed = decode_columns(
-        read_webdataset_stream(spark, shard_dir), suffixes=["txt", "cls"]
-    )
-    assert typed.isStreaming
-    got: list = []
-    q = (
-        typed.writeStream.foreachBatch(
-            lambda b, _i: got.extend((r["__key__"], r.txt, r.cls) for r in b.collect())
-        )
-        .option("checkpointLocation", str(tmp_path / "dec_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert sorted(got) == [(f"{i:06d}", f"caption {i}", i % 5) for i in range(5)]
-
-
-def _drain_stream(stream, ckpt: str) -> list[list[tuple]]:
-    """Run ``stream`` once under ``availableNow`` from checkpoint ``ckpt``;
-    return each non-empty microbatch's ``(__key__, __url__)`` rows."""
-    batches: list[list[tuple]] = []
-
-    def sink(batch_df, _bid):
-        rows = [(r["__key__"], r["__url__"]) for r in batch_df.collect()]
-        if rows:
-            batches.append(rows)
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert not q.isActive and q.exception() is None
-    return batches
-
-
-def test_streaming_capped_backlog_restarts(spark, tmp_path):
-    """A capped backlog drains exactly once under ``availableNow`` in
-    microbatches of at most ``max_shards_per_batch`` shards; a restart
-    from the same checkpoint ingests nothing, and a shard written later
-    is ingested alone."""
-    from video_data_pipeline_spark.sources.webdataset import read_webdataset_stream
-
-    shard_dir = str(tmp_path / "capped_shards")
-    ckpt = str(tmp_path / "capped_ckpt")
-    write_webdataset(
-        _sample_df(spark, n=6).repartition(1).sortWithinPartitions("__key__"),
-        shard_dir,
-        maxcount=1,
-        sample_col=None,
-    ).collect()
-
-    def drain():
-        stream = read_webdataset_stream(spark, shard_dir, max_shards_per_batch=2)
-        return _drain_stream(stream, ckpt)
-
-    first = drain()
-    keys = [k for b in first for k, _ in b]
-    assert sorted(keys) == [f"{i:06d}" for i in range(6)]
-    assert all(len({url for _, url in b}) <= 2 for b in first)
-
-    assert drain() == []
-
-    extra = spark.createDataFrame(
-        [("x00001", "late caption", 9, b"\x01")],
-        "`__key__` string, txt string, cls int, jpg binary",
-    )
-    write_webdataset(extra.repartition(1), shard_dir, prefix="late", sample_col=None).collect()
-    assert [k for b in drain() for k, _ in b] == ["x00001"]
-
-
-def test_streaming_lists_without_reading_shard_bytes(spark, tmp_path):
-    """The stream lists shard paths and never reads a shard's bytes on the
-    JVM: with ``binaryFile.maxLength`` below every shard's size (a content
-    read would raise) it still returns every sample, and the same rows as
-    ``read_webdataset``, from a directory whose name has a space."""
-    from video_data_pipeline_spark.sources.webdataset import read_webdataset_stream
-
-    shard_dir = str(tmp_path / "shards with space")
-    write_webdataset(
-        _sample_df(spark, n=6).repartition(1).sortWithinPartitions("__key__"),
-        shard_dir,
-        maxcount=2,
-        sample_col=None,
-    ).collect()
-    assert min(os.path.getsize(p) for p in glob.glob(os.path.join(shard_dir, "*.tar"))) > 1024
-
-    conf = "spark.sql.sources.binaryFile.maxLength"
-    spark.conf.set(conf, "1024")
-    try:
-        batches = _drain_stream(read_webdataset_stream(spark, shard_dir), str(tmp_path / "ckpt"))
-    finally:
-        spark.conf.unset(conf)
-    streamed = sorted(row for b in batches for row in b)
-    batch = sorted((r["__key__"], r["__url__"]) for r in read_webdataset(spark, shard_dir).collect())
-    assert len(streamed) == 6
-    assert streamed == batch
-
-
-def test_streaming_from_foreign_cwd(tmp_path):
-    """The stream needs no repo on the workers' path: a Spark application
+def test_read_from_foreign_cwd(tmp_path):
+    """The scan needs no repo on the workers' path: a Spark application
     started outside the repo, without the repo on ``PYTHONPATH``, that puts
-    the repo on its own ``sys.path`` drains a one-shard stream."""
+    the repo on its own ``sys.path`` reads a one-shard directory."""
     import subprocess
     import sys
 
@@ -656,23 +451,14 @@ def test_streaming_from_foreign_cwd(tmp_path):
 import io, sys, tarfile
 sys.path.insert(0, {repo!r})
 from video_data_pipeline_spark.session import get_spark
-from video_data_pipeline_spark.sources.webdataset import read_webdataset_stream
+from video_data_pipeline_spark.sources.webdataset import read_webdataset
 
 spark = get_spark("foreign_cwd", master="local[2]", shuffle_partitions=2)
 with tarfile.open("shards/s0.tar", "w") as tf:
     info = tarfile.TarInfo("k0.txt")
     info.size = 2
     tf.addfile(info, io.BytesIO(b"hi"))
-got = []
-q = (
-    read_webdataset_stream(spark, "shards")
-    .writeStream.foreachBatch(lambda b, _i: got.extend(r["__key__"] for r in b.collect()))
-    .option("checkpointLocation", "ckpt")
-    .trigger(availableNow=True)
-    .start()
-)
-q.awaitTermination(120)
-print("KEYS", got)
+print("KEYS", [r["__key__"] for r in read_webdataset(spark, "shards").collect()])
 spark.stop()
 """
     (tmp_path / "shards").mkdir()
@@ -688,26 +474,6 @@ spark.stop()
     )
     assert res.returncode == 0, res.stderr[-3000:]
     assert "KEYS ['k0']" in res.stdout, res.stderr[-3000:]
-
-
-@pytest.mark.parametrize(
-    "paths",
-    [
-        ["/data/a", "/data/b"],
-        "/data/a::/data/b",
-        "/data/shard-{000..009}.tar",
-        "pipe:cat /data/a.tar",
-        "s3://bucket/shards",
-    ],
-    ids=["list", "concat", "brace-range", "pipe", "remote"],
-)
-def test_streaming_rejects_unlistable_paths(spark, paths):
-    """The stream watches one local directory or glob; fixed URL lists
-    and specs the file source cannot list point to ``read_webdataset``."""
-    from video_data_pipeline_spark.sources.webdataset import read_webdataset_stream
-
-    with pytest.raises(ValueError, match="read_webdataset"):
-        read_webdataset_stream(spark, paths)
 
 
 def test_gopen_pipe_read_timeout_kills_hung_command():

@@ -2,8 +2,8 @@
 
 Runs `bench.py` N times back-to-back on an otherwise-idle machine and
 records per-query min/median plus the raw runs — the ambient band that
-`tools/bench_trend.py` uses to separate real regressions from sandbox
-noise (rounds 2-4 each burned a task chasing ±25% ambient drift).
+separates real regressions from sandbox noise (rounds 2-4 each burned a
+task chasing ±25% ambient drift).
 
 Usage:
     python tools/bench_anchor.py --round 5 [--runs 3] [--out BENCH_BASELINE_r5.json]

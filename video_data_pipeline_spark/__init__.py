@@ -19,7 +19,6 @@ Subpackages
 - ``operators`` — projection/filter/map/join/sample/mix/batch/pack operators
 - ``functions`` — scalar/column function library (hashing, text, frames)
 - ``plans``     — the three reference pipelines (pack, tokenize, index)
-- ``streaming`` — Structured Streaming wrappers over the same operators
 - ``queries``   — registry of runnable queries + DuckDB oracle SQL
 """
 

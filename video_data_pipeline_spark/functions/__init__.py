@@ -2,7 +2,5 @@
 
 from video_data_pipeline_spark.functions.hashing import (  # noqa: F401
     stable_hash64,
-    stable_hash64_sql,
     stable_unit_uniform,
-    stable_unit_uniform_sql,
 )

@@ -20,7 +20,6 @@ from __future__ import annotations
 import io
 import pickle
 import struct
-import zipfile
 
 import numpy as np
 
@@ -152,6 +151,3 @@ def msgpack_encode(obj) -> bytes:
     return msgpack.packb(obj, use_bin_type=True)
 
 
-def npz_is_valid(b: bytes) -> bool:
-    """Cheap sanity check used by tests: npz is a zip of .npy members."""
-    return zipfile.is_zipfile(io.BytesIO(b))

@@ -35,12 +35,6 @@ def stable_hash64(col: Column | str, seed: str = "") -> Column:
     return F.conv(F.substring(F.md5(salted), 1, 15), 16, 10).cast("bigint")
 
 
-def stable_hash64_sql(expr: str, seed: str = "") -> str:
-    """Spark-SQL text form of :func:`stable_hash64` for use in selectExpr."""
-    inner = f"concat('{seed}', CAST({expr} AS STRING))" if seed else f"CAST({expr} AS STRING)"
-    return f"CAST(conv(substr(md5({inner}), 1, 15), 16, 10) AS BIGINT)"
-
-
 def duckdb_hash64_sql(expr: str, seed: str = "") -> str:
     """DuckDB-SQL text form of the same hash (for oracle queries)."""
     inner = f"concat('{seed}', CAST({expr} AS VARCHAR))" if seed else f"CAST({expr} AS VARCHAR)"
@@ -52,10 +46,6 @@ def stable_unit_uniform(col: Column | str, seed: str = "") -> Column:
     replacement for ``rand()`` wherever reproducibility-under-retry matters
     (reference ``rsample``, ``filters.py:554-562``)."""
     return stable_hash64(col, seed) / F.lit(HASH_SPACE)
-
-
-def stable_unit_uniform_sql(expr: str, seed: str = "") -> str:
-    return f"({stable_hash64_sql(expr, seed)} / {HASH_SPACE!r})"
 
 
 def duckdb_unit_uniform_sql(expr: str, seed: str = "") -> str:

@@ -278,7 +278,7 @@ def encode_image(image: np.ndarray, format: str = "PNG") -> bytes:
 
 
 def resize_cap(image: np.ndarray, max_side: int = 1280) -> np.ndarray:
-    """The 1280-cap resize (pack/tools.py image path): if the longer side
+    """The 1280-cap resize (tokenize/main.py:196-200): if the longer side
     exceeds ``max_side``, scale down preserving aspect ratio.
     Nearest-neighbor in pure numpy — a REAL kernel, no PIL."""
     image = np.asarray(image)

@@ -20,15 +20,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-#: real implementations available? (import-gated per environment contract)
-try:  # pragma: no cover - not present in this container
-    import cv2  # type: ignore  # noqa: F401
-
-    HAVE_CV2 = True
-except Exception:  # noqa: BLE001
-    HAVE_CV2 = False
-
-
 def fake_video_meta(data: bytes) -> tuple[int, float]:
     """Deterministic stand-in for decord ``VideoReader`` metadata
     (pack/dataset.py:10-122: frame count, avg fps). Derives stable values
@@ -170,30 +161,3 @@ def decode_images_batch(
         yield out
 
 
-def embed_media_batch(
-    it: Iterator[pd.DataFrame], media_col: str = "video", dim: int = 64
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: media bytes → unit-norm embedding array<float>.
-
-    STUB for the visual encoder (no torch in this container): deterministic
-    pseudo-embedding from chained md5 of the content — unit-normalized so
-    cosine math downstream behaves like real embeddings. The Spark-side
-    contract (Arrow batch in, fixed-dim float list out) is exactly what a
-    real CLIP/SigLIP executor kernel satisfies."""
-    import math
-
-    for pdf in it:
-        vecs = []
-        for data in pdf[media_col]:
-            data = bytes(data)
-            vals: list[float] = []
-            seed = data
-            while len(vals) < dim:
-                seed = hashlib.md5(seed).digest()
-                vals.extend(b / 255.0 - 0.5 for b in seed)
-            vals = vals[:dim]
-            norm = math.sqrt(sum(v * v for v in vals)) or 1.0
-            vecs.append([float(v / norm) for v in vals])
-        out = pdf.copy()
-        out["embedding"] = vecs
-        yield out

@@ -13,8 +13,7 @@ from Kiveris et al., "Connected Components in MapReduce and Beyond",
 SoCC'14). The shortcut typically collapses convergence to a handful of
 rounds on the dense cliquish graphs near-dup pairs form — but it is NOT
 a worst-case O(log diameter) guarantee (see the corrected bound on
-:func:`connected_components`; :func:`connected_components_alternating`
-is the topology-robust engine).
+:func:`connected_components`).
 Each round is two joins + one groupBy; the round result is truncated
 with ``localCheckpoint(eager=True)`` (``persist`` alone keeps the full
 logical plan, which embeds ~3 copies of the previous round's plan and
@@ -68,8 +67,8 @@ def connected_components(
     """Edges (undirected, any orientation) → (node, component) where
     component = min node id reachable. Node set = all endpoint ids.
 
-    Round bound (corrected in r7 — the parity suite against the
-    alternating engine caught the old claim): the label-of-label jump
+    Round bound (corrected in r7 — a parity suite on adversarial graph
+    shapes caught the old claim): the label-of-label jump
     doubles coverage only when the currently-known min node's OWN
     knowledge extends away from the querying node — true on id-sorted
     paths and on the dense cliquish graphs near-dup pairs form, where
@@ -77,8 +76,7 @@ def connected_components(
     with adversarial id placement the jump adds nothing and propagation
     is O(diameter): a random 200-node / 150-edge graph (largest
     component 111 nodes, tree-like) needs 21 rounds, NOT log₂. Hence
-    max_iter=50 (was 20), and for topology-robust O(log²) behavior use
-    :func:`connected_components_alternating`. If the loop exhausts:
+    max_iter=50 (was 20). If the loop exhausts:
     ``strict=True`` raises ``RuntimeError``; otherwise a
     ``RuntimeWarning`` is emitted and the labels are a valid partial
     propagation but NOT the true components.
@@ -152,101 +150,3 @@ def connected_components(
     return labels
 
 
-def _star_phase(e: DataFrame, large: bool) -> DataFrame:
-    """One large-star or small-star round (Kiveris et al., SoCC'14 §3).
-
-    ``e`` holds each undirected edge once as (u, v) with u < v. Per node n,
-    m(n) = min(N(n) ∪ {n}). Large-star links every neighbor LARGER than n
-    to m(n); small-star links every neighbor smaller-or-equal (and n
-    itself) to m(n). Both emit (parent=m, child) with m < child, so the
-    canonical u<v orientation is preserved by construction."""
-    sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    m = sym.groupBy("u").agg(F.min("v").alias("nm"))
-    m = m.select("u", F.least("u", "nm").alias("m"))
-    j = sym.join(m, "u")
-    if large:
-        out = j.where(F.col("v") > F.col("u")).select(
-            F.col("m").alias("u"), F.col("v").alias("v")
-        )
-    else:
-        out = j.where(F.col("v") < F.col("u")).select(
-            F.col("m").alias("u"), F.col("v").alias("v")
-        ).unionByName(m.select(F.col("m").alias("u"), F.col("u").alias("v")))
-    return out.where(F.col("u") != F.col("v")).distinct()
-
-
-def connected_components_alternating(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 30,
-    strict: bool = False,
-) -> DataFrame:
-    """Connected components via the ALTERNATING large-star/small-star
-    algorithm (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14) — same contract as :func:`connected_components`:
-    (node, component) with component = min reachable id.
-
-    Why a second engine: pointer doubling keeps a corpus-sized LABEL table
-    and joins it against the edge list twice per round; the alternating
-    algorithm carries only the EDGE list, which monotonically bends toward
-    star shape (every intermediate edge set spans the same components,
-    total edge count never grows beyond the symmetric closure), so its
-    per-round shuffle shrinks as it converges. On graphs whose edge count
-    is far below the node count's worth of label rows — exactly the
-    near-dup pair lists this engine feeds it — each round moves less data.
-    Convergence is O(log² n) rounds worst-case, a handful in practice;
-    each phase is one groupBy + one self-join on the uniform node-id key.
-    Rounds are truncated with eager ``localCheckpoint`` exactly like the
-    pointer-doubling loop (same 3^rounds plan-growth hazard).
-
-    Termination: a round that changes nothing means every edge is already
-    (component-min, member) — the star forest IS the answer. Nodes missing
-    from the final edge list (isolated after self-loop removal) label
-    themselves."""
-    orig_nodes = (
-        edges.select(F.col(src).alias("node"))
-        .unionByName(edges.select(F.col(dst).alias("node")))
-        .distinct()
-        .persist()
-    )
-    e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    converged = False
-    for _ in range(max_iter):
-        nxt = _star_phase(_star_phase(e, large=True), large=False).localCheckpoint(
-            eager=True
-        )
-        same_count = nxt.count() == e.count()
-        unchanged = same_count and nxt.exceptAll(e).isEmpty()
-        _free_checkpoint_blocks(e)
-        e = nxt
-        if unchanged:
-            converged = True
-            break
-    if not converged:
-        msg = (
-            f"connected_components_alternating: no convergence after "
-            f"{max_iter} rounds; labels are a partial contraction"
-        )
-        if strict:
-            orig_nodes.unpersist()
-            raise RuntimeError(msg)
-        warnings.warn(msg, RuntimeWarning, stacklevel=2)
-    labels = (
-        orig_nodes.join(
-            e.select(F.col("v").alias("node"), F.col("u").alias("component")),
-            "node",
-            "left",
-        )
-        .select("node", F.coalesce("component", "node").alias("component"))
-        .localCheckpoint(eager=True)
-    )
-    orig_nodes.unpersist()
-    _free_checkpoint_blocks(e)
-    return labels

@@ -110,48 +110,3 @@ def write_zordered(
     )
 
 
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    keys: list[str] | str,
-    n_buckets: int,
-    path: str | None = None,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Write ``df`` as a persistent BUCKETED table: rows are hash-assigned to
-    ``n_buckets`` files per partition by ``keys`` at WRITE time, and the
-    bucket spec is recorded in the catalog.
-
-    Why this matters at 100 TB — write-time co-location buys two things every
-    subsequent reader gets for free:
-
-    - **Exchange-free joins**: two tables bucketed by the same keys into the
-      same bucket count join with ZERO shuffle — the scan itself reports the
-      hash distribution, so SortMergeJoin's Exchange requirement is already
-      satisfied on both sides. For a fact table joined on the same key by
-      every nightly job, this converts the biggest per-job shuffle into a
-      one-time write cost (the classic "bucket both sides at write time"
-      pattern; see ARCHITECTURE.md). One-sided bucketing still halves the
-      shuffle.
-    - **Bucket pruning**: an equality filter on the bucket key scans 1 of
-      ``n_buckets`` buckets (`SelectedBucketsCount` in the scan node) — the
-      hash-key analogue of partition pruning, without the small-files
-      explosion a high-cardinality ``partitionBy`` would cause.
-
-    Sizing: pick ``n_buckets`` so one bucket of the LARGEST co-bucketed
-    table fits an executor's memory at the target scale (bucket count, like
-    shuffle partitions, should scale with data volume — it cannot be changed
-    without a rewrite). ``sort_cols`` additionally sorts within each bucket
-    file (min/max row-group skipping + faster merge-join).
-
-    ``path=None`` writes a managed table under ``spark.sql.warehouse.dir``;
-    tests pass an explicit path (external table) to keep artifacts in tmp.
-    """
-    keys = [keys] if isinstance(keys, str) else list(keys)
-    w = df.write.mode(mode).format("parquet").bucketBy(n_buckets, *keys)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    if path is not None:
-        w = w.option("path", path)
-    w.saveAsTable(table_name)

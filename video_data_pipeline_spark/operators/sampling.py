@@ -3,7 +3,7 @@
 Reference semantics:
 - ``rsample(p)`` — Bernoulli subsample (filters.py:554-562).
 - ``shuffle(bufsize)`` — bounded-buffer approximate shuffle, time/pid seeded
-  (filters.py:193-231).
+  (filters.py:193-231); :func:`detshuffle` is its exact distributed form.
 - ``detshuffle(seed, epoch)`` — deterministic shuffle (filters.py:234-245).
 - ``slice`` — islice offset/limit (filters.py:564).
 - ``uniform_sample(lst, k)`` — ≤k evenly spaced picks (pack/tools.py:142-153).
@@ -43,11 +43,6 @@ def detshuffle(key: Column | str, seed: str = "", epoch: int = 0):
         return df.orderBy(stable_hash64(key, f"{seed}:{epoch}:"))
 
     return _op
-
-
-def shuffle(key: Column | str, seed: str = ""):
-    """Exact distributed shuffle (supersedes the 1000-row buffer shuffle)."""
-    return detshuffle(key, seed=seed, epoch=0)
 
 
 def sliced(order_by: list[str], limit: int, offset: int = 0):

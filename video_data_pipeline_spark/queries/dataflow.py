@@ -235,7 +235,6 @@ def q_mix_concat(spark, sf_dir):
     return even.unionByName(odd)
 
 
-_MIX_P0 = DUCK_HASH.format(x="concat('mix:0', CAST(doc_id AS VARCHAR))")
 _MIX_P1 = DUCK_HASH.format(x="concat('mix:1', CAST(doc_id AS VARCHAR))")
 
 

@@ -71,7 +71,6 @@ def _duck_hash(x: str) -> str:
 
 
 #: one md5 per shingle, reduced mod p — the single expensive pass
-_SPARK_BASE = f"transform({_SPARK_SHINGLES}, s -> {_spark_hash('s')} % {_P})"
 _DUCK_BASE = f"list_transform({_DUCK_SHINGLES}, s -> {_duck_hash('s')} % {_P})"
 
 
@@ -154,7 +153,7 @@ SELECT doc_a, doc_b FROM (
 
 def shingle_hashes(docs):
     """(doc_id, text, ...) → doc_id + shingle-hash array. Pure column math
-    (works on batch AND streaming frames), with each expensive step
+    with each expensive step
     materialized as a column so nothing re-evaluates inside lambdas (a
     split() referenced textually inside a higher-order function re-runs
     per element; an attribute reference is bound once per row)."""
@@ -185,8 +184,7 @@ def signatures(docs):
 def minhash_bands(docs):
     """(doc_id, text, ...) → (doc_id, band_idx, band_key): the LSH banding
     of the MinHash signature (4 bands × 2 rows, band_key = band md5).
-    Pure column math — the shared front half of batch
-    :func:`q_minhash_lsh_pairs` and streaming ``streaming_lsh_pairs``."""
+    Pure column math — the front half of :func:`q_minhash_lsh_pairs`."""
     sig = signatures(docs)
     band_keys = F.array(
         *[
@@ -522,16 +520,14 @@ def chunk_keys(sig):
     ).withColumn("chunk", F.expr(f"shiftright(simhash, {_CHUNK_BITS} * c) & {_CHUNK_MASK}"))
 
 
-def simhash_chunks(docs):
-    """(doc_id, text, ...) → (doc_id, simhash, c, chunk): the 60-bit
-    signature pigeonholed into 4 × 15-bit chunks. Pure column math."""
-    return chunk_keys(simhash_signatures(docs))
-
-
 def combo_keys(sig):
-    """(doc_id, simhash) → (doc_id, simhash, c, chunk): the 20 × 30-bit
-    combo keys of a precomputed signature frame (see
-    :func:`simhash_combo_keys`). Pure column math."""
+    """(doc_id, simhash) → (doc_id, simhash, c, chunk): the 60-bit
+    signature keyed by every 3-of-6 ten-bit chunk COMBINATION — c is the
+    combo index (0..19), chunk the packed 30-bit key. Hamming ≤ 3 ⇒ at
+    least one combo matches exactly (see ``_SIMHASH_COMBOS``); wide keys
+    keep bucket size ∝ true near-group size instead of ∝ corpus size.
+    Pure column math; same output column names as :func:`chunk_keys` so
+    the capped join core is geometry-agnostic."""
     keys = ", ".join(
         "struct({j} AS c, {key} AS chunk)".format(
             j=j,
@@ -554,17 +550,6 @@ def pigeonhole_front(keys):
     frame of that pigeonhole front: what the simhash cap pre-flight and
     ``calibrate.standard_fronts`` measure."""
     return keys.select(F.concat_ws("/", "c", "chunk").alias("key"))
-
-
-def simhash_combo_keys(docs):
-    """(doc_id, text, ...) → (doc_id, simhash, c, chunk): the 60-bit
-    signature keyed by every 3-of-6 ten-bit chunk COMBINATION — c is the
-    combo index (0..19), chunk the packed 30-bit key. Hamming ≤ 3 ⇒ at
-    least one combo matches exactly (see ``_SIMHASH_COMBOS``); wide keys
-    keep bucket size ∝ true near-group size instead of ∝ corpus size.
-    Pure column math; same output column names as :func:`simhash_chunks`
-    so the capped join core is geometry-agnostic."""
-    return combo_keys(simhash_signatures(docs))
 
 
 #: the exact (uncapped) near-pair semantics — shared by the default,
@@ -666,7 +651,7 @@ def q_simhash_near_pairs_combo(
     spark, sf_dir, max_bucket_size=DEFAULT_SIMHASH_MAX_BUCKET_SIZE, observation=None
 ):
     """q_simhash_near_pairs under the Manku-style WIDE-KEY pigeonhole
-    (:func:`simhash_combo_keys`: 20 three-of-six ten-bit chunk
+    (:func:`combo_keys`: 20 three-of-six ten-bit chunk
     combinations, 30-bit join keys). The two geometries are both complete
     for hamming ≤ 3, so the oracle is the SAME SQL as the 4×15 query —
     registering the knob puts its output-invariance under the driver's
@@ -749,7 +734,7 @@ def simhash_near_pairs_capped(
     bind — heavily-perturbed corpora — and why that is the documented
     contract rather than a calibration hole). ``geometry`` selects the
     pigeonhole decomposition: ``"chunks"`` (default, 4×15-bit) or
-    ``"combos"`` (:func:`simhash_combo_keys`, 20×30-bit — the Manku-style
+    ``"combos"`` (:func:`combo_keys`, 20×30-bit — the Manku-style
     wide keys a high-entropy corpus prefers); both are complete for
     hamming ≤ 3, so the uncapped output is geometry-invariant
     (pytest-pinned)."""
@@ -1632,58 +1617,6 @@ def q_kcore(spark, sf_dir):
         F.col("u").alias("doc_id"), F.col("deg").alias("core_deg")
     )
 
-
-
-def lsh_band_plan(n_hashes: int = _N_HASHES, tau: float = 0.5) -> dict:
-    """Choose the (bands, rows) factorization of an ``n_hashes`` MinHash
-    signature for a target similarity threshold ``tau`` — the standard
-    S-curve analysis (Leskovec/Rajaraman/Ullman, "Mining of Massive
-    Datasets" §3.4): a pair with Jaccard ``s`` becomes a candidate with
-    probability ``p(s) = 1 - (1 - s^rows)^bands``.
-
-    Scoring integrates the two error masses with a trapezoid rule:
-    false-negative mass ``∫_tau^1 (1 - p(s)) ds`` (true near-dups LSH
-    misses — pay re-scan) and false-positive mass ``∫_0^tau p(s) ds``
-    (non-dups surfacing as candidates — pay verification, the cost
-    :func:`q_jaccard_verified_pairs` bounds). The returned plan minimizes
-    their sum; ``s_thresh = (1/bands)^(1/rows)`` is the S-curve threshold
-    approximation (there ``p = 1-(1-1/bands)^bands``, ≈0.63 for large
-    band counts — the curve's rise point, not an exact half-crossing).
-    The repo default (8 hashes, 4×2) is this function's answer for
-    tau = 0.5."""
-    if n_hashes < 1:
-        raise ValueError("n_hashes must be positive")
-    if not 0.0 < tau < 1.0:
-        raise ValueError("tau must be in (0, 1)")
-    steps = 1000
-    best = None
-    for rows in range(1, n_hashes + 1):
-        if n_hashes % rows:
-            continue
-        bands = n_hashes // rows
-
-        def p(s: float, r: int = rows, b: int = bands) -> float:
-            return 1.0 - (1.0 - s**r) ** b
-
-        fn = fp = 0.0
-        for i in range(steps):
-            s0, s1 = i / steps, (i + 1) / steps
-            mid = (s0 + s1) / 2.0
-            if mid >= tau:
-                fn += (1.0 - p(mid)) / steps
-            else:
-                fp += p(mid) / steps
-        plan = {
-            "bands": bands,
-            "rows": rows,
-            "s_thresh": (1.0 / bands) ** (1.0 / rows),
-            "fp_mass": fp,
-            "fn_mass": fn,
-            "error_mass": fp + fn,
-        }
-        if best is None or plan["error_mass"] < best["error_mass"]:
-            best = plan
-    return best
 
 
 # --------------------------------------------------- segment-level dedup

@@ -4,7 +4,7 @@ Each entry pairs a Spark DataFrame program with (where expressible) an ANSI-SQL
 oracle that DuckDB runs on the same parquet tables. The driver (and our own
 ``tools/selfcheck.py``) executes both and compares row count + schema +
 order-insensitive value hash. Non-SQL-expressible operators (stateful packing
-variants, streaming) register ``oracle=None`` and get a rows-only check.
+variants) register ``oracle=None`` and get a rows-only check.
 
 Determinism contract for every query here:
 - no ``rand()``/time/pid randomness — randomness is ``stable_hash64(key)``

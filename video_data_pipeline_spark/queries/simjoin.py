@@ -118,8 +118,7 @@ def _shingle_sets(d):
 def hashed_shingle_sets(docs, checkpoint: bool = True):
     """(doc_id, text, …) → (doc_id, n, hs: BIGINT shingle-hash array) with
     the exact-dup rep collapse applied — the shared front table of the
-    prefix-filter family (batch joins here; the streaming verify stage
-    joins it as its static side). Lazily localCheckpointed by default:
+    prefix-filter family. Lazily localCheckpointed by default:
     every caller fans it out to multiple consumers and Catalyst does not
     CSE across DataFrame references."""
     out = _shingle_sets(exact_dup_representatives(docs)).select(
@@ -556,29 +555,6 @@ def q_prefix_filter_join_calibrated(spark, sf_dir, pair_budget=None, observation
     )
 
 
-def hash_ordered_prefix(docs):
-    """(doc_id, text, ...) → (doc_id, band_idx, band_key) prefix-token rows
-    under an md5 CANONICAL order instead of global rarity.
-
-    The prefix-filtering completeness theorem needs only a fixed global
-    TOTAL order on tokens — rarity ordering is purely a performance choice
-    (smallest postings). A hash order gives the same guaranteed recall with
-    per-row-computable prefixes: no df model, no join, no window — pure
-    column math, which is exactly what a STREAMING frame can evaluate
-    (``streaming/stateful.py::streaming_prefix_candidates``). Batch callers
-    that can afford the df pass should prefer the rarity order of
-    :func:`q_prefix_filter_join`; callers that need the same front half on
-    batch and stream (parity tests, continuous ingest) use this one."""
-    prefix = F.expr(
-        "transform(slice(sort_array(transform(toks, t -> struct(md5(t) AS h, t AS t))),"
-        f" 1, size(toks) - (({_TAU_NUM} * size(toks) + {_TAU_DEN - 1}) div {_TAU_DEN}) + 1),"
-        " s -> s.t)"
-    )
-    return _shingle_sets(docs).select(
-        "doc_id", F.lit(0).alias("band_idx"), F.explode(prefix).alias("band_key")
-    )
-
-
 # ----------------------------------------------------- containment search
 
 _CONT_NUM, _CONT_DEN = 4, 5  # containment threshold 0.8
@@ -644,10 +620,9 @@ def q_containment_pairs(
     contain an element of B (pigeonhole) — the prefix of the SMALLER side
     joins against FULL postings of every candidate superset. The order
     here is the hash itself (sorted hash array slice — per-row math, no df
-    pass; any total order preserves completeness, the
-    hash_ordered_prefix argument). Recall at the threshold is therefore
-    1.0 by construction — the LSH-candidate caveat of the earlier form is
-    gone.
+    pass; any fixed total order preserves completeness). Recall at the
+    threshold is therefore 1.0 by construction — the LSH-candidate caveat
+    of the earlier form is gone.
 
     Scale shape: the hashed-set table builds once (lazy localCheckpoint,
     four consumers); prefixes are an in-row sorted slice (~0.2·n tokens);

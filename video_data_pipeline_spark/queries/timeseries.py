@@ -2,9 +2,8 @@
 
 The reference has no time-series semantics (SURVEY.md §2.9: "no watermarks,
 windows, stateful ops") — but its users' telemetry/curation workloads need
-them, and every operator here is the batch twin of a Structured Streaming
-query in ``streaming/`` (same expressions, readStream source). Window math
-is done on epoch-millis BIGINTs so both engines compute identical integers.
+them. Every input is a finite batch. Window math is done on epoch-millis
+BIGINTs so both engines compute identical integers.
 
 Money-style doubles (``value``) aggregate via exact integer cents.
 """
@@ -30,9 +29,8 @@ FROM events GROUP BY 1, 2
     tags=("timeseries", "window-agg"),
 )
 def q_window_tumbling(spark, sf_dir):
-    """Tumbling 1-hour aggregation — batch twin of the streaming windowed
-    count (streaming/jobs.py). Partial aggregation is map-side; the shuffle
-    carries (hour × type) groups only."""
+    """Tumbling 1-hour aggregation. Partial aggregation is map-side; the
+    shuffle carries (hour × type) groups only."""
     e = table(spark, sf_dir, "events")
     return e.groupBy(
         F.date_trunc("hour", "ts").alias("window_start"),
@@ -99,8 +97,8 @@ FROM sessions GROUP BY user_id, session_idx
     tags=("timeseries", "session"),
 )
 def q_sessionize(spark, sf_dir):
-    """Sessionization (30-min gap): lag + cumulative-sum windows — the batch
-    twin of streaming ``session_window``. One shuffle keyed by user_id."""
+    """Sessionization (30-min gap): lag + cumulative-sum windows. One
+    shuffle keyed by user_id."""
     e = table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("t", "event_id")
     cum = w.rowsBetween(Window.unboundedPreceding, 0)

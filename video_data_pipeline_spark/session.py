@@ -506,33 +506,3 @@ def ensure_shipped(spark: SparkSession) -> None:
     _SHIPPED.add(key)
 
 
-def enable_runtime_bloom_filters(
-    spark: SparkSession,
-    creation_side_threshold: str = "10MB",
-    application_side_threshold: str = "1MB",
-) -> None:
-    """Tune Spark's runtime bloom-filter join pruning for THIS deployment's
-    table sizes.
-
-    The optimizer injects a ``bloom_filter_agg`` on a join's small
-    (creation) side and a ``might_contain`` filter on the big (application)
-    side — rows that can't match are dropped BEFORE the shuffle, the big
-    win for selective dim-filtered fact joins. It is on by default but
-    dormant until the creation side is under
-    ``runtime.bloomFilter.creationSideThreshold`` (default 10MB) AND the
-    application-side scan exceeds its size threshold (default 10GB) — at
-    true 100 TB scale the defaults engage on their own; at mid-size (or in
-    a demo at sf0.1) nothing happens and a naive reader concludes the
-    feature is broken. This helper sets both knobs explicitly so the
-    pruning engages where the deployment's fact tables actually live.
-    Plan-gated by ``test_runtime_bloom_filter_engages_on_selective_join``.
-    """
-    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-    spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-        creation_side_threshold,
-    )
-    spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-        application_side_threshold,
-    )

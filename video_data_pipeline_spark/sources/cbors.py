@@ -60,13 +60,10 @@ def _read_cbor_shard(path: str):
 def cbors_to_samples(spark: SparkSession, paths: str | list[str]) -> DataFrame:
     """Read CBOR shard(s) — paths, globs or directories of ``*.cbors`` —
     into (``__url__``, ``__idx__``, ``sample``) rows (reference
-    ``cbors_to_samples``; ``cbors2_to_samples`` is the same reader — the
-    reference binds both names to one implementation)."""
+    ``cbors_to_samples``; its ``cbors2_to_samples`` is the same reader,
+    cborsiterators.py:27,51)."""
     from video_data_pipeline_spark.sources.webdataset import _scan_shards, expand_paths
 
     shards = expand_paths(paths, dir_globs=("*.cbors",))
     return _scan_shards(spark, shards, _read_cbor_shard, CBOR_SAMPLE_SCHEMA)
 
-
-#: reference exports both names for the same reader (cborsiterators.py:27,51)
-cbors2_to_samples = cbors_to_samples

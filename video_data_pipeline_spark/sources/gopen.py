@@ -2,8 +2,8 @@
 
 The reference opens every shard URL through a ``gopen_schemes`` table
 (pipe/http/https/s3/gs/ais/...). Same shape here, Spark-flavored: the
-shard scan's per-shard read function (tar and CBOR, batch and stream;
-``sources.webdataset._per_shard``) calls :func:`gopen` inside the scan
+shard scan's per-shard read function (tar and CBOR;
+``sources.webdataset._scan_shards``) calls :func:`gopen` inside the scan
 task, so each *executor* opens its own shards directly against the
 object store — the driver never proxies bytes. Handlers must be
 constructible inside Python worker processes (no driver-process state):

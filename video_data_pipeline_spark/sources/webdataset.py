@@ -9,13 +9,12 @@ The reference scans tar shards with generator chains
     sample map<string, binary>
 
 Design for scale:
-- Every shard read in this package — tar batch, tar stream and CBOR
-  (:mod:`.cbors`) — is one mechanism: a frame with one row per shard,
+- Every shard read in this package — tar and CBOR (:mod:`.cbors`) — is
+  one mechanism (:func:`_scan_shards`): a frame with one row per shard,
   then ONE ``mapInPandas`` that calls a per-shard read function on each
-  row's path and streams its rows out in bounded Arrow batches. Only the
-  frame differs.
-- Batch reads (:func:`map_shards`, :func:`read_webdataset`) plan the frame
-  on the JVM, one row and one partition per shard file
+  row's path and streams its rows out in bounded Arrow batches.
+- Reads (:func:`map_shards`, :func:`read_webdataset`) plan the frame on
+  the JVM, one row and one partition per shard file
   (``spark.range(n, numPartitions=n)``). Spark schedules shards across
   executors exactly like the reference's shard striping
   (``split_by_node``/``split_by_worker``, shardlists.py:115-142), but
@@ -23,10 +22,6 @@ Design for scale:
 - :func:`map_shards` exposes that kernel with a caller's per-shard
   function: a shard-local stage (tokenize → pack → merge) is one Python
   pass with no shuffle. :func:`read_webdataset` is the identity function.
-- Streaming reads (:func:`read_webdataset_stream`) take the frame from
-  Spark's own file-source stream, listing shard paths only, so offsets,
-  checkpointed exactly-once delivery and ``maxFilesPerTrigger`` admission
-  are Spark's; the JVM never reads shard bytes.
 - Streaming tar read (mode ``r|``) — memory is bounded by one member, not
   one shard, matching the reference's ``stream.members = []`` release
   (tariterators.py:135); output leaves the worker in bounded Arrow batches.
@@ -238,41 +233,29 @@ def _pandas_batches(rows: Iterable[tuple], columns: list[str]) -> Iterator[pd.Da
         yield pd.DataFrame.from_records(buf, columns=columns)
 
 
-def _per_shard(
-    frame: DataFrame,
-    path_of: Callable[[object], str],
-    read: Callable[[str], Iterable[tuple]],
-    schema: StructType,
-) -> DataFrame:
-    """The one ``mapInPandas`` of every shard scan: each row of ``frame``
-    names one shard in its first column (``path_of`` turns the value into
-    the shard's path), and ``read(path)`` yields that shard's rows of
-    ``schema`` as tuples in field order. Rows leave in bounded Arrow
-    batches (:data:`_BATCH_ROWS` rows or about :data:`_BATCH_BYTES`
-    payload bytes)."""
-    from video_data_pipeline_spark.session import ensure_shipped
-
-    ensure_shipped(frame.sparkSession)
-    columns = schema.fieldNames()
-
-    def _scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for v in pdf.iloc[:, 0]:
-                yield from _pandas_batches(read(path_of(v)), columns)
-
-    return frame.mapInPandas(_scan, schema=schema)
-
-
 def _scan_shards(
     spark: SparkSession,
     shards: list[str],
     read: Callable[[str], Iterable[tuple]],
     schema: StructType,
 ) -> DataFrame:
-    """Batch shard-scan kernel: a JVM-planned frame with one row and one
-    partition per expanded shard path, then :func:`_per_shard`."""
+    """The one shard-scan kernel: a JVM-planned frame with one row and one
+    partition per expanded shard path, then ONE ``mapInPandas`` in which
+    ``read(path)`` yields that shard's rows of ``schema`` as tuples in
+    field order. Rows leave in bounded Arrow batches (:data:`_BATCH_ROWS`
+    rows or about :data:`_BATCH_BYTES` payload bytes)."""
+    from video_data_pipeline_spark.session import ensure_shipped
+
+    ensure_shipped(spark)
+    columns = schema.fieldNames()
+
+    def _scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            for i in pdf.iloc[:, 0]:
+                yield from _pandas_batches(read(shards[i]), columns)
+
     frame = spark.range(0, len(shards), 1, numPartitions=max(len(shards), 1))
-    return _per_shard(frame, lambda i: shards[i], read, schema)
+    return frame.mapInPandas(_scan, schema=schema)
 
 
 def map_shards(
@@ -334,59 +317,6 @@ def read_webdataset(
         endpoint_url=endpoint_url,
         access_key_id=access_key_id,
         secret_access_key=secret_access_key,
-    )
-
-
-def read_webdataset_stream(
-    spark: SparkSession,
-    paths: str,
-    select_files: str | None = None,
-    rename_files: str | None = None,
-    max_shards_per_batch: int | None = None,
-) -> DataFrame:
-    """Streaming scan: tar shards appearing under ``paths`` become
-    microbatches of samples, with the batch reader's schema and per-shard
-    read. Combine with the streaming twins (streaming/jobs.py) or
-    ``decode_columns(..., suffixes=...)`` exactly like the batch reader.
-
-    ``paths`` is ONE local directory or glob that Spark's file source can
-    list; a directory contributes its ``*.tar``/``*.tgz``/``*.tar.gz``
-    files. A list, a ``::`` or brace-range spec, a ``pipe:`` command or a
-    remote URL raises ``ValueError``: read a fixed list of shard URLs with
-    :func:`read_webdataset`.
-
-    The stream is Spark's ``binaryFile`` file source projected to
-    ``path``, so listing never reads shard bytes and memory stays
-    O(member). Offsets, checkpointed exactly-once delivery per shard and
-    restarts are the file source's. ``max_shards_per_batch`` is its
-    ``maxFilesPerTrigger``: a backlog drains in microbatches of at most
-    that many shards, under a processingTime trigger and under
-    ``availableNow`` alike (which drains the whole backlog, then stops).
-    The file source packs small files into one task, so a task may read
-    several small shards in turn."""
-    from video_data_pipeline_spark.sources.gopen import is_remote
-    from video_data_pipeline_spark.sources.shardlists import _BRACE
-
-    if not isinstance(paths, str) or "::" in paths or _BRACE.search(paths) or is_remote(paths):
-        raise ValueError(
-            f"read_webdataset_stream watches one local directory or glob, "
-            f"not {paths!r}; read a fixed list of shard URLs with read_webdataset"
-        )
-    reader = (
-        spark.readStream.format("binaryFile")
-        # a file-source stream must be given its schema; this is binaryFile's
-        .schema("path string, modificationTime timestamp, length bigint, content binary")
-        .option("pathGlobFilter", "*.{" + ",".join(g[2:] for g in _SHARD_GLOBS) + "}")
-    )
-    if max_shards_per_batch:
-        reader = reader.option("maxFilesPerTrigger", max_shards_per_batch)
-    return _per_shard(
-        reader.load(paths).select("path"),
-        # the file source names a shard ``file:/dir/x.tar``; ``__url__``
-        # carries the local path, as in read_webdataset
-        lambda uri: uri.removeprefix("file:"),
-        lambda path: _read_shard(path, select_files, rename_files, {}),
-        SAMPLE_SCHEMA,
     )
 
 

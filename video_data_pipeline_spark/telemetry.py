@@ -57,27 +57,13 @@ SPILL_WARN_BYTES = 8 << 30
 _DEGRADED_WARNED = False
 
 
-def cumulative_stage_metrics(spark) -> dict[str, int]:
-    """Sum spill/shuffle byte counters over every stage the driver's
-    status store currently retains (completed, failed, and running —
-    failed stages matter: the spill that killed a cell is the datum).
-
-    The ``stageList`` call below hardcodes a PRIVATE 5-arg Scala
-    signature (py4j has no default-arg support); a Spark minor-version
-    change to it would otherwise throw inside every delta and take the
-    probe/bench tools down with the telemetry (ADVICE r12). Any py4j
-    failure therefore degrades to all-zero metrics with a ONE-TIME
-    warning — measurement must never break the measured job."""
-    return _scan_stages(spark)[0]
-
-
 def _scan_stages(
     spark, min_stage_id: int = -1
 ) -> tuple[dict[str, int], int, bool]:
     """(metrics summed over retained stages with stageId > min_stage_id,
     max stageId seen, scan-succeeded flag). Degrades to
     (zeros, min_stage_id, False) with a one-time warning on any py4j
-    failure — see :func:`cumulative_stage_metrics`. The flag lets window
+    failure. The flag lets window
     anchors distinguish "no stages yet" (-1, ok) from "scan failed" (-1,
     degraded): summing a later window from a FAILED anchor would count the
     session's entire retained history — an overcount the never-overcount
