@@ -143,9 +143,16 @@ def test_float_image_range_check_and_scale():
 def test_resize_cap():
     from video_data_pipeline_spark.functions.images import resize_cap
 
+    # any side over the cap -> exactly (cap, cap), aspect ratio not kept
+    # (tokenize/main.py:196-200 resizes to (1280, 1280))
     big = np.zeros((2000, 1000, 3), np.uint8)
     out = resize_cap(big, max_side=1280)
-    assert out.shape == (1280, 640, 3)
+    assert out.shape == (1280, 1280, 3)
+    wide = np.arange(1300 * 4, dtype=np.int32).reshape(4, 1300)
+    out = resize_cap(wide, max_side=1280)
+    assert out.shape == (1280, 1280)
+    # nearest neighbour: corners map to corners' source pixels
+    assert out[0, 0] == wide[0, 0] and out[-1, -1] == wide[3, 1279 * 1300 // 1280]
     small = np.zeros((100, 50), np.uint8)
     assert resize_cap(small, max_side=1280).shape == (100, 50)
 

@@ -7,6 +7,8 @@ outputs, determinism assertions, and round-trips.
 
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -82,13 +84,60 @@ def test_sliced(spark):
 # --------------------------------------------------------------- batching
 
 
+_AQE_FLOOR = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+
+
+@contextlib.contextmanager
+def _aqe_floor(spark, value: str):
+    """Run a block with the session's AQE coalescing floor at ``value``,
+    which also decides whether global_index pays its bucket pre-pass."""
+    old = spark.conf.get(_AQE_FLOOR)
+    spark.conf.set(_AQE_FLOOR, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(_AQE_FLOOR, old)
+
+
+def _bucketed(spark, df) -> bool:
+    """Whether global_index takes its bucketed path (one pre-pass collect)
+    on ``df`` in this session: more than one core, and a size estimate
+    above the AQE coalescing floor. Otherwise it plans one
+    single-partition window and runs no action."""
+    jutils = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils
+    floor = jutils.byteStringAsBytes(spark.conf.get(_AQE_FLOOR))
+    est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    return spark.sparkContext.defaultParallelism > 1 and floor < est
+
+
+def _count_actions(monkeypatch, df) -> dict:
+    """Count driver actions on ``df``'s concrete (classic/connect)
+    DataFrame class until ``monkeypatch.undo()``."""
+    _DF = type(df)
+    calls = {"n": 0}
+    for meth in ("collect", "count", "toPandas", "first", "take"):
+        orig = getattr(_DF, meth)
+
+        def wrapped(self, *a, _o=orig, **kw):
+            calls["n"] += 1
+            return _o(self, *a, **kw)
+
+        monkeypatch.setattr(_DF, meth, wrapped)
+    return calls
+
+
 def test_batched_partial_dropped(spark):
+    """On both sides of AQE's coalescing floor: the bucketed plan (more
+    than one core, floor below the estimate) takes its total from its
+    pre-pass, the single window from ``count(*)``."""
     df = spark.range(10)
-    full = df.transform(batched(["id"], n=4, partial=True))
-    assert full.count() == 10
-    nopartial = df.transform(batched(["id"], n=4, partial=False))
-    assert nopartial.count() == 8  # trailing batch of 2 dropped
-    assert nopartial.agg(F.max("batch_id")).first()[0] == 1
+    for floor in ("1", "256k"):
+        with _aqe_floor(spark, floor):
+            full = df.transform(batched(["id"], n=4, partial=True))
+            assert full.count() == 10
+            nopartial = df.transform(batched(["id"], n=4, partial=False))
+            assert nopartial.count() == 8  # trailing batch of 2 dropped
+            assert nopartial.agg(F.max("batch_id")).first()[0] == 1
 
 
 def test_global_index_leaves_no_cached_rdds(spark):
@@ -115,10 +164,12 @@ def test_global_index_leaves_no_cached_rdds(spark):
 
     before = cached_ids()
     df = spark.range(50)
-    df.transform(batched(["id"], n=8, partial=False)).collect()
     from video_data_pipeline_spark.operators.batching import global_index
 
-    df.transform(global_index(["id"])).collect()
+    # the bucketed path, pre-pass included, where there is more than one core
+    with _aqe_floor(spark, "1"):
+        df.transform(batched(["id"], n=8, partial=False)).collect()
+        df.transform(global_index(["id"])).collect()
     for _ in range(10):  # async cleanup: settle up to ~5s before judging
         leaked = cached_ids() - before
         if not leaked:
@@ -128,34 +179,50 @@ def test_global_index_leaves_no_cached_rdds(spark):
 
 
 def test_batched_exactly_one_preaction(spark, monkeypatch):
-    """Constructing a batched() plan triggers EXACTLY ONE driver action
-    (the combined boundary-sample + bucket-count collect) — the VERDICT r2
-    perf flag was a second pre-job per call, and the r4 'done' bar pins it
-    at one (operators/batching.py::_global_index)."""
+    """Above AQE's coalescing floor, constructing a batched() plan triggers
+    EXACTLY ONE driver action (the combined boundary-sample + bucket-count
+    collect) — the VERDICT r2 perf flag was a second pre-job per call, and
+    the r4 'done' bar pins it at one (operators/batching.py::_global_index).
+    The floor is set below this input's 8 KB estimate so the bucketed path
+    runs wherever the session has more than one core; on one core the
+    single window runs and no action is expected."""
     df = spark.range(1000)
-    _DF = type(df)  # the concrete (classic/connect) DataFrame class
-
-    calls = {"n": 0}
-    for meth in ("collect", "count", "toPandas", "first", "take"):
-        orig = getattr(_DF, meth)
-
-        def wrapped(self, *a, _o=orig, **kw):
-            calls["n"] += 1
-            return _o(self, *a, **kw)
-
-        monkeypatch.setattr(_DF, meth, wrapped)
-    out = df.transform(batched(["id"], n=32))
-    assert calls["n"] == 1, f"batched() construction ran {calls['n']} actions"
-    monkeypatch.undo()
-    # and the index it produced is exact: id k (unique, dense) -> batch k//32
-    bad = out.where(F.col("batch_id") != F.floor(F.col("id") / 32)).count()
+    with _aqe_floor(spark, "1k"):
+        expected = 1 if _bucketed(spark, df) else 0
+        calls = _count_actions(monkeypatch, df)
+        out = df.transform(batched(["id"], n=32))
+        assert calls["n"] == expected, f"batched() construction ran {calls['n']} actions"
+        monkeypatch.undo()
+        # and the index it produced is exact: id k (unique, dense) -> batch k//32
+        bad = out.where(F.col("batch_id") != F.floor(F.col("id") / 32)).count()
     assert bad == 0
 
 
+def test_batched_below_floor_runs_no_preaction(spark, monkeypatch):
+    """At or below AQE's coalescing floor the index is one single-partition
+    window: constructing batched() runs NO driver action, and
+    ``partial=False`` takes its total from ``count(*)`` over that window."""
+    df = spark.range(1000)  # 8 KB estimate, under get_spark's 256k floor
+    with _aqe_floor(spark, "256k"):
+        calls = _count_actions(monkeypatch, df)
+        full = df.transform(batched(["id"], n=32))
+        nopartial = df.transform(batched(["id"], n=32, partial=False))
+        assert calls["n"] == 0, f"batched() construction ran {calls['n']} actions"
+        monkeypatch.undo()
+    assert sorted((r.id, r.batch_id) for r in full.collect()) == [
+        (k, k // 32) for k in range(1000)
+    ]
+    # 1000 = 31 * 32 + 8: the trailing batch of 8 is dropped
+    assert sorted((r.id, r.batch_id) for r in nopartial.collect()) == [
+        (k, k // 32) for k in range(992)
+    ]
+
+
 def test_global_index_exact_and_deterministic(spark):
-    """The distributed index equals the true rank for a known total order,
-    twice in a row (boundary sampling must be deterministic), including
-    null keys first and duplicate leading keys."""
+    """The index equals the true rank for a known total order, twice in a
+    row (boundary sampling must be deterministic), including null keys
+    first and duplicate leading keys — on both sides of AQE's coalescing
+    floor: the bucketed plan above it, the single-partition window below."""
     from video_data_pipeline_spark.operators.batching import global_index
 
     df = spark.range(500).select(
@@ -163,12 +230,19 @@ def test_global_index_exact_and_deterministic(spark):
         F.col("id").alias("t"),
     )
     op = global_index(["k", "t"], idx_col="ix")
-    a = {(r.k, r.t): r.ix for r in df.transform(op).collect()}
-    b = {(r.k, r.t): r.ix for r in df.transform(op).collect()}
-    assert a == b
-    # rank computed driver-side: nulls first, then (k, t)
-    ordered = sorted(a.keys(), key=lambda kt: (kt[0] is not None, kt[0] or 0, kt[1]))
-    assert [a[kt] for kt in ordered] == list(range(500))
+    for floor in ("1", "256k"):
+        with _aqe_floor(spark, floor):
+            bucketed = _bucketed(spark, df)
+            indexed = df.transform(op)
+            plan = indexed._jdf.queryExecution().executedPlan().toString()
+            a = {(r.k, r.t): r.ix for r in indexed.collect()}
+            b = {(r.k, r.t): r.ix for r in df.transform(op).collect()}
+        # only the bucketed plan carries the bucket column
+        assert ("__b__" in plan) == bucketed, (floor, plan)
+        assert a == b
+        # rank computed driver-side: nulls first, then (k, t)
+        ordered = sorted(a.keys(), key=lambda kt: (kt[0] is not None, kt[0] or 0, kt[1]))
+        assert [a[kt] for kt in ordered] == list(range(500)), floor
 
 
 def test_unbatched_roundtrip(spark):

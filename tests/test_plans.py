@@ -89,6 +89,32 @@ def test_pack_uniform_frames(spark, sf_dir, tmp_path):
     assert payloads[first]["image_name_list"] == [f"{base}-{i}" for i in range(4)]
 
 
+def test_pack_shards_hold_consecutive_keys(spark, tmp_path):
+    """A caption table under AQE's coalescing floor packs as one keyed
+    stream: 20 captions at 8 samples per shard give tars holding keys 0-7,
+    8-15 and 16-19, each in key order, whatever order the metadata rows
+    are stored in. Every sample keeps its own caption."""
+    rows = [(f"/nonexistent/videos/{i:03d}.mp4", f"caption {i}") for i in range(20)]
+    rows = rows[7:] + rows[:7][::-1]  # stored out of key order
+    src = str(tmp_path / "meta.parquet")
+    spark.createDataFrame(rows, "video_path string, value string").write.parquet(src)
+    out = str(tmp_path / "packed")
+    pack_dataset(
+        spark.read.parquet(src), out, samples_per_shard=8, hermetic=True
+    ).collect()
+    shards = []
+    for path in sorted(glob.glob(out + "/*.tar")):
+        with tarfile.open(path) as tar:
+            keys = [n[:-5] for n in tar.getnames() if n.endswith(".json")]
+            for k in keys:
+                conv = json.loads(tar.extractfile(f"{k}.json").read())["conversations"]
+                assert conv[1]["value"] == f"caption {int(k)}"
+        shards.append(keys)
+    assert shards == [
+        [f"{i:09d}" for i in range(lo, hi)] for lo, hi in ((0, 8), (8, 16), (16, 20))
+    ]
+
+
 def _tar_records(path: str) -> list[tuple[str, dict]]:
     with tarfile.open(path) as tar:
         return [

@@ -172,10 +172,13 @@ WHITELIST: dict[str, dict[str, str]] = {
     "q_mix_concat": {"SinglePartition": "deterministic interleave of "
         "two bounded samples (operator demo at fixture size)"},
     "q_random_mix": {"SinglePartition": "same bounded-mix demo"},
-    "q_detshuffle": {"SinglePartition": "buffered-shuffle twin is keyed by "
-        "a bounded per-partition buffer; fixture-size single sort"},
-    "q_batched": {"SinglePartition": "global batch index over the bounded "
-        "demo slice"},
+    # global_index plans its single-partition window only when the input's
+    # size estimate is at most AQE's coalescing floor, where AQE would merge
+    # the range buckets into one partition anyway
+    # (operators/batching.py::_below_aqe_floor)
+    "q_detshuffle": {_SP: "global_index window under AQE's coalescing floor"},
+    "q_batched": {_SP: "global_index window under AQE's coalescing floor"},
+    "q_chunk_fixed": {_SP: "global_index window under AQE's coalescing floor"},
     "q_unbatched": {"SinglePartition": "inverse of q_batched (same slice)"},
     "q_slice": {"SinglePartition": "explicit global offset slice (limit)"},
     "q_uniform_sample": {"SinglePartition": "global systematic sample over "

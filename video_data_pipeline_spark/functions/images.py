@@ -278,18 +278,17 @@ def encode_image(image: np.ndarray, format: str = "PNG") -> bytes:
 
 
 def resize_cap(image: np.ndarray, max_side: int = 1280) -> np.ndarray:
-    """The 1280-cap resize (tokenize/main.py:196-200): if the longer side
-    exceeds ``max_side``, scale down preserving aspect ratio.
-    Nearest-neighbor in pure numpy — a REAL kernel, no PIL."""
+    """The 1280-cap resize (tokenize/main.py:196-200): an image with any
+    side over ``max_side`` becomes exactly ``max_side`` × ``max_side``, as
+    the reference's ``image.resize((1280, 1280))`` does (no aspect ratio
+    kept); smaller images pass through. Nearest-neighbor in pure numpy — a
+    REAL kernel, no PIL."""
     image = np.asarray(image)
     h, w = image.shape[:2]
-    longest = max(h, w)
-    if longest <= max_side:
+    if max(h, w) <= max_side:
         return image
-    scale = max_side / longest
-    nh, nw = max(1, round(h * scale)), max(1, round(w * scale))
-    yi = np.minimum((np.arange(nh) / scale).astype(int), h - 1)
-    xi = np.minimum((np.arange(nw) / scale).astype(int), w - 1)
+    yi = np.arange(max_side) * h // max_side
+    xi = np.arange(max_side) * w // max_side
     return image[yi][:, xi]
 
 

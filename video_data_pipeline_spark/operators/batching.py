@@ -41,18 +41,38 @@ def _sql_literal(v, dtype) -> str | None:
     return None
 
 
+def _below_aqe_floor(df: DataFrame) -> bool:
+    """True when the optimizer's size estimate of ``df`` is at most the
+    session's AQE coalescing floor: the size below which AQE merges every
+    shuffle partition of ``df`` into one, so a bucketed plan would run as
+    a single task anyway (256k from ``get_spark``, Spark's 1MB in a vanilla
+    session). A driver-side estimate: no job runs."""
+    spark = df.sparkSession
+    floor = spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize")
+    jutils = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils
+    est = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return int(est) <= jutils.byteStringAsBytes(floor)
+
+
 def _global_index(
     df: DataFrame,
     order_by: list[str],
     idx_col: str,
-    num_partitions: int | None = None,
-) -> tuple[DataFrame, int]:
+    total_col: str | None = None,
+) -> DataFrame:
     """Shared kernel for :func:`global_index`/:func:`batched`: the scalable
     zipWithIndex — range-bucketed sort + per-bucket row_number + driver-known
-    bucket offsets. Returns the indexed DataFrame AND the total row count
-    (so ``partial=False`` callers don't pay a second action).
+    bucket offsets. With ``total_col`` the result also carries the total row
+    count as that column (so ``partial=False`` callers don't pay a second
+    action).
 
-    EXACTLY ONE driver action (one collect). That single job both samples
+    At most one driver action; none below the floor. When the input's size
+    estimate is at most AQE's coalescing floor (:func:`_below_aqe_floor`),
+    or there is only one bucket to use, the index is one single-partition
+    window with the total as ``count(*)`` over the same window: AQE would
+    coalesce the buckets back into one partition anyway, so their pre-pass
+    (a collect costing 5 Spark jobs) would buy nothing. Otherwise ONE
+    collect both samples
     boundaries and counts rows per bucket:
       stage 1 — a bounded deterministic distinct-key sample (min-by-hash
       winner per hash slot: uniform over distinct keys, <= cap keys
@@ -88,18 +108,21 @@ def _global_index(
     null -> 0), matching the window's nulls-first ascending sort. Boundary
     placement only affects parallelism, never the result."""
     spark = df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
+    n = spark.sparkContext.defaultParallelism
     # Cap the bucket count so the boundary comparison chain stays a short
     # codegen'd expression even on very wide clusters (ADVICE r3: per-row
     # work must not grow with parallelism). Buckets only bound the
     # parallelism of the per-bucket sort, never the result.
     n = max(1, min(int(n), 256))
+    if n == 1 or _below_aqe_floor(df):
+        w1 = Window.orderBy(*order_by)
+        cols = {idx_col: F.row_number().over(w1) - 1}
+        if total_col is not None:
+            whole = w1.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+            cols[total_col] = F.count(F.lit(1)).over(whole)
+        return df.withColumns(cols)
     first = order_by[0]
     dtype = df.schema[first].dataType
-    if n == 1:
-        total = df.count()
-        w1 = Window.orderBy(*order_by)
-        return df.withColumn(idx_col, F.row_number().over(w1) - 1), total
     cap = max(n * 20, 200)
     fq = f"`{first}`"
     # Wide expressions are built as ONE SQL string each: nested Column
@@ -160,19 +183,20 @@ def _global_index(
         bucketed.withColumn(idx_col, F.row_number().over(w) - 1 + off_lookup)
         .drop("__b__")
     )
-    return indexed, total
+    if total_col is not None:
+        indexed = indexed.withColumn(total_col, F.lit(total))
+    return indexed
 
 
-def global_index(order_by: list[str], idx_col: str = "__idx__", num_partitions: int | None = None):
+def global_index(order_by: list[str], idx_col: str = "__idx__"):
     """0-based global position under a total order, WITHOUT the
-    single-reducer global window: range-bucketed distributed sort, then
-    per-bucket row_number plus driver-known bucket offsets — the scalable
-    zipWithIndex pattern, at exactly one pre-action per call
-    (see :func:`_global_index`)."""
+    single-reducer global window above AQE's coalescing floor: range-bucketed
+    distributed sort, then per-bucket row_number plus driver-known bucket
+    offsets — the scalable zipWithIndex pattern, at most one pre-action per
+    call and none below the floor (see :func:`_global_index`)."""
 
     def _op(df: DataFrame) -> DataFrame:
-        indexed, _total = _global_index(df, order_by, idx_col, num_partitions)
-        return indexed
+        return _global_index(df, order_by, idx_col)
 
     return _op
 
@@ -182,17 +206,19 @@ def batched(order_by: list[str], n: int, partial: bool = True, batch_col: str = 
     total order (reference ``batched``, filters.py:497-528).
 
     ``partial=False`` drops the trailing incomplete batch (partial= flag)
-    using the total already known from the index pre-action — no extra
-    action. Built on :func:`global_index` — a distributed range sort, never
-    a single-partition global window. (Record-level output chunking in the
-    sink uses ``maxRecordsPerFile`` instead; see sinks/webdataset.py.)
+    using the total the index already knows — no extra action. Built on
+    :func:`global_index`: at most one pre-action, none below AQE's
+    coalescing floor, where the index is one single-partition window;
+    above it a distributed range sort. (Record-level output chunking in
+    the sink uses ``maxRecordsPerFile`` instead; see sinks/webdataset.py.)
     """
 
     def _op(df: DataFrame) -> DataFrame:
-        indexed, total = _global_index(df, order_by, idx_col="__idx__")
+        total = None if partial else "__total__"
+        indexed = _global_index(df, order_by, idx_col="__idx__", total_col=total)
         out = indexed.withColumn(batch_col, F.floor(F.col("__idx__") / n))
         if not partial:
-            out = out.filter((F.col(batch_col) + 1) * n <= F.lit(total))
+            out = out.filter((F.col(batch_col) + 1) * n <= F.col(total)).drop(total)
         return out.drop("__idx__")
 
     return _op
