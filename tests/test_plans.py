@@ -12,6 +12,7 @@ import json
 import re
 import tarfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from video_data_pipeline_spark.functions.text import (
@@ -71,7 +72,7 @@ def test_pack_uniform_frames(spark, sf_dir, tmp_path):
     # reference layout: one json sample per video + one jpg sample per frame
     assert sum(m.nsamples for m in manifest) == 50
     names, payloads = [], {}
-    for path in glob.glob(out + "/*.tar"):
+    for path in sorted(glob.glob(out + "/*.tar")):
         with tarfile.open(path) as tar:
             for n in tar.getnames():
                 names.append(n)
@@ -87,6 +88,52 @@ def test_pack_uniform_frames(spark, sf_dir, tmp_path):
     first = sorted(json_names)[0]
     base = first[:-5]
     assert payloads[first]["image_name_list"] == [f"{base}-{i}" for i in range(4)]
+    # tar order: each json member is followed by its own frames
+    for pos, name in enumerate(names):
+        if name.endswith(".json"):
+            frames = [f"{f}.jpg" for f in payloads[name]["image_name_list"]]
+            assert names[pos + 1 : pos + 5] == frames
+
+
+def test_pack_rejects_bad_arguments(spark, tmp_path):
+    """Bad pack arguments fail on the driver, before any plan is built
+    (n_frames=0 used to divide by zero inside a worker)."""
+    meta = spark.createDataFrame([("/nonexistent/a.mp4", "a")], "video_path string, value string")
+    with pytest.raises(ValueError, match="n_frames"):
+        pack_dataset(meta, str(tmp_path / "a"), sample_type="uniform", n_frames=0)
+    with pytest.raises(ValueError, match="sample_type"):
+        pack_dataset(meta, str(tmp_path / "b"), sample_type="keyframe")
+    assert not list(tmp_path.iterdir())
+
+
+def _final_plan(df) -> str:
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    return plan.toString()
+
+
+@pytest.mark.parametrize("sample_type", ["video_text_pair", "uniform"])
+def test_pack_is_one_python_pass(spark, tmp_path, sample_type):
+    """Pack fetches each video, samples its frames and writes the tars in
+    one Python pass: the executed plan holds one MapInPandas over one scan
+    of the caption table, for either sample type."""
+    src = str(tmp_path / "meta.parquet")
+    rows = [(f"/nonexistent/videos/{i:03d}.mp4", f"caption {i}") for i in range(6)]
+    spark.createDataFrame(rows, "video_path string, value string").write.parquet(src)
+    manifest = pack_dataset(
+        spark.read.parquet(src),
+        str(tmp_path / "packed"),
+        samples_per_shard=4,
+        sample_type=sample_type,
+        n_frames=2,
+        hermetic=True,
+    )
+    per_video = 1 if sample_type == "video_text_pair" else 3
+    assert sum(m.nsamples for m in manifest.collect()) == 6 * per_video
+    plan = _final_plan(manifest)
+    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("FileScan parquet") == 1, plan
 
 
 def test_pack_shards_hold_consecutive_keys(spark, tmp_path):

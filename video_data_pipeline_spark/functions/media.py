@@ -52,28 +52,13 @@ def uniform_frame_indices(total_frames: int, fps: float, n: int = 16) -> list[in
     ]
 
 
-def sample_frames_batch(
-    it: Iterator[pd.DataFrame],
-    video_col: str = "video",
-    n_frames: int = 16,
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: video bytes → arrays of (frame_idx, jpg bytes).
-
-    The Spark-side contract of ``uniformSampler`` (pack/samplers.py:102-119):
-    output columns ``frame_indices: array<int>``, ``frames: array<binary>``.
-    """
-    for pdf in it:
-        indices_col, frames_col = [], []
-        for data in pdf[video_col]:
-            data = bytes(data)
-            total, fps = fake_video_meta(data)
-            idx = uniform_frame_indices(total, fps, n_frames)
-            indices_col.append(idx)
-            frames_col.append([fake_decode_frame(data, i) for i in idx])
-        out = pdf.drop(columns=[video_col])
-        out["frame_indices"] = indices_col
-        out["frames"] = frames_col
-        yield out
+def uniform_frames(data: bytes, n_frames: int = 16) -> list[bytes]:
+    """``uniformSampler`` (pack/samplers.py:102-119) on one video: the jpg
+    bytes of its ``n_frames`` segment-midpoint frames, in frame order."""
+    total, fps = fake_video_meta(data)
+    return [
+        fake_decode_frame(data, i) for i in uniform_frame_indices(total, fps, n_frames)
+    ]
 
 
 #: schemes a *data-derived* path (a value read out of a dataset row) may

@@ -6,21 +6,26 @@ machines/processes by hand, then each worker fetches media, builds the
 conversation struct, and writes 500-sample tars.
 
 Spark shape: metadata is a DataFrame (never driver-materialized); striping
-/padding/joblib vanish into partitioning; media fetch + frame sampling are
-one Arrow-batched ``mapInPandas``; the sink is the rolling tar writer. The
+/padding/joblib vanish into partitioning. The JVM numbers the sample keys
+and renders each json member with ``to_json``; then ONE Arrow-batched
+``mapInPandas`` does what the reference's worker loop does: it fetches each
+video once, samples its frames for ``uniform``, and writes the video or
+frames straight into the sink's rolling tar loop
+(``sinks.webdataset.write_tars``). Media bytes never enter the JVM. The
 whole pipeline is lazy until the manifest is acted on.
 """
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from video_data_pipeline_spark.functions.media import fetch_media, sample_frames_batch
-from video_data_pipeline_spark.sinks.webdataset import write_webdataset
+from video_data_pipeline_spark.functions.media import fetch_media, uniform_frames
+from video_data_pipeline_spark.sinks.webdataset import MANIFEST_SCHEMA, write_tars
 
 
 def build_conversations(meta: DataFrame, value_col: str = "value") -> DataFrame:
@@ -31,21 +36,6 @@ def build_conversations(meta: DataFrame, value_col: str = "value") -> DataFrame:
         F.struct(F.lit("gpt").alias("from"), F.col(value_col).alias("value")),
     )
     return meta.withColumn("conversations", conv)
-
-
-def _fetch_batch(
-    it: Iterator[pd.DataFrame], hermetic: bool = False
-) -> Iterator[pd.DataFrame]:
-    """Media fetch with ``process_videos``→``videos`` path fallback
-    (pack/dataset.py:65-80 coalesce-over-two-probes)."""
-    for pdf in it:
-        fallback = pdf["video_fallback"] if "video_fallback" in pdf else [None] * len(pdf)
-        pdf = pdf.copy()
-        pdf["video"] = [
-            fetch_media(p, q, hermetic=hermetic)
-            for p, q in zip(pdf["video_path"], fallback)
-        ]
-        yield pdf
 
 
 def pack_dataset(
@@ -67,6 +57,10 @@ def pack_dataset(
     deterministic stand-in bytes (offline tests); in production a bad path
     fails the task, matching the reference's FileNotFoundError.
     """
+    if sample_type not in ("video_text_pair", "uniform"):
+        raise ValueError(f"unknown sample_type {sample_type!r}")
+    if n_frames < 1:
+        raise ValueError(f"n_frames must be at least 1, got {n_frames}")
     from video_data_pipeline_spark.session import ensure_shipped
 
     ensure_shipped(meta.sparkSession)
@@ -79,73 +73,45 @@ def pack_dataset(
 
     keyed = meta.transform(global_index(["video_path"], idx_col="__idx__")).withColumn(
         "__key__", F.format_string("%09d", F.col("__idx__"))
-    ).drop("__idx__")
-
-    fetch_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in keyed.schema.fields
     )
-    with_video = keyed.mapInPandas(
-        lambda it: _fetch_batch(it, hermetic=hermetic),
-        schema=f"{fetch_schema}, video binary",
+    fields = [F.col("conversations"), F.array(F.col("video_path")).alias("videos")]
+    uniform = sample_type == "uniform"
+    if uniform:
+        # reference layout (pack/pack.py:214-224 + samplers.py:112-117): the
+        # json sample keyed {idx:09d} names its frames, each a SEPARATE jpg
+        # sample keyed {idx:09d}-{i}, so standard to_dict('jpg;png;jpeg')
+        # pipelines decode each frame. uniform_frames yields n_frames frames.
+        fields.append(
+            F.transform(
+                F.sequence(F.lit(0), F.lit(n_frames - 1)),
+                lambda i: F.concat(F.col("__key__"), F.lit("-"), i.cast("string")),
+            ).alias("image_name_list")
+        )
+    fallback = F.col("video_fallback") if "video_fallback" in keyed.columns else F.lit(None)
+    rows = keyed.select(
+        "__key__",
+        "video_path",
+        fallback.cast("string").alias("video_fallback"),
+        F.to_json(F.struct(*fields)).cast("binary").alias("json"),
     )
 
-    json_payload = F.to_json(
-        F.struct(
-            F.col("conversations"),
-            F.array(F.col("video_path")).alias("videos"),
-        )
-    )
+    def samples(it: Iterator[pd.DataFrame]):
+        """Fetch each video once (``process_videos``→``videos`` fallback,
+        pack/dataset.py:65-80) and emit its samples in tar order."""
+        for pdf in it:
+            for key, path, fb, js in zip(
+                pdf["__key__"], pdf["video_path"], pdf["video_fallback"], pdf["json"]
+            ):
+                video = fetch_media(path, fb, hermetic=hermetic)
+                if not uniform:
+                    yield key, [("json", js), ("mp4", video)]
+                    continue
+                yield key, [("json", js)]
+                for i, frame in enumerate(uniform_frames(video, n_frames)):
+                    yield f"{key}-{i}", [("jpg", frame)]
 
-    if sample_type == "video_text_pair":
-        samples = with_video.select(
-            "__key__",
-            F.create_map(
-                F.lit("json"), json_payload.cast("binary"),
-                F.lit("mp4"), F.col("video"),
-            ).alias("sample"),
-        )
-    elif sample_type == "uniform":
-        frame_schema = (
-            ", ".join(
-                f"`{f.name}` {f.dataType.simpleString()}"
-                for f in with_video.schema.fields
-                if f.name != "video"
-            )
-            + ", frame_indices array<int>, frames array<binary>"
-        )
-        sampled = with_video.mapInPandas(
-            lambda it: sample_frames_batch(it, n_frames=n_frames), schema=frame_schema
-        )
-        # reference layout (pack/pack.py:214-224 + samplers.py:112-117): one
-        # json sample keyed {idx:09d} carrying image_name_list, plus one
-        # SEPARATE sample per frame keyed {idx:09d}-{i} with suffix `jpg` —
-        # standard to_dict('jpg;png;jpeg') pipelines then decode each frame.
-        image_names = F.transform(
-            F.sequence(F.lit(0), F.size("frames") - 1),
-            lambda i: F.concat(F.col("__key__"), F.lit("-"), i.cast("string")),
-        )
-        uniform_json = F.to_json(
-            F.struct(
-                F.col("conversations"),
-                F.array(F.col("video_path")).alias("videos"),
-                image_names.alias("image_name_list"),
-            )
-        )
-        json_samples = sampled.select(
-            "__key__",
-            F.create_map(F.lit("json"), uniform_json.cast("binary")).alias("sample"),
-        )
-        frame_samples = sampled.select(
-            F.col("__key__").alias("__base__"),
-            F.posexplode("frames").alias("pos", "frame"),
-        ).select(
-            F.concat(F.col("__base__"), F.lit("-"), F.col("pos").cast("string")).alias(
-                "__key__"
-            ),
-            F.create_map(F.lit("jpg"), F.col("frame")).alias("sample"),
-        )
-        samples = json_samples.unionByName(frame_samples)
-    else:
-        raise ValueError(f"unknown sample_type {sample_type!r}")
+    def pack_partition(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        yield write_tars(samples(it), out_path, maxcount=samples_per_shard)
 
-    return write_webdataset(samples, out_path, maxcount=samples_per_shard)
+    os.makedirs(out_path, exist_ok=True)
+    return rows.mapInPandas(pack_partition, schema=MANIFEST_SCHEMA)

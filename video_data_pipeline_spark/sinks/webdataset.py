@@ -20,6 +20,11 @@ Scale design: one writer task per input partition, no driver involvement;
 on upstream partitioning. Filenames are ``{prefix}-{partition:05d}-{seq:05d}.tar``
 — partition-unique, so speculative/retried tasks overwrite idempotently
 rather than duplicate.
+
+The rolling loop is one function, :func:`write_tars`, over a task's ordered
+``(key, [(suffix, bytes)])`` samples. :func:`write_webdataset` feeds it the
+rows of a DataFrame; ``plans.pack`` feeds it media fetched in the same
+Python task, so packed media bytes never enter the JVM.
 """
 
 from __future__ import annotations
@@ -28,7 +33,7 @@ import io
 import json
 import os
 import tarfile
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -87,6 +92,73 @@ def _encode(suffix: str, value) -> bytes:
     raise ValueError(f"no encoder for suffix {suffix!r} / type {type(value).__name__}")
 
 
+#: the writer manifest's schema, one row per tar written
+MANIFEST_SCHEMA = "url string, nsamples long, nbytes long"
+
+
+def write_tars(
+    samples: Iterable[tuple[str, Iterable[tuple[str, bytes]]]],
+    path: str,
+    prefix: str = "shard",
+    maxcount: int = 500,
+    maxsize: int = 3_000_000_000,
+    mtime: int = 0,
+    compress: bool = False,
+) -> pd.DataFrame:
+    """The rolling tar loop of one Spark task (``ShardWriter``,
+    writer.py:236-449): write ordered ``(key, [(suffix, bytes)])`` samples
+    as members ``{key}.{suffix}``, starting a new tar before a sample once
+    the open one holds ``maxcount`` samples or ``maxsize`` bytes. Tars are
+    named ``{prefix}-{partition:05d}-{seq:05d}`` after the task's partition.
+    Returns the task's manifest rows (``MANIFEST_SCHEMA``)."""
+    from pyspark import TaskContext
+
+    pid = TaskContext.get().partitionId()
+    ext = "tgz" if compress else "tar"
+    manifest: list[tuple[str, int, int]] = []
+    tar = buf = url = None
+    count = size = 0
+
+    def flush():
+        tar.close()
+        raw = buf.getvalue()
+        if compress:
+            # gzip with mtime=0 — tarfile's w:gz stamps wall-clock time
+            # into the gzip header, which would break byte-determinism
+            # (TarWriter .tgz support, writer.py:281 compress=)
+            import gzip
+
+            gz = io.BytesIO()
+            with gzip.GzipFile(fileobj=gz, mode="wb", mtime=0) as zf:
+                zf.write(raw)
+            raw = gz.getvalue()
+        with open(url, "wb") as fh:
+            fh.write(raw)
+        manifest.append((url, count, len(raw)))
+
+    for key, items in samples:
+        if tar is not None and (count >= maxcount or size >= maxsize):
+            flush()
+            tar = None
+        if tar is None:
+            url = os.path.join(path, f"{prefix}-{pid:05d}-{len(manifest):05d}.{ext}")
+            buf = io.BytesIO()
+            tar = tarfile.open(fileobj=buf, mode="w")
+            count = size = 0
+        for suffix, payload in items:
+            info = tarfile.TarInfo(name=f"{key}.{suffix}")
+            info.size = len(payload)
+            info.mtime = mtime
+            info.uid = info.gid = 0
+            info.uname = info.gname = ""
+            tar.addfile(info, io.BytesIO(payload))
+            size += len(payload)
+        count += 1
+    if tar is not None:
+        flush()
+    return pd.DataFrame(manifest, columns=["url", "nsamples", "nbytes"])
+
+
 def write_webdataset(
     df: DataFrame,
     path: str,
@@ -114,76 +186,21 @@ def write_webdataset(
     member_cols = [c for c in columns if c not in (key_col,) and not c.startswith("__")]
 
     def _write_partition(iterator: Iterator[pd.DataFrame]):
-        from pyspark import TaskContext
+        def samples():
+            for pdf in iterator:
+                for row in pdf.itertuples(index=False):
+                    rowd = dict(zip(pdf.columns, row))
+                    if sample_col is not None:
+                        sample = rowd[sample_col]
+                        items = sample.items() if isinstance(sample, dict) else sample
+                    else:
+                        items = [
+                            (c, _encode(c, rowd[c]))
+                            for c in member_cols
+                            if rowd[c] is not None
+                        ]
+                    yield rowd[key_col], items
 
-        pid = TaskContext.get().partitionId()
-        seq = 0
-        tar: tarfile.TarFile | None = None
-        buf: io.BytesIO | None = None
-        url = None
-        count = size = 0
-        manifest: list[tuple[str, int, int]] = []
+        yield write_tars(samples(), path, prefix, maxcount, maxsize, mtime, compress)
 
-        def flush():
-            nonlocal tar, buf, url, count, size
-            if tar is None:
-                return
-            tar.close()
-            raw = buf.getvalue()
-            if compress:
-                # gzip with mtime=0 — tarfile's w:gz stamps wall-clock time
-                # into the gzip header, which would break byte-determinism
-                # (TarWriter .tgz support, writer.py:281 compress=)
-                import gzip
-
-                gz = io.BytesIO()
-                with gzip.GzipFile(fileobj=gz, mode="wb", mtime=0) as zf:
-                    zf.write(raw)
-                raw = gz.getvalue()
-            with open(url, "wb") as fh:
-                fh.write(raw)
-            manifest.append((url, count, len(raw)))
-            tar = buf = url = None
-            count = size = 0
-
-        def ensure_open():
-            nonlocal tar, buf, url, seq
-            if tar is None:
-                ext = "tgz" if compress else "tar"
-                url = os.path.join(path, f"{prefix}-{pid:05d}-{seq:05d}.{ext}")
-                seq += 1
-                buf = io.BytesIO()
-                tar = tarfile.open(fileobj=buf, mode="w")
-
-        def add(name: str, payload: bytes):
-            nonlocal size
-            info = tarfile.TarInfo(name=name)
-            info.size = len(payload)
-            info.mtime = mtime
-            info.uid = info.gid = 0
-            info.uname = info.gname = ""
-            tar.addfile(info, io.BytesIO(payload))
-            size += len(payload)
-
-        for pdf in iterator:
-            for row in pdf.itertuples(index=False):
-                rowd = dict(zip(pdf.columns, row))
-                if count >= maxcount or size >= maxsize:
-                    flush()
-                ensure_open()
-                key = rowd[key_col]
-                if sample_col is not None:
-                    sample = rowd[sample_col]
-                    items = sample.items() if isinstance(sample, dict) else sample
-                    for suffix, payload in items:
-                        add(f"{key}.{suffix}", bytes(payload))
-                else:
-                    for c in member_cols:
-                        if rowd[c] is None:
-                            continue
-                        add(f"{key}.{c}", _encode(c, rowd[c]))
-                count += 1
-        flush()
-        yield pd.DataFrame(manifest, columns=["url", "nsamples", "nbytes"])
-
-    return df.mapInPandas(_write_partition, schema="url string, nsamples long, nbytes long")
+    return df.mapInPandas(_write_partition, schema=MANIFEST_SCHEMA)

@@ -7,7 +7,8 @@ shard scan's per-shard read function (tar and CBOR;
 task, so each *executor* opens its own shards directly against the
 object store — the driver never proxies bytes. Handlers must be
 constructible inside Python worker processes (no driver-process state):
-s3 clients are built lazily per-process from env/arguments.
+s3 clients are built lazily per-process from env/arguments, once per
+endpoint, region and explicit keys.
 
 Supported out of the box:
 
@@ -215,26 +216,41 @@ class _S3Upload(io.BytesIO):
         super().close()
 
 
+#: boto3 clients of this process, keyed on (endpoint, region, explicit
+#: keys). Every s3:// media fetch and shard open asks for one, and building
+#: one walks boto3's credential chain: with no credentials configured that
+#: ends in the instance-metadata probe, which waits out its timeouts.
+_S3_CLIENTS: dict[tuple, object] = {}
+
+
 def _s3_client(
     endpoint_url: str | None = None,
     access_key_id: str | None = None,
     secret_access_key: str | None = None,
 ):
-    import boto3  # lazy: built per worker process, never pickled
-
-    return boto3.client(
-        "s3",
-        endpoint_url=endpoint_url
+    endpoint_url = (
+        endpoint_url
         or os.environ.get("AWS_ENDPOINT_URL_S3")
         or os.environ.get("AWS_ENDPOINT_URL")
-        or None,
-        # explicit keys are the dev/S3-compatible path (MinIO, moto); in
-        # production leave None and boto3 resolves instance role / env /
-        # config chain as usual
-        aws_access_key_id=access_key_id,
-        aws_secret_access_key=secret_access_key,
-        region_name=os.environ.get("AWS_DEFAULT_REGION", "us-east-1"),
+        or None
     )
+    region = os.environ.get("AWS_DEFAULT_REGION", "us-east-1")
+    key = (endpoint_url, region, access_key_id, secret_access_key)
+    client = _S3_CLIENTS.get(key)
+    if client is None:
+        import boto3  # lazy: built per worker process, never pickled
+
+        client = _S3_CLIENTS[key] = boto3.client(
+            "s3",
+            endpoint_url=endpoint_url,
+            # explicit keys are the dev/S3-compatible path (MinIO, moto); in
+            # production leave None and boto3 resolves instance role / env /
+            # config chain as usual
+            aws_access_key_id=access_key_id,
+            aws_secret_access_key=secret_access_key,
+            region_name=region,
+        )
+    return client
 
 
 def _gopen_file(url: str, mode: str, **kw):

@@ -62,7 +62,7 @@ SAMPLE_SCHEMA = StructType(
     ]
 )
 
-#: file names a directory contributes as shards, in batch and stream reads
+#: file names a directory contributes as shards
 _SHARD_GLOBS = ("*.tar", "*.tgz", "*.tar.gz")
 
 _META_RE = re.compile(r"^__[a-z0-9_]+__($|/)")
