@@ -8,7 +8,9 @@ deterministic fakes from functions.media.
 from __future__ import annotations
 
 import glob
+import io
 import json
+import os
 import re
 import tarfile
 
@@ -26,6 +28,7 @@ from video_data_pipeline_spark.functions.text import (
     tokenize_text,
 )
 from video_data_pipeline_spark.operators.packing import greedy_bin_pack
+from video_data_pipeline_spark.plans import index as index_plan
 from video_data_pipeline_spark.plans.index import index_shards, sample_index
 from video_data_pipeline_spark.plans.pack import pack_dataset
 from video_data_pipeline_spark.plans.tokenize import tokenize_shards
@@ -308,8 +311,10 @@ def test_index_catches_violations(spark, tmp_path):
     assert {k: v for k, v in expected.items() if v is not None} == got
     assert len(got) == 7
     assert index.collect()[0].nsamples == len(samples) - len(got)
-    plan = violations._jdf.queryExecution().executedPlan().toString()
+    plan = _executed_plan(index_plan._checked_samples(spark, bad))
     assert plan.count("MapInPandas") == 1 and "EvalPython" not in plan  # scan only
+    plan = _executed_plan(violations)
+    assert "MapInPandas" not in plan and "EvalPython" not in plan
 
     sizes = {r.key: (r.n_tokens, r.n_images) for r in sample_index(spark, bad).collect()}
     assert sizes == {
@@ -317,6 +322,140 @@ def test_index_catches_violations(spark, tmp_path):
         keys["7999 tokens"]: (7999, 0),
         keys["one image"]: (258, 1),
     }
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _write_token_tar(path: str, records: dict[str, dict]) -> None:
+    """One tokenized shard: a ``<key>.json`` member per record."""
+    with tarfile.open(path, "w") as tar:
+        for key, rec in records.items():
+            data = json.dumps(rec).encode()
+            info = tarfile.TarInfo(f"{key}.json")
+            info.size = len(data)
+            tar.addfile(info, io.BytesIO(data))
+
+
+def _token_records(n_valid: int, n_bad: int, tag: str) -> dict[str, dict]:
+    good = {"input_ids": [1, 5, 6], "loss_mask": [0, 0, 1]}
+    bad = {"input_ids": [1, 5, 6], "loss_mask": [0, 1]}
+    recs = {f"{tag}v{i:03d}": good for i in range(n_valid)}
+    recs.update({f"{tag}b{i:03d}": bad for i in range(n_bad)})
+    return recs
+
+
+def _index_rows(spark, paths) -> dict:
+    index, violations, _ = index_shards(spark, paths)
+    return {
+        "index": sorted(map(tuple, index.collect())),
+        "violations": sorted(map(tuple, violations.collect())),
+        "sample": sorted(map(tuple, sample_index(spark, paths).collect())),
+    }
+
+
+def test_index_op_scans_the_tars_once(spark, tmp_path):
+    """Over unchanged tars, index, violations and sample_index read the one
+    checkpointed check (no Python in their plans) and return the rows of
+    an uncached check."""
+    tars = tmp_path / "tok"
+    tars.mkdir()
+    for i in range(2):
+        _write_token_tar(str(tars / f"shard-{i:06d}.tar"), _token_records(3 + i, 1 + i, f"s{i}"))
+    index, violations, _ = index_shards(spark, str(tars))
+    frames = [index, violations, sample_index(spark, str(tars))]
+    for df in frames:
+        assert "MapInPandas" not in _executed_plan(df)
+
+    checked = index_plan._checked_samples(spark, str(tars))
+    valid = checked.where("violation IS NULL")
+    expected = {
+        "index": sorted(map(tuple, valid.groupBy("__url__").count().collect())),
+        "violations": sorted(
+            map(tuple, checked.where("violation IS NOT NULL")
+                .select("__key__", "__url__", "violation").collect())
+        ),
+        "sample": sorted(
+            map(tuple, valid.select("__key__", "__url__", "n_tokens", "n_images").collect())
+        ),
+    }
+    got = {k: sorted(map(tuple, df.collect())) for k, df in zip(expected, frames)}
+    assert got == expected
+    assert len(expected["sample"]) == 7 and len(expected["violations"]) == 3
+
+
+def test_index_reads_afresh_after_a_rewrite(spark, tmp_path):
+    """A shard rewritten in place, or another tar dir, is never served from
+    the memo, and the memo holds at most one entry."""
+    a, b = tmp_path / "a", tmp_path / "b"
+    a.mkdir()
+    b.mkdir()
+    shard = str(a / "shard-000000.tar")
+    _write_token_tar(shard, _token_records(2, 1, "old"))
+    _write_token_tar(str(b / "shard-000000.tar"), _token_records(4, 0, "b"))
+    before = _index_rows(spark, str(a))
+    assert [r[1] for r in before["index"]] == [2] and len(before["violations"]) == 1
+
+    _write_token_tar(shard, _token_records(5, 3, "new"))
+    after = _index_rows(spark, str(a))
+    assert [r[1] for r in after["index"]] == [5]
+    assert {r[0] for r in after["violations"]} == {f"newb{i:03d}" for i in range(3)}
+    assert {r[0] for r in after["sample"]} == {f"newv{i:03d}" for i in range(5)}
+
+    in_b = _index_rows(spark, str(b))
+    assert [r[1] for r in in_b["index"]] == [4] and not in_b["violations"]
+    assert len(index_plan._CHECKED) == 1
+    assert _index_rows(spark, str(a)) == after
+    assert len(index_plan._CHECKED) == 1
+
+
+@pytest.mark.parametrize(
+    "spec",
+    ["s3://bucket/tok/shard-000000.tar", "https://host/tok/shard-{000000..000001}.tar",
+     "http://host/shard.tar", "pipe:cat /data/shard.tar"],
+)
+def test_remote_shard_specs_get_no_memo_key(spec, monkeypatch, tmp_path):
+    """A remote shard, alone or next to a local one, yields no memo key and
+    is never statted."""
+    local = tmp_path / "shard.tar"
+    local.write_bytes(b"")
+    assert index_plan._shard_key([str(local), spec]) is None
+
+    def no_stat(*args, **kwargs):
+        raise AssertionError(f"stat of {args[0]!r}")
+
+    monkeypatch.setattr(os, "stat", no_stat)
+    assert index_plan._shard_key(spec) is None
+
+
+def test_local_shard_key_follows_every_shards_stat(tmp_path):
+    shards = [tmp_path / f"shard-{i}.tar" for i in range(2)]
+    for s in shards:
+        s.write_bytes(b"x")
+    key = index_plan._shard_key(str(tmp_path))
+    assert [k[:2] for k in key] == [(str(s), os.path.realpath(s)) for s in shards]
+    shards[1].write_bytes(b"xy")
+    assert index_plan._shard_key(str(tmp_path)) != key
+    assert index_plan._shard_key(str(tmp_path / "missing.tar")) is None
+
+
+def test_index_urls_keep_each_calls_spelling(spark, tmp_path):
+    """The same tars named another way (a symlinked dir, a ``./`` step) are
+    not served from the memo: every frame's urls carry its own call's
+    spelling of the shard paths."""
+    tok = tmp_path / "tok"
+    tok.mkdir()
+    _write_token_tar(str(tok / "shard-000000.tar"), _token_records(2, 1, "s"))
+    link = tmp_path / "link"
+    link.symlink_to(tok, target_is_directory=True)
+    for spelling in (str(tok), str(link), f"{tmp_path}/./tok", str(tok)):
+        rows = _index_rows(spark, spelling)
+        url = os.path.join(spelling, "shard-000000.tar")
+        assert [r[0] for r in rows["index"]] == [url]
+        assert {r[1] for r in rows["violations"]} == {url}
+        assert {r[1] for r in rows["sample"]} == {url}
+    assert len(index_plan._CHECKED) == 1
 
 
 def test_sample_index_end_to_end_with_zorder_sink(spark, sf_dir, tmp_path):
