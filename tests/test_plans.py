@@ -31,7 +31,7 @@ from video_data_pipeline_spark.operators.packing import greedy_bin_pack
 from video_data_pipeline_spark.plans import index as index_plan
 from video_data_pipeline_spark.plans.index import index_shards, sample_index
 from video_data_pipeline_spark.plans.pack import pack_dataset
-from video_data_pipeline_spark.plans.tokenize import tokenize_shards
+from video_data_pipeline_spark.plans.tokenize import render_json, tokenize_shards
 from video_data_pipeline_spark.sinks.webdataset import write_webdataset
 from video_data_pipeline_spark.sources.webdataset import read_webdataset
 
@@ -192,6 +192,21 @@ def _model_bins(docs: list[tuple[str, str]], budget: int):
     return bins[:-1], bins[-1]
 
 
+def test_render_json_matches_spark_to_json(spark):
+    """tokenize renders each bin's json member in Python: its bytes are
+    those of the ``to_json`` projection it replaces, escapes included."""
+    texts = [chr(c) for c in range(0x80)] + ['"', "\\", "/", "\u2028", "\u2029", "\ufffd"]
+    texts += ["\U0001f600", "", "".join(texts) + "naïve 日本 \U0001f600"]
+    arrays = [[-(2**31), 2**31 - 1, 0, 1], [], [32002]]
+    rows = [(arrays[i % 3], arrays[(i + 1) % 3], t) for i, t in enumerate(texts)]
+    df = spark.createDataFrame(rows, "input_ids array<int>, loss_mask array<int>, text string")
+    spark_json = F.to_json(F.struct("input_ids", "loss_mask", "text")).cast("binary")
+    got = df.select("*", spark_json.alias("json")).collect()
+    assert len(got) == len(texts)
+    for r in got:
+        assert render_json(r.input_ids, r.loss_mask, r.text) == bytes(r.json), repr(r.text)
+
+
 def test_tokenize_and_index_roundtrip(spark, sf_dir, tmp_path):
     budget = 600
     texts = [
@@ -202,6 +217,8 @@ def test_tokenize_and_index_roundtrip(spark, sf_dir, tmp_path):
         .collect()
     ]
     texts[15] = " ".join(["long"] * budget)  # over budget: skipped, never packed
+    # escapes, checked through json.loads here and index's from_json below
+    texts[22] += ' ctl\x00\x01\x0b\x1f\x7f "quoted" back\\slash naïve 日本 😀 \u2028'
     shards = [[(f"{i:09d}", texts[i]) for i in range(s, s + 10)] for s in range(0, 40, 10)]
     src = str(tmp_path / "src")
     rows = [(k, {"txt": t.encode()}) for shard in shards for k, t in shard]
@@ -215,6 +232,7 @@ def test_tokenize_and_index_roundtrip(spark, sf_dir, tmp_path):
     manifest = manifest_df.collect()
     plan = manifest_df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan  # shard-local: no shuffle anywhere
+    assert plan.count("MapInPandas") == 1  # render and write in the pass that packs
 
     # every record: members of ONE input shard in member order; one output
     # tar per input shard with bins; each shard's open bin dropped
@@ -237,6 +255,7 @@ def test_tokenize_and_index_roundtrip(spark, sf_dir, tmp_path):
         ]
         assert m.nsamples == len(got[shard_idx])
     assert got == expected
+    assert any(texts[22] in r[3] for recs in got.values() for r in recs)
     assert "000000015" not in {k for recs in got.values() for k, *_ in recs}
     n_bins = sum(len(v) for v in expected.values())
     assert n_bins > 0 and dropped_open > 0

@@ -11,10 +11,12 @@ tools/scale_up.py output; falls back to sf0.1 if /tmp/sf1 is absent).
 Usage:
     python tools/bench_e2e.py [--sf-dir /tmp/sf1] [--out BENCH_E2E_r6.json]
 
-Prints one JSON line per stage plus a final summary object written to
---out. Media fetch runs hermetic (no object store in this container); the
-tokenizer is the default hash tokenizer — both deterministic, so runs are
-comparable across rounds.
+Prints one JSON line per stage (with its Spark job, stage and task
+counts) plus a final summary object written to --out; exits 1 if a
+session warning fired or tokenize kept no sample. Media fetch runs
+hermetic (no object store in this container); the tokenizer is the
+default hash tokenizer — both deterministic, so runs are comparable
+across rounds.
 """
 
 from __future__ import annotations
@@ -75,6 +77,9 @@ def main() -> int:
     docs = spark.read.parquet(f"{args.sf_dir}/documents.parquet")
     n_docs = docs.count()
     stages: dict[str, dict] = {}
+    # each stage runs under a job group of its name, as in
+    # tools/perf_probe.py, so record() can count the stage's Spark jobs
+    sc = spark.sparkContext
 
     def record(
         stage: str,
@@ -87,6 +92,7 @@ def main() -> int:
             "sec": round(secs, 2),
             "samples": samples,
             "samples_per_sec": round(samples / secs, 1),
+            "n_jobs": len(sc.statusTracker().getJobIdsForGroup(stage)),
         }
         if nbytes is not None:
             row["bytes"] = nbytes
@@ -110,6 +116,7 @@ def main() -> int:
         F.col("text").alias("value"),
     )
     pack_out = f"{args.work_dir}/pack"
+    sc.setJobGroup("pack", "pack")
     t0 = time.time()
     with StageMetricsDelta(spark) as pm:
         pack_manifest = pack_dataset(
@@ -120,7 +127,10 @@ def main() -> int:
     record("pack", pack_secs, pack_samples, dir_bytes(pack_out), pm)
 
     # ---- stage 2: a text corpus for tokenize (one txt member per doc,
-    # multi-shard) — built OUTSIDE the timed window
+    # --samples-per-shard docs per shard in doc_id order, as pack lays
+    # them out) — built OUTSIDE the timed window. Tokenize drops each
+    # shard's open bin, so shards too small to close an 8k-token bin
+    # would leave it nothing to write.
     from video_data_pipeline_spark.sinks.webdataset import write_webdataset
 
     src = f"{args.work_dir}/txt_src"
@@ -128,12 +138,16 @@ def main() -> int:
         F.format_string("%09d", "doc_id").alias("__key__"),
         F.create_map(F.lit("txt"), F.col("text").cast("binary")).alias("sample"),
     )
-    write_webdataset(txt.repartition(32), src, maxcount=args.samples_per_shard).collect()
+    sc.setJobGroup("txt_src", "txt_src")
+    write_webdataset(
+        txt.coalesce(1).sortWithinPartitions("__key__"), src, maxcount=args.samples_per_shard
+    ).collect()
     src_bytes = dir_bytes(src)
     n_shards = len([f for f in os.listdir(src) if f.endswith(".tar")])
 
     # ---- stage 3: raw tar-source scan throughput (bytes of every member
     # stream through the shard scan; count is the action)
+    sc.setJobGroup("tar_scan", "tar_scan")
     t0 = time.time()
     with StageMetricsDelta(spark) as sm:
         n_members = read_webdataset(spark, src).count()
@@ -142,6 +156,7 @@ def main() -> int:
 
     # ---- stage 4: tokenize + 8k-pack (tokenize/main.py analog)
     tok_out = f"{args.work_dir}/tok"
+    sc.setJobGroup("tokenize", "tokenize")
     t0 = time.time()
     with StageMetricsDelta(spark) as tm:
         tok_manifest = tokenize_shards(spark, src, tok_out).collect()
@@ -150,6 +165,7 @@ def main() -> int:
     record("tokenize", tok_secs, tok_samples, dir_bytes(tok_out), tm)
 
     # ---- stage 5: index + per-sample metadata (index/check_pair.py analog)
+    sc.setJobGroup("index", "index")
     t0 = time.time()
     with StageMetricsDelta(spark) as im:
         index, violations, _golden = index_shards(spark, tok_out)
@@ -197,6 +213,12 @@ def main() -> int:
         )
         for w in warnings_seen:
             print(f"  - {w}", file=sys.stderr)
+        return 1
+    if tok_samples == 0:
+        print(
+            f"E2E: tokenize kept 0 samples from {n_shards} source shards, so the "
+            "tokenize and index stages timed an empty output", file=sys.stderr
+        )
         return 1
     return 0
 

@@ -256,8 +256,8 @@ FROM flushed GROUP BY source, bin_id
 def q_pack_merge(spark, sf_dir):
     """The packed-record merge (tokenize/main.py:73-85 ``save_to_tar``):
     after bin assignment, collapse each bin to one merged sample (counts +
-    concatenated sizes; in plans/tokenize.py the same groupBy flattens
-    input_ids with BOS dedup)."""
+    concatenated sizes; plans/tokenize.py merges each bin's input_ids with
+    BOS dedup as the bin closes)."""
     d = table(spark, sf_dir, "documents").select("source", "doc_id", "n_chars")
     packed = d.transform(
         greedy_bin_pack(

@@ -65,8 +65,8 @@ def q_hash_tokenize(spark, sf_dir):
     """Deterministic hash tokenizer: word → stable 60-bit md5 hash mod vocab.
 
     Stands in for the SentencePiece encode step (tokenize/tokenizer.py:
-    651-673) with an engine-portable id assignment; the real SP model runs
-    as a pandas_udf in plans/tokenize.py. Array built and aggregated fully
+    651-673) with an engine-portable id assignment; plans/tokenize.py runs
+    the tokenizer in its per-shard pass. Array built and aggregated fully
     JVM-side (transform + aggregate)."""
     d = table(spark, sf_dir, "documents")
     ids = F.expr(

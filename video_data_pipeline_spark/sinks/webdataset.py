@@ -23,8 +23,8 @@ rather than duplicate.
 
 The rolling loop is one function, :func:`write_tars`, over a task's ordered
 ``(key, [(suffix, bytes)])`` samples. :func:`write_webdataset` feeds it the
-rows of a DataFrame; ``plans.pack`` feeds it media fetched in the same
-Python task, so packed media bytes never enter the JVM.
+rows of a DataFrame; ``plans.pack`` (media it fetched) and ``plans.tokenize``
+(bins it packed) feed it from their own Python task, bytes never in the JVM.
 """
 
 from __future__ import annotations
